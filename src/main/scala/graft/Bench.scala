@@ -16,7 +16,7 @@ object Bench {
     // constants in both modes (QueryModeSpec).
     System.setProperty("graft.bench.skipInQueryOracles", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     // Host quiescence sampled BEFORE the JVM does any work: loadavg_start
     // below is read after the warmup pass, so it includes the bench's own
     // 32-thread self-load even on an idle machine (measured: prelaunch
@@ -36,7 +36,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warmup pass at the smallest SF: JIT + whole-stage-codegen compile +
     // Hadoop/parquet init, so timed numbers measure the queries, not the
-    // JVM. Failures here are ignored (reported by the timed pass).
+    // JVM. A failure here is logged to stderr and otherwise left to the
+    // timed pass, which reports it.
     val warmDir = "/root/testdata/sf0.001"
     // Cache + GC hygiene between queries: operators persist intermediate
     // frames (signatures, banded buckets) — without clearing, a query's
@@ -67,7 +68,8 @@ object Bench {
       benchNames.foreach { name =>
         val t0 = System.nanoTime()
         try SparkEntry.queries(name)(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] warmup $name failed (continuing): $e") }
         trace("warmup", name, (System.nanoTime() - t0) / 1e9)
         resetBetweenQueries()
       }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 object CcProfile {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(3000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.cpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.enabled", sys.env.getOrElse("CC_COALESCE", "true"))
       .getOrCreate()

@@ -18,8 +18,8 @@ object DeltaScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.cpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

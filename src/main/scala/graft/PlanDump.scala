@@ -20,7 +20,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else "before"
     System.setProperty("graft.bench.skipInQueryOracles", "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SparkEntry.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

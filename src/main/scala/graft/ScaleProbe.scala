@@ -14,8 +14,8 @@ object ScaleProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.drop(1).headOption.map(_.split(",").toSet)
     // core count from the same env the bench honors, so probes can
-    // produce 32-vs-8 scaling pairs (default unchanged)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // produce 32-vs-8 scaling pairs
+    val cpus = SparkEntry.cpus
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()

@@ -31,4 +31,9 @@ object SparkEntry {
     * across rounds. Bench clears the SQL cache between queries so one
     * query's persisted frames can't inflate the next. */
   def benchQueries: Seq[String] = queries.keys.toSeq.sorted
+
+  /** Local core count of the harness mains: SPARK_GRAFT_CPUS, else the
+    * host's available processors. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 }

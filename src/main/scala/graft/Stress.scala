@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 object Stress {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = SparkSession.builder().master(s"local[${SparkEntry.cpus}]")
+      .config("spark.sql.shuffle.partitions", SparkEntry.cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -1152,10 +1152,12 @@ object DeltaDml {
 
     // inserted = rows added minus rows carried over from rewrites (stats
     // arithmetic, no extra job; falls back to 0-safe math when stats are
-    // absent on foreign-written files)
+    // absent on foreign-written files). Live rows only: a rewritten file's
+    // DV-deleted rows are in its numRecords but were never carried over.
     def rowsOf(fl: Seq[AddFile]): Option[Long] = {
       val counts = fl.map(f => StatsPruning.parse(f.stats).flatMap(_.numRecords))
-      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+      if (counts.forall(_.isDefined)) Some(counts.flatten.sum - fl.map(_.dvCardinality).sum)
+      else None
     }
     // stats arithmetic needs the exact deleted-row count; it is knowable
     // without a job only when deletion is all-or-nothing of the matched

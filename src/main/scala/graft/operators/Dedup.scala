@@ -128,13 +128,6 @@ object Dedup {
   def withShingleSet(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh_set"))
 
-  /** The composed-HOF formulation of [[withShingleSet]] — semantics
-    * oracle for the fused kernel; not on any hot path. */
-  private[operators] def withShingleSetComposed(
-      df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("__words"))
-      .select(col("doc_id"), shinglesOfWords(col("__words")).as("sh_set"))
-
   /** Per-doc distinct word n-gram shingles of `text` (fused kernel). */
   def shingles(text: Column, n: Int = 3): Column =
     graft.functions.VectorFunctions.wordGrams(text, n)

@@ -45,6 +45,22 @@ object Similarity {
   private def cosinePre(dot: Column, na: Column, nb: Column): Column =
     dot.cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double")))
 
+  /** (id, v, n): each row's id, quantized vector and exact squared norm. */
+  private def quantizedRows(df: DataFrame, id: Column, vecCol: String): DataFrame =
+    df.select(id.as("id"), quantize(col(vecCol)).as("v")).withColumn("n", normQ(col("v")))
+
+  /** The final rank of every top-k operator here: candidates
+    * (query_id, qv, qn, vec_id, cv, cn) → the k best per query by exact
+    * quantized cosine, ties to the lower vec_id. Returns
+    * (query_id, rank, vec_id). */
+  private def topKByCosine(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
+    cands.withColumn("cos", cosinePre(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "vec_id")
+  }
+
   /** Brute-force top-k cosine neighbors for each query id.
     * Returns (query_id, rank, vec_id). The query set is broadcast; the
     * corpus is scanned once (narrow), then one shuffle for the per-query
@@ -57,12 +73,7 @@ object Similarity {
       .withColumn("qn", normQ(col("qv")))
     val corpus = df.select(col(idCol).as("vec_id"), quantize(col(vecCol)).as("cv"))
       .withColumn("cn", normQ(col("cv")))
-    val scored = corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosinePre(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
+    topKByCosine(corpus.join(broadcast(q), col("vec_id") =!= col("query_id")), k)
   }
 
   /** Embedding-cosine near-dup pairs: axis-aligned sign-LSH banding
@@ -77,8 +88,7 @@ object Similarity {
       maxBucketSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
     val bands = 8
     val width = dim / bands
-    val q = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
+    val q = quantizedRows(df, col(idCol), vecCol)
     val bandStructs = (0 until bands).map { b =>
       val sig = concat((0 until width).map { i =>
         when(element_at(col("v"), b * width + i + 1) >= 0, lit("1")).otherwise(lit("0"))
@@ -143,7 +153,14 @@ object Similarity {
         expr("transform(ps, p -> p.s DIV n)").as("centroid_q"))
   }
 
-  // ---- IVF (inverted-file) ANN: KMeans coarse quantizer -----------------
+  // ---- IVF (inverted-file) ANN: one model path --------------------------
+  //
+  // ivfTopK, ivfPqTopK, the persisted index (buildIvfPqIndex / queryIndex)
+  // and semanticNearDups all rest on ONE model: a coarse k-means quantizer
+  // ([[fitCoarse]]) plus, for IVF-PQ, per-subspace codebooks
+  // ([[fitIvfPq]]). Queries probe it through [[probePairs]]; the IVF-PQ
+  // operators rank through [[rankProbed]] alone, so the in-memory and the
+  // persisted index are bit-exact twins by construction.
 
   /** Max rows the IVF coarse quantizer is fit on — centroids converge on
     * a sample; assignment (the distributed part) still sees every row. */
@@ -154,220 +171,57 @@ object Similarity {
     * far fewer points than the coarse quantizer needs. */
   val PqFitSampleCap = 20000
 
-  /** IVF top-k: a KMeans coarse quantizer (fixed seed) partitions the
-    * corpus into `nlist` cells; each query probes its `nprobe` nearest
-    * cells and ranks candidates by exact quantized cosine. The classic
-    * IVF-Flat layout: at 100 TB the cell assignment is a narrow column
-    * and each query touches nprobe/nlist of the corpus. Approximate by
-    * design (recall depends on nprobe). */
-  def ivfTopK(
-      df: DataFrame, idCol: String, vecCol: String,
-      queryIds: Seq[Long], k: Int,
-      nlist: Int = 16, nprobe: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    val fv = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
-    // Coarse quantizer fit DRIVER-SIDE on the bounded deterministic
-    // sample ([[collectFitSample]]) via the same Lloyd kernel the PQ
-    // codebooks use — a Spark ML KMeans fit on the sample cost ~15
-    // scheduled jobs (k-means|| init passes + one job per iteration)
-    // for arithmetic that is ≤ sample·nlist·dim·iters driver flops
-    // (measured 2.0 s of t13's 2.2 s at sf0.1). Centers quantized to
-    // exact micro-units; cell ASSIGNMENT still covers every row, through
-    // the same codegen'd argmin kernel ivfPqTopK uses (no ML-pipeline
-    // UDF in the scan).
-    val sample = collectFitSample(df, idCol, vecCol)
-    val dim = sample.head.length
-    val centersQ: IndexedSeq[IndexedSeq[Long]] =
-      lloydCodebook(sample, nlist, iters = 10)
-        .toIndexedSeq.map(_.toIndexedSeq.map(d => math.round(d * 1e6)))
-    val coarseFlat: IndexedSeq[Long] = centersQ.flatten
-    val assigned = fv
-      .select(col("id"), col("v"), col("n"),
-        element_at(graft.functions.VectorFunctions.pqEncodeQ(
-          col("v"), coarseFlat, 1, nlist, dim), 1).as("cell"))
-      .persist()
-
-    // query → nprobe nearest centroids in the SAME quantized arithmetic
-    // as the corpus assignment, so probe and cell agree; query set is
-    // small by contract, centroid table is nlist × dim — driver trivial
-    val queries = assigned.filter(col("id").isin(queryIds.map(Long.box): _*))
-      .select("id", "v", "n").as[(Long, Array[Long], Long)].collect()
-    val probePairs = queries.flatMap { case (qid, qv, _) =>
-      centersQ.zipWithIndex
-        .map { case (c, ci) =>
-          (ci, c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum) }
-        .sortBy(_._2).take(nprobe)
-        .map { case (ci, _) => (qid, ci) }
-    }.toSeq
-    val probes = probePairs.toDF("query_id", "cell")
-    val qv = queries.toSeq.toDF("query_id", "qv", "qn")
-
-    val cands = assigned.join(broadcast(probes), "cell")
-      .filter(col("id") =!= col("query_id"))
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("id").as("vec_id"), col("v").as("cv"),
-        col("n").as("cn"), col("qv"), col("qn"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    val result = cands.withColumn("cos",
-        cosinePre(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
-    materialized(result, assigned)
-  }
-
-  // ---- IVF-PQ (product quantization) ------------------------------------
-
-  /** IVF-PQ top-k: the IVF coarse cells of [[ivfTopK]] plus a product
-    * quantizer — each vector's `dim` floats compress to `m` sub-codes
-    * (one byte each), and candidate ranking runs on ADC (asymmetric
-    * distance computation) against per-query lookup tables instead of
-    * touching the full vectors. The 100 TB index shape: dim×4 bytes per
-    * vector in the scan vs m bytes in the PQ index, with the LUTs
-    * (queries × m × 2^nbits longs) broadcast as literals.
+  /** The coarse quantizer, fit DRIVER-SIDE on ONE bounded deterministic
+    * sample collect, which it also returns for the PQ codebook fit.
     *
-    * Pipeline: coarse KMeans (fixed seed, bounded deterministic sample)
-    * → per-subspace KMeans codebooks (seeds 43+j, same sample) → corpus
-    * encoded narrowly (argmin over 2^nbits exact quantized distances per
-    * subspace — codegen-able column work, no shuffle) → queries probe
-    * `nprobe` cells → ADC ranks candidates in exact BIGINT arithmetic →
-    * the top `refine·k` re-rank by exact quantized cosine. Raw-vector PQ
-    * (no residual encoding): simpler, deterministic, and the re-rank
-    * step absorbs the precision loss; approximate by design with recall
-    * pinned in SimilaritySpec and in-query floors in the harness. */
-  def ivfPqTopK(
-      df: DataFrame, idCol: String, vecCol: String,
-      queryIds: Seq[Long], k: Int,
-      nlist: Int = 16, nprobe: Int = 4,
-      m: Int = 8, nbits: Int = 5, refine: Int = 8): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    require(nbits >= 1 && nbits <= 8, s"nbits in [1,8]: $nbits")
-    val codes = 1 << nbits
-
-    // the full corpus carries just the quantized vector (the assignment
-    // and encode kernels below never touch an ML vector)
-    val fv = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
-    // coarse quantizer AND per-subspace codebooks fit DRIVER-SIDE on ONE
-    // bounded deterministic sample collect (deterministic strided init +
-    // Lloyd iterations; [[collectFitSample]]): the former Spark ML
-    // coarse fit cost ~15 scheduled jobs (k-means|| init + one job per
-    // iteration) for ≤ sample·nlist·dim·iters driver flops — measured
-    // 2.0 s of the 2.2 s sf0.1 query; m ML subspace fits would have cost
-    // m more rounds of the same. Quantized to exact micro-units for ADC.
-    // Sub-quantizer codebooks need far fewer points than the coarse
-    // quantizer (they model dim/m-dimensional marginals): cap the Lloyd
-    // input so the driver fit stays milliseconds-per-subspace.
-    val sample = collectFitSample(df, idCol, vecCol)
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val w = dim / m
-    val coarseCenters = lloydCodebook(sample, nlist, iters = 10)
-    val sampleRows = sample.take(PqFitSampleCap)
-    val codebooksQ: Seq[Seq[Seq[Long]]] = (0 until m).map { j =>
-      val sub = sampleRows.map(r => r.slice(j * w, (j + 1) * w))
-      lloydCodebook(sub, codes, iters = 10)
-        .map(_.toSeq.map(d => math.round(d * 1e6)).toSeq).toSeq
-    }
-
-    // encode + coarse-assign in ONE generated pass each: PqEncodeQ is a
-    // native codegen'd argmin kernel (the portable array_min-over-HOF
-    // formulation, pinned bit-equal in SimilaritySpec, runs interpreted —
-    // m·codes array allocations per row dominated IVF-PQ indexing at
-    // 200k vectors). The coarse cell is the same kernel with m=1,
-    // codes=nlist over the full vector — no ML-pipeline UDF in the scan.
-    val flatCodebooks: IndexedSeq[Long] =
-      codebooksQ.flatten.flatten.toIndexedSeq
-    val centersQ: Seq[Seq[Long]] =
-      coarseCenters.toIndexedSeq.map(_.toSeq.map(d => math.round(d * 1e6)))
-    val coarseFlat: IndexedSeq[Long] = centersQ.flatten.toIndexedSeq
-    val assigned = fv
-      .select(col("id"), col("v"), col("n"),
-        element_at(graft.functions.VectorFunctions.pqEncodeQ(
-          col("v"), coarseFlat, 1, nlist, dim), 1).as("cell"),
-        graft.functions.VectorFunctions.pqEncodeQ(
-          col("v"), flatCodebooks, m, codes, w).as("codes"))
-      .persist()
-
-    // queries: nprobe nearest coarse cells (the SAME quantized
-    // arithmetic as the corpus assignment, so probe and cell agree) +
-    // per-subspace ADC LUTs (m × 2^nbits exact integer distances), all
-    // driver-side trivial
-    val queries = assigned.filter(col("id").isin(queryIds.map(Long.box): _*))
-      .select("id", "v", "n").as[(Long, Array[Long], Long)].collect()
-    val probePairs = queries.flatMap { case (qid, qv, _) =>
-      centersQ.zipWithIndex
-        .map { case (c, ci) =>
-          (ci, c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum) }
-        .sortBy(_._2).take(nprobe).map { case (ci, _) => (qid, ci) }
-    }.toSeq
-    val luts: Seq[(Long, Seq[Seq[Long]])] = queries.toSeq.map { case (qid, qv, _) =>
-      qid -> (0 until m).map { j =>
-        val qs = qv.slice(j * w, (j + 1) * w)
-        codebooksQ(j).map(c =>
-          c.zip(qs).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }
-    }
-    val probes = probePairs.toDF("query_id", "cell")
-    val qlut = luts.toDF("query_id", "lut")
-    val qv = queries.toSeq.map(q => (q._1, q._2, q._3)).toDF("query_id", "qv", "qn")
-
-    // ADC rank within probed cells, keep refine·k, then exact re-rank;
-    // the LUT sum is the fused AdcLookupQ kernel, not a per-row zip_with
-    val cands = assigned.join(broadcast(probes), "cell")
-      .filter(col("id") =!= col("query_id"))
-      .join(broadcast(qlut), "query_id")
-      .withColumn("adc",
-        graft.functions.VectorFunctions.adcLookupQ(col("codes"), col("lut")))
-      .select(col("query_id"), col("id").as("vec_id"), col("adc"))
-      .distinct()
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    val shortlist = cands.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= refine * k)
-      .select("query_id", "vec_id")
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    val result = shortlist
-      .join(assigned.select(col("id").as("vec_id"), col("v").as("cv"), col("n").as("cn")),
-        "vec_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("cos", cosinePre(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
-    materialized(result, assigned)
-  }
-
-  /** The bounded DETERMINISTIC fit sample, collected driver-side: KMeans
-    * quality needs only a representative sample, and a full-corpus fit
-    * at 100 TB would dwarf the query itself. orderBy(id).limit plans as
-    * a distributed top-k (per-partition heads, no data shuffle), and
-    * unlike a bare limit() the sample is a pure function of the data —
-    * not of partitioning — so results stay reproducible on any layout.
-    * ≤ IvfFitSampleCap × dim doubles by construction (~51 MB at the cap
-    * for dim 64 — bounded driver memory, same contract as the PQ
-    * codebook collect that already existed). */
-  private def collectFitSample(
-      df: DataFrame, idCol: String, vecCol: String): Array[Array[Double]] =
-    df.select(col(idCol).as("id"),
+    * The sample: KMeans quality needs only a representative sample, and
+    * a full-corpus fit at 100 TB would dwarf the query itself.
+    * orderBy(id).limit plans as a distributed top-k (per-partition heads,
+    * no data shuffle), and unlike a bare limit() the sample is a pure
+    * function of the data — not of partitioning — so results stay
+    * reproducible on any layout. ≤ IvfFitSampleCap × dim doubles by
+    * construction (~51 MB at the cap for dim 64).
+    *
+    * The fit: [[lloydCodebook]] on the driver — a Spark ML KMeans fit on
+    * the sample cost ~15 scheduled jobs (k-means|| init passes + one job
+    * per iteration) for arithmetic that is ≤ sample·nlist·dim·iters
+    * driver flops (measured 2.0 s of t13's 2.2 s at sf0.1). */
+  private def fitCoarse(df: DataFrame, idCol: String, vecCol: String,
+      nlist: Int): (Array[Array[Double]], IndexedSeq[IndexedSeq[Long]]) = {
+    val sample = df.select(col(idCol).as("id"),
         transform(col(vecCol), x => x.cast("double")).as("f"))
       .orderBy(col("id")).limit(IvfFitSampleCap)
       .select("f").collect().map(_.getSeq[Double](0).toArray)
+    (sample, lloydCodebook(sample, nlist))
+  }
+
+  /** The IVF-PQ model from one sample collect: the coarse quantizer plus
+    * one 2^nbits-entry codebook per subspace, fit on the first
+    * [[PqFitSampleCap]] sample rows. */
+  private def fitIvfPq(df: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, m: Int, nbits: Int): AnnIndexModel = {
+    require(nbits >= 1 && nbits <= 8, s"nbits in [1,8]: $nbits")
+    val (sample, centersQ) = fitCoarse(df, idCol, vecCol, nlist)
+    val dim = sample.head.length
+    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
+    val w = dim / m
+    val pqSample = sample.take(PqFitSampleCap)
+    val codebooksQ = (0 until m).map(j =>
+      lloydCodebook(pqSample.map(_.slice(j * w, (j + 1) * w)), 1 << nbits))
+    AnnIndexModel(nlist, m, nbits, dim, centersQ, codebooksQ)
+  }
 
   /** Driver-side Lloyd's k-means (coarse quantizer AND PQ codebooks):
     * deterministic strided init over the (id-ordered) sample, empty
-    * clusters keep their previous center. The sample is bounded
-    * ([[IvfFitSampleCap]]), so this is O(sample · k · dim · iters)
-    * driver arithmetic — no job scheduling, bit-reproducible. */
+    * clusters keep their previous center, 10 iterations. The sample is
+    * bounded ([[IvfFitSampleCap]]), so this is O(sample · k · dim · iters)
+    * driver arithmetic — no job scheduling, bit-reproducible. Centers
+    * come back in exact integer micro-units, the arithmetic of every
+    * assignment, probe and ADC table. */
   private def lloydCodebook(
-      points: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
+      points: Array[Array[Double]], k: Int): IndexedSeq[IndexedSeq[Long]] = {
     require(points.nonEmpty, "empty codebook sample")
+    val iters = 10
     val n = points.length
     val d = points.head.length
     var centers: Array[Array[Double]] =
@@ -400,47 +254,173 @@ object Similarity {
         else sums(c).map(_ / counts(c)))
       it += 1
     }
-    centers
+    centers.toIndexedSeq.map(_.toIndexedSeq.map(x => math.round(x * 1e6)))
+  }
+
+  /** Exact squared distance of two quantized vectors. */
+  private def sqDist(a: Seq[Long], b: Seq[Long]): Long =
+    a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+
+  /** Coarse cell of a quantized vector: the codegen'd PqEncodeQ argmin
+    * kernel with m = 1 over the full vector (no ML-pipeline UDF in the
+    * scan). */
+  private def cellOf(v: Column, centersQ: IndexedSeq[IndexedSeq[Long]]): Column =
+    element_at(graft.functions.VectorFunctions.pqEncodeQ(
+      v, centersQ.flatten, 1, centersQ.length, centersQ.head.length), 1)
+
+  /** (query_id, cell) for each query's `nprobe` nearest coarse cells, in
+    * the SAME quantized arithmetic as the corpus assignment so probe and
+    * cell agree; ties go to the lower cell. Queries are a small batch by
+    * contract and the centroid table is nlist × dim — driver trivial. */
+  private def probePairs(centersQ: Seq[Seq[Long]], queries: Seq[QueryRow],
+      nprobe: Int): Seq[(Long, Int)] =
+    queries.flatMap { case (qid, qv, _) =>
+      centersQ.map(sqDist(_, qv)).zipWithIndex.sortBy(_._1).take(nprobe)
+        .map { case (_, ci) => (qid, ci) }
+    }
+
+  /** A query as (id, quantized vector, exact squared norm). */
+  private type QueryRow = (Long, Array[Long], Long)
+
+  /** Collect a (small) batch of [[quantizedRows]] as queries. */
+  private def collectQueries(rows: DataFrame): Seq[QueryRow] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.select("id", "v", "n").as[QueryRow].collect().toSeq
+  }
+
+  /** IVF top-k: a KMeans coarse quantizer partitions the corpus into
+    * `nlist` cells; each query probes its `nprobe` nearest cells and ranks
+    * candidates by exact quantized cosine. The classic IVF-Flat layout:
+    * at 100 TB the cell assignment is a narrow column and each query
+    * touches nprobe/nlist of the corpus. Approximate by design (recall
+    * depends on nprobe). */
+  def ivfTopK(
+      df: DataFrame, idCol: String, vecCol: String,
+      queryIds: Seq[Long], k: Int,
+      nlist: Int = 16, nprobe: Int = 4): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val (_, centersQ) = fitCoarse(df, idCol, vecCol, nlist)
+    val assigned = quantizedRows(df, col(idCol), vecCol)
+      .withColumn("cell", cellOf(col("v"), centersQ))
+      .persist()
+    val queries = collectQueries(assigned.filter(col("id").isin(queryIds.map(Long.box): _*)))
+    val probes = probePairs(centersQ, queries, nprobe).toDF("query_id", "cell")
+    val qv = queries.toDF("query_id", "qv", "qn")
+    val cands = assigned.join(broadcast(probes), "cell")
+      .filter(col("id") =!= col("query_id"))
+      .join(broadcast(qv), "query_id")
+      .select(col("query_id"), col("id").as("vec_id"), col("v").as("cv"),
+        col("n").as("cn"), col("qv"), col("qn"))
+      .distinct()
+    materialized(topKByCosine(cands, k), assigned)
+  }
+
+  // ---- IVF-PQ (product quantization) ------------------------------------
+
+  /** IVF-PQ top-k: the IVF coarse cells of [[ivfTopK]] plus a product
+    * quantizer — each vector's `dim` floats compress to `m` sub-codes
+    * (one byte each), and candidate ranking runs on ADC (asymmetric
+    * distance computation) against per-query lookup tables instead of
+    * touching the full vectors. The 100 TB index shape: dim×4 bytes per
+    * vector in the scan vs m bytes in the PQ index, with the LUTs
+    * (queries × m × 2^nbits longs) broadcast as literals.
+    *
+    * Pipeline: [[fitIvfPq]] → corpus encoded narrowly under the model
+    * ([[encodeWithModel]]) → [[rankProbed]], the same rank as
+    * [[queryIndex]]. Raw-vector PQ (no residual encoding): simpler,
+    * deterministic, and the re-rank step absorbs the precision loss;
+    * approximate by design with recall pinned in SimilaritySpec and
+    * in-query floors in the harness. */
+  def ivfPqTopK(
+      df: DataFrame, idCol: String, vecCol: String,
+      queryIds: Seq[Long], k: Int,
+      nlist: Int = 16, nprobe: Int = 4,
+      m: Int = 8, nbits: Int = 5, refine: Int = 8): DataFrame = {
+    val model = fitIvfPq(df, idCol, vecCol, nlist, m, nbits)
+    val encoded = encodeWithModel(df, idCol, vecCol, model).persist()
+    val queries = collectQueries(encoded.filter(col("id").isin(queryIds.map(Long.box): _*)))
+    val result = rankProbed(model, _ => encoded, queries, k, nprobe, refine, excludeSelf = true)
+    materialized(result, encoded)
+  }
+
+  /** The one IVF-PQ rank: each query probes its `nprobe` nearest cells of
+    * `model`, ADC ranks the probed candidates against the query's LUT
+    * (the fused AdcLookupQ kernel, not a per-row zip_with), keeps the top
+    * refine·k, and re-ranks those by exact quantized cosine. `codes` maps
+    * the probed cells to the codes plane (id, cell, codes, v, n), which
+    * must hold at least those cells. Returns (query_id, rank, vec_id). */
+  private def rankProbed(model: AnnIndexModel, codes: Seq[Int] => DataFrame,
+      queries: Seq[QueryRow], k: Int, nprobe: Int, refine: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val probed = probePairs(model.centersQ, queries, nprobe)
+    val stored = codes(probed.map(_._2).distinct.sorted)
+    val spark = stored.sparkSession
+    import spark.implicits._
+    val probes = probed.toDF("query_id", "cell")
+    val qlut = queries.map { case (qid, qv, _) => (qid, model.lut(qv)) }.toDF("query_id", "lut")
+    val qv = queries.toDF("query_id", "qv", "qn")
+    val inCells = stored.join(broadcast(probes), "cell")
+    val cands = (if (excludeSelf) inCells.filter(col("id") =!= col("query_id")) else inCells)
+      .join(broadcast(qlut), "query_id")
+      .withColumn("adc",
+        graft.functions.VectorFunctions.adcLookupQ(col("codes"), col("lut")))
+      .select(col("query_id"), col("id").as("vec_id"), col("adc"))
+      .distinct()
+    val wAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc").asc, col("vec_id").asc)
+    val shortlist = cands.withColumn("adc_rank", row_number().over(wAdc))
+      .filter(col("adc_rank") <= refine * k)
+      .select("query_id", "vec_id")
+    topKByCosine(shortlist
+      .join(stored.select(col("id").as("vec_id"), col("v").as("cv"), col("n").as("cn")),
+        "vec_id")
+      .join(broadcast(qv), "query_id"), k)
   }
 
   // ---- Persisted IVF-PQ index lifecycle (VERDICT r17 #3) -----------------
 
-  /** The model plane of a persisted ANN index: coarse centroids +
-    * per-subspace PQ codebooks, all in exact integer micro-units so
-    * encode/probe/ADC arithmetic is bit-identical across build, load,
-    * and append. Size: nlist×dim + m×2^nbits×(dim/m) longs — driver
-    * trivial by construction. */
+  /** The IVF-PQ model — and the model plane of a persisted ANN index:
+    * coarse centroids + per-subspace PQ codebooks, all in exact integer
+    * micro-units so encode/probe/ADC arithmetic is bit-identical across
+    * build, load, and append. Size: nlist×dim + m×2^nbits×(dim/m) longs —
+    * driver trivial by construction. */
   final case class AnnIndexModel(
       nlist: Int, m: Int, nbits: Int, dim: Int,
       centersQ: IndexedSeq[IndexedSeq[Long]],
       codebooksQ: IndexedSeq[IndexedSeq[IndexedSeq[Long]]]) {
     def codes: Int = 1 << nbits
     def w: Int = dim / m
-    def coarseFlat: IndexedSeq[Long] = centersQ.flatten
     def flatCodebooks: IndexedSeq[Long] = codebooksQ.flatten.flatten
+
+    /** A quantized query's ADC lookup tables: per subspace, the exact
+      * squared distance to each of the 2^nbits codebook entries. */
+    private[operators] def lut(qv: Array[Long]): Seq[Seq[Long]] =
+      codebooksQ.indices.map { j =>
+        val qs = qv.slice(j * w, (j + 1) * w)
+        codebooksQ(j).map(sqDist(_, qs))
+      }
   }
 
   private def modelPath(indexPath: String): String = s"$indexPath/model"
   private def codesPath(indexPath: String): String = s"$indexPath/codes"
 
-  /** Encode a corpus under an EXISTING model — the shared no-fit kernel
-    * of build and append: quantize, exact norm, coarse-cell assignment
-    * and PQ codes through the codegen'd PqEncodeQ kernel. One scan, no
-    * shuffle. */
+  /** Encode a corpus under a model — quantize, exact norm, coarse-cell
+    * assignment and PQ codes through the codegen'd PqEncodeQ kernel (the
+    * portable array_min-over-HOF formulation, pinned bit-equal in
+    * SimilaritySpec, runs interpreted). One scan, no shuffle. */
   private def encodeWithModel(df: DataFrame, idCol: String, vecCol: String,
       model: AnnIndexModel): DataFrame =
-    df.select(col(idCol).cast("long").as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
-      .select(col("id"), col("v"), col("n"),
-        element_at(graft.functions.VectorFunctions.pqEncodeQ(
-          col("v"), model.coarseFlat, 1, model.nlist, model.dim), 1).as("cell"),
-        graft.functions.VectorFunctions.pqEncodeQ(
-          col("v"), model.flatCodebooks, model.m, model.codes, model.w).as("codes"))
+    quantizedRows(df, col(idCol).cast("long"), vecCol)
+      .withColumn("cell", cellOf(col("v"), model.centersQ))
+      .withColumn("codes", graft.functions.VectorFunctions.pqEncodeQ(
+        col("v"), model.flatCodebooks, model.m, model.codes, model.w))
 
-  /** Build a persisted IVF-PQ index ONCE (VERDICT r17 #3): fit the
-    * coarse quantizer + PQ codebooks exactly as [[ivfPqTopK]] does, then
-    * persist BOTH planes as Delta tables under `indexPath` through the
-    * engine's own transactional writer:
+  /** Build a persisted IVF-PQ index ONCE (VERDICT r17 #3): fit the model
+    * exactly as [[ivfPqTopK]] does, then persist BOTH planes as Delta
+    * tables under `indexPath` through the engine's own transactional
+    * writer:
     *
     *  - `<indexPath>/model` — the tiny model plane: one row per coarse
     *    centroid (kind='coarse') and per codebook entry
@@ -461,26 +441,8 @@ object Similarity {
   def buildIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
       indexPath: String, nlist: Int = 16, m: Int = 8,
       nbits: Int = 5): AnnIndexModel = {
-    val spark = df.sparkSession
-    require(nbits >= 1 && nbits <= 8, s"nbits in [1,8]: $nbits")
-    // one bounded deterministic sample collect feeds BOTH fits,
-    // driver-side (see ivfPqTopK — the former Spark ML coarse fit was
-    // 2.0 s of this query's 3.4 s build phase at sf0.1, all scheduling)
-    val sample = collectFitSample(df, idCol, vecCol)
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val w = dim / m
-    val coarseCenters = lloydCodebook(sample, nlist, iters = 10)
-    val sampleRows = sample.take(PqFitSampleCap)
-    val codebooksQ = (0 until m).map { j =>
-      val sub = sampleRows.map(r => r.slice(j * w, (j + 1) * w))
-      lloydCodebook(sub, 1 << nbits, iters = 10)
-        .map(_.toIndexedSeq.map(d => math.round(d * 1e6))).toIndexedSeq
-    }
-    val centersQ = coarseCenters.toIndexedSeq
-      .map(_.toIndexedSeq.map(d => math.round(d * 1e6)))
-    val model = AnnIndexModel(nlist, m, nbits, dim, centersQ, codebooksQ.toIndexedSeq)
-    writeModel(spark, indexPath, model)
+    val model = fitIvfPq(df, idCol, vecCol, nlist, m, nbits)
+    writeModel(df.sparkSession, indexPath, model)
     // optimizeWrite stamped at creation: the AQE REBALANCE staging shape
     // sizes per-cell output from measured bytes — small cells coalesce,
     // a hot cell splits across files instead of serializing into one —
@@ -575,65 +537,22 @@ object Similarity {
     * never listed), ADC ranks candidates against broadcast per-query
     * LUTs, and the stored refine plane re-ranks the ADC top refine·k by
     * exact quantized cosine. Queries are a small batch by contract
-    * (bounded driver collect, hard require) — the arithmetic is the
-    * bit-exact twin of [[ivfPqTopK]]'s, so recall characteristics carry
-    * over. Returns (query_id, rank, vec_id). */
+    * (bounded driver collect, hard require). The rank is [[rankProbed]],
+    * the same as [[ivfPqTopK]]'s, so an index built from the same corpus
+    * returns the same rows. Returns (query_id, rank, vec_id). */
   def queryIndex(queries: DataFrame, idCol: String, vecCol: String,
       indexPath: String, k: Int, nprobe: Int = 4, refine: Int = 8,
       excludeSelf: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
-    import spark.implicits._
     val model = loadAnnIndex(spark, indexPath)
-    val qRows = queries.select(col(idCol).cast("long").as("id"),
-        quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
-      .as[(Long, Array[Long], Long)].collect()
+    val qRows = collectQueries(quantizedRows(queries, col(idCol).cast("long"), vecCol))
     require(qRows.length <= 4096,
       s"queryIndex is a per-batch probe (got ${qRows.length} queries, cap 4096)")
-    val probePairs = qRows.toSeq.flatMap { case (qid, qv, _) =>
-      model.centersQ.zipWithIndex
-        .map { case (c, ci) =>
-          (ci, c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum) }
-        .sortBy(_._2).take(nprobe).map { case (ci, _) => (qid, ci) }
-    }
-    val luts: Seq[(Long, Seq[Seq[Long]])] = qRows.toSeq.map { case (qid, qv, _) =>
-      qid -> (0 until model.m).map { j =>
-        val qs = qv.slice(j * model.w, (j + 1) * model.w)
-        model.codebooksQ(j).map(c =>
-          c.zip(qs).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }
-    }
-    val probedCells = probePairs.map(_._2).distinct.sorted
     // log-level partition pruning: only probed cells' files are listed
-    val stored = graft.delta.DeltaRead.load(spark, codesPath(indexPath),
-      filters = probedCells.map(c => Seq(graft.delta.Predicate("cell", "==", c))))
-    val probes = probePairs.toDF("query_id", "cell")
-    val qlut = luts.toDF("query_id", "lut")
-    val qv = qRows.toSeq.toDF("query_id", "qv", "qn")
-    val cands0 = stored.join(broadcast(probes), "cell")
-    val cands1 =
-      if (excludeSelf) cands0.filter(col("id") =!= col("query_id")) else cands0
-    val cands = cands1
-      .join(broadcast(qlut), "query_id")
-      .withColumn("adc",
-        graft.functions.VectorFunctions.adcLookupQ(col("codes"), col("lut")))
-      .select(col("query_id"), col("id").as("vec_id"), col("adc"))
-      .distinct()
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    val shortlist = cands.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= refine * k)
-      .select("query_id", "vec_id")
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    shortlist
-      .join(stored.select(col("id").as("vec_id"), col("v").as("cv"), col("n").as("cn")),
-        "vec_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("cos", cosinePre(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
+    rankProbed(model,
+      cells => graft.delta.DeltaRead.load(spark, codesPath(indexPath),
+        filters = cells.map(c => Seq(graft.delta.Predicate("cell", "==", c)))),
+      qRows, k, nprobe, refine, excludeSelf)
   }
 
   // ---- Random-hyperplane LSH (scale path) -------------------------------
@@ -663,8 +582,7 @@ object Similarity {
       queryIds: Seq[Long], k: Int, dim: Int): DataFrame = {
     val numPlanes = 16
     val bandBits = 4
-    val withSig = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
+    val withSig = quantizedRows(df, col(idCol), vecCol)
       .withColumn("sig", signature(col("v"), dim, numPlanes))
     val banded = withSig.select(col("id"), col("v"), col("n"),
         explode(array((0 until numPlanes / bandBits).map(b =>
@@ -680,22 +598,17 @@ object Similarity {
       .select(col("query_id"), col("qv"), col("qn"),
         col("id").as("vec_id"), col("v").as("cv"), col("n").as("cn"))
       .distinct()
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    cands.withColumn("cos", cosinePre(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id")
+    topKByCosine(cands, k)
   }
 
   // ---- Semantic dedup (SemDeDup-style) ----------------------------------
 
   /** Semantic near-dedup pairs (the SemDeDup recipe, Abbas et al. 2023):
-    * a KMeans coarse quantizer (fixed seed, bounded-sample fit — same
-    * machinery as [[ivfTopK]]) partitions the corpus into `nlist` cells;
-    * each vector is indexed into its `nprobe` NEAREST cells (multi-probe
-    * — a pair is a candidate iff the probe sets intersect), then exact
-    * quantized cosine ≥ threshold verifies. Returns (id_a, id_b, cos)
-    * with id_a < id_b.
+    * the coarse quantizer of [[ivfTopK]] ([[fitCoarse]]) partitions the
+    * corpus into `nlist` cells; each vector is indexed into its `nprobe`
+    * NEAREST cells (multi-probe — a pair is a candidate iff the probe
+    * sets intersect), then exact quantized cosine ≥ threshold verifies.
+    * Returns (id_a, id_b, cos) with id_a < id_b.
     *
     * Assignment is pure narrow column work: distances to the (tiny,
     * literal) centroid table in exact quantized BIGINTs, ties broken by
@@ -710,23 +623,15 @@ object Similarity {
       nlist: Int = 16, nprobe: Int = 2,
       maxCellSize: Int = Dedup.DefaultMaxBucketSize): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist, s"nprobe must be in [1, $nlist]: $nprobe")
-    val fv = df.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
-      .withColumn("n", normQ(col("v")))
-    // coarse fit DRIVER-SIDE on the bounded deterministic sample — same
-    // Lloyd kernel and rationale as ivfTopK/ivfPqTopK (the Spark ML fit
-    // was ~15 scheduled jobs of pure overhead at any corpus size)
-    val sample = collectFitSample(df, idCol, vecCol)
+    val centersQ: Seq[Seq[Long]] = fitCoarse(df, idCol, vecCol, nlist)._2
     // nprobe nearest cells per vector: exact quantized squared distances
     // to each centroid, lexicographic (dist, cell) sort — deterministic
-    val centersQ: Seq[Seq[Long]] =
-      lloydCodebook(sample, nlist, iters = 10)
-        .toIndexedSeq.map(_.toSeq.map(d => math.round(d * 1e6)))
     val dists = centersQ.zipWithIndex.map { case (c, i) =>
       val d2 = aggregate(zip_with(col("v"), typedLit(c), (x, y) => (x - y) * (x - y)),
         lit(0L), (acc, x) => acc + x)
       struct(d2.as("d"), lit(i).as("cell"))
     }
-    val assigned = fv
+    val assigned = quantizedRows(df, col(idCol), vecCol)
       .withColumn("__cells", slice(array_sort(array(dists: _*)), 1, nprobe))
       .select(col("id"), col("v"), col("n"),
         explode(transform(col("__cells"), x => x.getField("cell"))).as("cell"))

@@ -139,6 +139,23 @@ class MergeSpec extends GraftSuite {
     assert(GraftDelta.readDelta(spark, path).count() == 12)
   }
 
+  test("merge reports inserted rows exactly when it rewrites a DV-carrying file") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta((1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1), path)
+    GraftDelta.deleteWhereWithDv(spark, path, Seq(Seq(Predicate("k", "<=", 10L))))
+    val log = DeltaLog.forTable(spark, path)
+    assert(log.snapshot(None).activeFiles.map(_.dvCardinality) == Seq(10L))
+
+    val src = Seq((50L, "UP"), (201L, "INS1"), (202L, "INS2"), (203L, "INS3")).toDF("k", "v")
+    val res = GraftDelta.mergeInto(spark, path, src, on = Seq("k"))
+    assert(res.removedFiles == 1, s"the DV-carrying file must be rewritten: $res")
+    assert(res.matchedRows == 1 && res.insertedRows == 3, s"$res")
+    val metrics = log.commitInfoOf(log.snapshot(None).version).get.operationMetrics
+    assert(metrics("numTargetRowsInserted") == "3", s"$metrics")
+    assert(GraftDelta.readDelta(spark, path).count() == 93)
+  }
+
   test("phase-0 guard+span is ONE source pass (fused aggregation)") {
     import spark.implicits._
     val src = Seq((Some(1L), "a"), (Some(2L), "b"), (None, "n"))

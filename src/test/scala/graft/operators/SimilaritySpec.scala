@@ -276,4 +276,18 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
     assert(postOpt == preOpt, "OPTIMIZE must not change query results")
   }
+
+  test("ivfPqTopK and buildIvfPqIndex + queryIndex rank identically, row for row") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.read.parquet(emb)
+    val idx = tmpIndex()
+    Similarity.buildIvfPqIndex(df, "vec_id", "embedding", idx)
+    val queries = df.filter(col("vec_id").isin(qids.map(Long.box): _*))
+      .select(col("vec_id"), col("embedding"))
+    def rows(r: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      r.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq.sorted
+    val inMemory = rows(Similarity.ivfPqTopK(df, "vec_id", "embedding", qids, 10))
+    assert(inMemory.length == qids.length * 10)
+    assert(rows(Similarity.queryIndex(queries, "vec_id", "embedding", idx, k = 10)) == inMemory)
+  }
 }
