@@ -81,6 +81,12 @@ final case class AddFile(
   /** Live rows = numRecords − DV cardinality (exact: DV positions are
     * deleted rows of THIS file). */
   def dvCardinality: Long = deletionVector.map(_.cardinality).getOrElse(0L)
+
+  /** The tombstone retiring this file: its partition values, size and
+    * deletion vector ride along (extended file metadata). */
+  def remove(timestamp: Long, dataChange: Boolean = true): RemoveFile =
+    RemoveFile(path, Some(timestamp), dataChange, extendedFileMetadata = Some(true),
+      partitionValues, Some(size), deletionVector)
 }
 
 /** `remove` action — a tombstone. Carries the removed add's deletion

@@ -144,19 +144,7 @@ object DeltaDml {
     val snap = log.snapshot(None)
     DeltaWrite.requireWriterSupported(snap)
     DeltaWrite.requireNotAppendOnly(snap, if (isDelete) "DELETE" else "UPDATE")
-    val generatedCols = DeltaWrite.generatedColumnsOf(snap.schema).map(_._1).toSet
-    val identityCols = DeltaWrite.identityColumnsOf(snap.schema).map(_.name).toSet
-    assignments.keys.foreach { c =>
-      require(snap.schema.fieldNames.contains(c), s"Unknown column in SET: $c")
-      require(!snap.partitionColumns.contains(c),
-        s"Updating partition column $c is not supported (would move rows across files)")
-      require(!generatedCols.contains(c),
-        s"Column $c is generated (delta.generationExpression) — it re-derives " +
-          "from its expression and cannot be SET directly")
-      require(!identityCols.contains(c),
-        s"Column $c is an identity column (delta.identity.*) — its values are " +
-          "writer-allocated and cannot be SET")
-    }
+    requireSettable(snap, assignments.keys)
     val partCols = snap.partitionColumns.toSet
     val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
 
@@ -250,17 +238,6 @@ object DeltaDml {
       else m
     }
     def matchedRows(): DataFrame = matchedCached
-    // Shadow columns keep cross-column SETs (a = b, b = a)
-    // order-independent, like the rewrite flavor.
-    def withAssignments(src: DataFrame): DataFrame = {
-      val shadowed = assignments.zipWithIndex.foldLeft(src) {
-        case (d, ((_, e), i)) => d.withColumn(s"__set_$i", e)
-      }
-      val swapped = assignments.zipWithIndex.foldLeft(shadowed) {
-        case (d, ((c, _), i)) => d.withColumn(c, col(s"__set_$i"))
-      }
-      swapped.select(snap.schema.fieldNames.map(col).toSeq: _*)
-    }
     // UPDATE: the matched rows (now DV'd out of their files) come back as
     // NEW files with the assignments applied — O(matched rows) written,
     // not O(touched files).
@@ -268,7 +245,8 @@ object DeltaDml {
       if (isDelete || (provenFull.isEmpty && touched.isEmpty)) Nil
       else {
         val stagingDir = new Path(path, s".graft_dml_${UUID.randomUUID().toString.take(12)}")
-        try stageDml(withAssignments(matchedRows()), spark, fs, path, stagingDir, snap, version)
+        try stageDml(withAssignments(matchedRows(), snap, assignments),
+          spark, fs, path, stagingDir, snap, version)
         finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
       }
 
@@ -282,7 +260,8 @@ object DeltaDml {
         val changes =
           if (isDelete) matchedRows().withColumn(ct, lit("delete"))
           else matchedRows().withColumn(ct, lit("update_preimage")).unionByName(
-            withAssignments(matchedRows()).withColumn(ct, lit("update_postimage")))
+            withAssignments(matchedRows(), snap, assignments)
+              .withColumn(ct, lit("update_postimage")))
         // postimages re-derive generated columns exactly like stageDml
         // (identity on every already-valid pre/delete row)
         DeltaWrite.stageCdc(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
@@ -291,16 +270,13 @@ object DeltaDml {
     if (matchedUses > 1) matchedCached.unpersist(blocking = false)
 
     val now = Instant.now().toEpochMilli
-    val removes = (fullRemoves ++ dvTargets).map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = (fullRemoves ++ dvTargets).map(_.remove(now))
     val readds = dvTargets.map(f =>
       f.copy(dataChange = true, deletionVector = Some(descriptors(f.path))))
     val protocolUpgrade = dvProtocolUpgrade(snap.protocol)
 
     val op = if (isDelete) "DELETE" else "UPDATE"
-    def mkActions(readVersion: Long): Seq[Action] = (CommitInfo(
+    def mkActions(v: Long): Seq[Action] = (CommitInfo(
       timestamp = now,
       operation = op,
       operationParameters = Map("predicate" -> condOverride.map(_.toString)
@@ -311,35 +287,22 @@ object DeltaDml {
         "numRemovedFiles" -> fullRemoves.size.toString,
         "numDeletionVectorsAdded" -> readds.size.toString,
         "numAddedFiles" -> newAdds.size.toString),
-      readVersion = Some(readVersion),
+      readVersion = Some(v - 1),
       isBlindAppend = Some(false)): Action) +: {
       // row tracking: UPDATE's appended rows get fresh ids; the DV
       // re-adds keep theirs (same file, same rows — the DV flavor is
       // exactly the DML shape under which row ids are stable)
       val (rtAdds, rtDomain) = RowTracking.assign(RowTracking.enabled(snap),
-        RowTracking.highWaterMark(snap), newAdds, readVersion + 1)
+        RowTracking.highWaterMark(snap), newAdds, v)
       // removes BEFORE the re-adds: replay is sequential, and the re-add
       // must end the commit active (it also clears the tombstone)
       protocolUpgrade.toSeq ++ rtDomain ++ cdcActions ++ removes ++ readds ++ rtAdds
     }
 
-    val committed =
-      try commitDmlWithRetry(log, path, version, mkActions,
-        removes.map(_.path).toSet, addMatcher(snap, filters))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          descriptors.headOption.foreach { case (_, d) =>
-            fs.delete(new Path(root,
-              DeletionVectors.dvFileName(DeletionVectors.uuidOfDescriptor(d))), false)
-          }
-          newAdds.foreach(a =>
-            fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          DeltaWrite.deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-    if (checkpointInterval > 0 && committed %
-      DeltaLog.checkpointIntervalOf(snap.metadata, checkpointInterval) == 0)
-      log.writeCheckpoint(committed)
+    val dvFile = descriptors.values.headOption.map(d =>
+      DeletionVectors.dvFileName(DeletionVectors.uuidOfDescriptor(d)))
+    log.optimisticCommit(Some(snap), mkActions, addMatcher(snap, filters),
+      staged = newAdds.map(_.path) ++ cdcActions.map(_.path) ++ dvFile, checkpointInterval)
     // DML rewrites produce files too — a delta.autoOptimize.autoCompact
     // table compacts after DML exactly like after appends (delta-spark
     // behavior); a separate dataChange=false commit, inert without the
@@ -399,19 +362,7 @@ object DeltaDml {
     val snap = log.snapshot(None)
     DeltaWrite.requireWriterSupported(snap)
     DeltaWrite.requireNotAppendOnly(snap, if (isDelete) "DELETE" else "UPDATE")
-    val generatedCols = DeltaWrite.generatedColumnsOf(snap.schema).map(_._1).toSet
-    val identityCols = DeltaWrite.identityColumnsOf(snap.schema).map(_.name).toSet
-    assignments.keys.foreach { c =>
-      require(snap.schema.fieldNames.contains(c), s"Unknown column in SET: $c")
-      require(!snap.partitionColumns.contains(c),
-        s"Updating partition column $c is not supported (would move rows across files)")
-      require(!generatedCols.contains(c),
-        s"Column $c is generated (delta.generationExpression) — it re-derives " +
-          "from its expression and cannot be SET directly")
-      require(!identityCols.contains(c),
-        s"Column $c is an identity column (delta.identity.*) — its values are " +
-          "writer-allocated and cannot be SET")
-    }
+    requireSettable(snap, assignments.keys)
 
     val partCols = snap.partitionColumns.toSet
     val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -497,19 +448,8 @@ object DeltaDml {
         val matched = coalesce(cond, lit(false)) // NULL predicate = no match
         val rewritten =
           if (isDelete) src.filter(!matched)
-          else {
-            // all assignments see the PRE-update row: compute into shadow
-            // columns first, then swap — self-referencing and cross-column
-            // SETs (a = b, b = a) stay order-independent
-            val shadowed = assignments.zipWithIndex.foldLeft(src) {
-              case (d, ((c, expr), i)) =>
-                d.withColumn(s"__set_$i", when(matched, expr).otherwise(col(c)))
-            }
-            val swapped = assignments.zipWithIndex.foldLeft(shadowed) {
-              case (d, ((c, _), i)) => d.withColumn(c, col(s"__set_$i"))
-            }
-            swapped.select(snap.schema.fieldNames.map(col).toSeq: _*)
-          }
+          else withAssignments(src, snap, assignments,
+            (c, e) => when(matched, e).otherwise(col(c)))
         val stagingDir = new Path(path, s".graft_dml_${UUID.randomUUID().toString.take(12)}")
         try stageDml(rewritten, spark, fs, path, stagingDir, snap, version)
         finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
@@ -538,16 +478,9 @@ object DeltaDml {
         }
         val changes =
           if (isDelete) matchedRows.withColumn(ct, lit("delete"))
-          else {
-            val shadowed = assignments.zipWithIndex.foldLeft(matchedRows) {
-              case (d, ((_, e), i)) => d.withColumn(s"__set_$i", e)
-            }
-            val post = assignments.zipWithIndex.foldLeft(shadowed) {
-              case (d, ((c, _), i)) => d.withColumn(c, col(s"__set_$i"))
-            }.select(snap.schema.fieldNames.map(col).toSeq: _*)
-            matchedRows.withColumn(ct, lit("update_preimage"))
-              .unionByName(post.withColumn(ct, lit("update_postimage")))
-          }
+          else matchedRows.withColumn(ct, lit("update_preimage")).unionByName(
+            withAssignments(matchedRows, snap, assignments)
+              .withColumn(ct, lit("update_postimage")))
         // postimages re-derive generated columns exactly like stageDml
         DeltaWrite.stageCdc(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
           spark, fs, path, version, snap)
@@ -557,12 +490,9 @@ object DeltaDml {
 
     // ---- commit ---------------------------------------------------------
     val now = Instant.now().toEpochMilli
-    val removes = (fullRemoves ++ partial).map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = (fullRemoves ++ partial).map(_.remove(now))
     val op = if (isDelete) "DELETE" else "UPDATE"
-    def mkActions(readVersion: Long): Seq[Action] = CommitInfo(
+    def mkActions(v: Long): Seq[Action] = CommitInfo(
       timestamp = now,
       operation = op,
       operationParameters = Map("predicate" -> condOverride.map(_.toString)
@@ -572,28 +502,18 @@ object DeltaDml {
         (if (isDelete) "numDeletedRows" else "numUpdatedRows") -> affected.toString,
         "numRemovedFiles" -> removes.size.toString,
         "numAddedFiles" -> adds.size.toString),
-      readVersion = Some(readVersion),
+      readVersion = Some(v - 1),
       isBlindAppend = Some(false)) +: {
       // rewrite-flavor DML re-homes surviving rows into new files — they
       // get FRESH row ids (no materialized-column preservation; the DV
       // flavor is the stable-id path)
       val (rtAdds, rtDomain) = RowTracking.assign(RowTracking.enabled(snap),
-        RowTracking.highWaterMark(snap), adds, readVersion + 1)
+        RowTracking.highWaterMark(snap), adds, v)
       rtDomain ++ cdcActions ++ rtAdds ++ removes
     }
 
-    val committed =
-      try commitDmlWithRetry(log, path, version, mkActions,
-        removes.map(_.path).toSet, addMatcher(snap, filters))
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          adds.foreach(a => fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          DeltaWrite.deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-    if (checkpointInterval > 0 && committed %
-      DeltaLog.checkpointIntervalOf(snap.metadata, checkpointInterval) == 0)
-      log.writeCheckpoint(committed)
+    log.optimisticCommit(Some(snap), mkActions, addMatcher(snap, filters),
+      staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval)
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
     DmlResult(affected, removes.size, partial.size, adds.size)
   }
@@ -763,27 +683,12 @@ object DeltaDml {
         s"Source must carry every target column for UpdateAll/insert; missing " +
           targetCols.filterNot(identityOmitted)
             .filterNot(source.schema.fieldNames.contains).mkString(", "))
-    def validateSet(set: Map[String, Column]): Unit = {
-      val generatedCols = DeltaWrite.generatedColumnsOf(snap.schema).map(_._1).toSet
-      val identityCols = DeltaWrite.identityColumnsOf(snap.schema).map(_.name).toSet
-      set.keys.foreach { c =>
-        require(targetCols.contains(c), s"Unknown column in SET: $c")
-        require(!snap.partitionColumns.contains(c),
-          s"Updating partition column $c is not supported")
-        require(!generatedCols.contains(c),
-          s"Column $c is generated (delta.generationExpression) — it re-derives " +
-            "from its expression and cannot be SET directly")
-        require(!identityCols.contains(c),
-          s"Column $c is an identity column (delta.identity.*) — its values are " +
-            "writer-allocated and cannot be SET")
-      }
-    }
     matched.foreach {
-      case MatchedClause(WhenMatched.Update(set), _) => validateSet(set)
+      case MatchedClause(WhenMatched.Update(set), _) => requireSettable(snap, set.keys)
       case _ => ()
     }
     bySource.foreach {
-      case BySourceClause(BySourceAction.Update(set), _) => validateSet(set)
+      case BySourceClause(BySourceAction.Update(set), _) => requireSettable(snap, set.keys)
       case _ => ()
     }
 
@@ -1204,11 +1109,8 @@ object DeltaDml {
         .map(s => snap.metadata.copy(schemaString = s.json))
 
     val now = Instant.now().toEpochMilli
-    val removes = removes0.map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
-    def mkActions(readVersion: Long): Seq[Action] = CommitInfo(
+    val removes = removes0.map(_.remove(now))
+    def mkActions(v: Long): Seq[Action] = CommitInfo(
       timestamp = now,
       operation = "MERGE",
       operationParameters = Map(
@@ -1227,10 +1129,10 @@ object DeltaDml {
         "numTargetRowsInserted" -> inserted.toString,
         "numTargetFilesRemoved" -> removes.size.toString,
         "numTargetFilesAdded" -> adds.size.toString),
-      readVersion = Some(readVersion),
+      readVersion = Some(v - 1),
       isBlindAppend = Some(false)) +: {
       val (rtAdds, rtDomain) = RowTracking.assign(RowTracking.enabled(snap),
-        RowTracking.highWaterMark(snap), adds, readVersion + 1)
+        RowTracking.highWaterMark(snap), adds, v)
       // identityMeta already embeds the evolved schema (it copies the
       // evolved snap's metadata), so at most ONE metaData action commits
       identityMeta.orElse(evolutionMeta).toSeq ++
@@ -1248,86 +1150,43 @@ object DeltaDml {
       if (bySource.nonEmpty) _ => true
       else if (keyRanges.isEmpty) _ => false
       else addMatcher(snap, keyRanges)
-    val committed =
-      try commitDmlWithRetry(log, path, version, mkActions,
-        removes.map(_.path).toSet, mergeAddMatcher)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          adds.foreach(a => fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          DeltaWrite.deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-    if (checkpointInterval > 0 && committed %
-      DeltaLog.checkpointIntervalOf(snap.metadata, checkpointInterval) == 0)
-      log.writeCheckpoint(committed)
+    log.optimisticCommit(Some(snap), mkActions, mergeAddMatcher,
+      staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval)
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
     MergeResult(matchedRows, math.max(inserted, 0L), removes.size, adds.size)
   }
 
-  /** Conflict-aware optimistic commit for DML — the DML twin of
-    * DeltaWrite.commitWithRetry. Losing the race no longer aborts
-    * unconditionally: each interleaved winner is checked for a LOGICAL
-    * conflict with this DML's read/write sets, and disjoint winners
-    * (appends to other partitions/key ranges, OPTIMIZE rewrites of
-    * untouched files, other DML on non-overlapping files) are rebased
-    * past by re-committing the same actions at the new head.
-    *
-    * Conflict matrix (serializable semantics, conservative):
-    *   - metadata / protocol change        → abort (plan is stale)
-    *   - remove of a file THIS DML removes → abort (write-write: the
-    *     file was concurrently rewritten or deleted)
-    *   - dataChange add that MAY contain rows matching this DML's
-    *     predicate (partition values + file stats cannot exclude it)
-    *     → abort (phantom: a serial execution would have processed
-    *     those rows). dataChange=false adds (compactions) carry no new
-    *     rows and never conflict by themselves — their paired removes
-    *     are caught by the write-write rule when they touch our files.
-    *
-    * Returns the version that committed. On abort the staged add files
-    * are the caller's to clean up (same contract as before). */
-  private[delta] def commitDmlWithRetry(
-      log: DeltaLog,
-      path: String,
-      firstVersion: Long,
-      mkActions: Long => Seq[Action], // readVersion → full action list
-      ourRemovedPaths: Set[String],
-      addMayConflict: AddFile => Boolean,
-      maxAttempts: Int = 20): Long = {
-    var v = firstVersion
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        log.writeCommit(v, mkActions(v - 1))
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxAttempts) throw e
-          val head = log.latestVersion
-          (v to head).foreach { w =>
-            log.readCommitActions(w).foreach {
-              case _: MetadataAction | _: Protocol =>
-                throw new java.util.ConcurrentModificationException(
-                  s"DML conflicts with a metadata/protocol change at version $w in $path", e)
-              // a concurrent domain-metadata change (e.g. a row-id
-              // allocation moving the delta.rowTracking watermark) makes
-              // our pre-computed domain state stale — abort, don't rebase
-              case _: DomainMetadata =>
-                throw new java.util.ConcurrentModificationException(
-                  s"DML conflicts with a domain-metadata change at version $w in $path", e)
-              case r: RemoveFile if ourRemovedPaths.contains(r.path) =>
-                throw new java.util.ConcurrentModificationException(
-                  s"Write-write conflict: ${r.path} was concurrently removed at version $w in $path", e)
-              case a: AddFile if a.dataChange && addMayConflict(a) =>
-                throw new java.util.ConcurrentModificationException(
-                  s"Phantom conflict: version $w added rows this DML's predicate may match in $path", e)
-              case _ => ()
-            }
-          }
-          v = head + 1
-      }
+  /** SET targets must be existing, non-partition, non-generated,
+    * non-identity columns (UPDATE in both flavors and MERGE's clauses). */
+  private def requireSettable(snap: Snapshot, cols: Iterable[String]): Unit = {
+    val generatedCols = DeltaWrite.generatedColumnsOf(snap.schema).map(_._1).toSet
+    val identityCols = DeltaWrite.identityColumnsOf(snap.schema).map(_.name).toSet
+    cols.foreach { c =>
+      require(snap.schema.fieldNames.contains(c), s"Unknown column in SET: $c")
+      require(!snap.partitionColumns.contains(c),
+        s"Updating partition column $c is not supported (would move rows across files)")
+      require(!generatedCols.contains(c),
+        s"Column $c is generated (delta.generationExpression) — it re-derives " +
+          "from its expression and cannot be SET directly")
+      require(!identityCols.contains(c),
+        s"Column $c is an identity column (delta.identity.*) — its values are " +
+          "writer-allocated and cannot be SET")
     }
-    -1L // unreachable
+  }
+
+  /** Apply UPDATE assignments so that every expression sees the PRE-update
+    * row: compute into shadow columns first, then swap — self-referencing
+    * and cross-column SETs (a = b, b = a) stay order-independent. `wrap`
+    * gates each expression (the rewrite flavor keeps unmatched rows). */
+  private def withAssignments(
+      src: DataFrame, snap: Snapshot, assignments: Map[String, Column],
+      wrap: (String, Column) => Column = (_, e) => e): DataFrame = {
+    val shadowed = assignments.zipWithIndex.foldLeft(src) {
+      case (d, ((c, e), i)) => d.withColumn(s"__set_$i", wrap(c, e))
+    }
+    assignments.zipWithIndex.foldLeft(shadowed) {
+      case (d, ((c, _), i)) => d.withColumn(c, col(s"__set_$i"))
+    }.select(snap.schema.fieldNames.map(col).toSeq: _*)
   }
 
   /** File-level "may this add contain predicate-matching rows?" check —

@@ -860,6 +860,87 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
 
   def crcFile(v: Long): Path = new Path(logPath, f"$v%020d.crc")
 
+  /** The optimistic commit every data-changing operation (WRITE,
+    * DELETE/UPDATE in both flavors, MERGE, OPTIMIZE) goes through.
+    * `actionsAt(v)` is committed at the version after `read` (0 for a
+    * create). On a lost race, when `retriable`, each interleaved winner is
+    * checked against this commit and the actions re-commit at the new
+    * head unless a winner carries
+    *   - a metadata or protocol change (the plan is stale);
+    *   - a SetTransaction for one of our appIds (a duplicate batch);
+    *   - a remove of a file we remove ("Write-write");
+    *   - a dataChange add `readPredicate` may match ("Phantom": a serial
+    *     execution would have read those rows); dataChange=false adds
+    *     (compactions) never conflict by themselves;
+    *   - a domain-metadata change, unless we are a blind append (a
+    *     row-id watermark or clustering domain our actions assumed moved).
+    * Our removed paths, appIds and blind-append flag are read from the
+    * actions. A commit that loses for good deletes the `staged` files
+    * (table-relative paths as the actions spell them; never the adds,
+    * which may re-add live files under a new DV) and rethrows the
+    * ConcurrentModificationException. A committed version that is a
+    * multiple of the table's checkpoint interval (this commit's metadata,
+    * else `read`'s; `checkpointInterval` is the default, ≤ 0 disables)
+    * writes a checkpoint. Returns the committed version. */
+  private[delta] def optimisticCommit(
+      read: Option[Snapshot],
+      actionsAt: Long => Seq[Action],
+      readPredicate: AddFile => Boolean,
+      staged: Seq[String],
+      checkpointInterval: Int = 10,
+      retriable: Boolean = true): Long = {
+    def lose(w: Long, why: String, cause: Throwable): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"$why at version $w in $tablePath; commit aborted", cause)
+    var v = read.fold(0L)(_.version + 1)
+    var attempt = 0
+    var actions = actionsAt(v)
+    try {
+      val removed = actions.collect { case r: RemoveFile => r.path }.toSet
+      val appIds = actions.collect { case t: SetTransaction => t.appId }.toSet
+      val blindAppend = actions.exists {
+        case ci: CommitInfo => ci.isBlindAppend.contains(true)
+        case _ => false
+      }
+      var committed = false
+      while (!committed) {
+        attempt += 1
+        try { writeCommit(v, actions); committed = true }
+        catch {
+          case e: java.util.ConcurrentModificationException =>
+            if (!retriable || attempt >= MaxCommitAttempts) throw e
+            val head = latestVersion
+            (v to head).foreach(w => readCommitActions(w).foreach {
+              case _: MetadataAction | _: Protocol =>
+                lose(w, "Concurrent metadata/protocol change", e)
+              case t: SetTransaction if appIds(t.appId) =>
+                lose(w, s"Concurrent transaction for appId ${t.appId}", e)
+              case _: DomainMetadata if !blindAppend =>
+                lose(w, "Concurrent domain-metadata change", e)
+              case r: RemoveFile if removed(r.path) =>
+                lose(w, s"Write-write conflict: ${r.path} was concurrently removed", e)
+              case a: AddFile if a.dataChange && readPredicate(a) =>
+                lose(w, "Phantom conflict: added rows our read predicate may match", e)
+              case _ => ()
+            })
+            v = head + 1
+            actions = actionsAt(v)
+        }
+      }
+    } catch {
+      case e: java.util.ConcurrentModificationException =>
+        staged.foreach(p =>
+          try fs.delete(new Path(DeltaRead.resolvePath(tablePath, p)), false)
+          catch { case _: java.io.IOException => () })
+        throw e
+    }
+    val meta = actions.collectFirst { case m: MetadataAction => m }.orElse(read.map(_.metadata))
+    if (checkpointInterval > 0 && v > 0 &&
+      v % meta.fold(checkpointInterval)(checkpointIntervalOf(_, checkpointInterval)) == 0)
+      writeCheckpoint(v)
+    v
+  }
+
   private def readSmallFile(p: Path): String = {
     val in = fs.open(p)
     try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -1225,6 +1306,9 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
 object DeltaLog {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.delta")
+
+  /** Attempts [[DeltaLog.optimisticCommit]] makes before a lost race aborts. */
+  private val MaxCommitAttempts = 20
 
   /** The `N.crc` version-checksum body for a snapshot — the delta-spark
     * sibling-file convention (table size, file count, protocol, metadata

@@ -292,9 +292,7 @@ object DeltaMaintenance {
             stats = Some(DeltaWrite.harvestStats(fs.getConf, dest, harvestSchema)))
         }
       fs.delete(tmp, true)
-      removes :::= files.map(f => RemoveFile(f.path, Some(now), dataChange = false,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector)).toList
+      removes :::= files.map(_.remove(now, dataChange = false)).toList
       (adds, removes)
     }
 
@@ -342,30 +340,22 @@ object DeltaMaintenance {
         (RowTracking.MaterializedCommitVersionProp -> rcv)))
     }
     // OPTIMIZE/REORG is dataChange=false: it makes no claim about rows it
-    // did not read, so a concurrent APPEND never conflicts — the new files
-    // simply stay uncompacted. A lost race rebases through the same
-    // conflict matrix as DML (commitDmlWithRetry) with addMayConflict
-    // pinned false; genuine conflicts — a winner removing one of OUR
-    // input files (concurrent DML/OPTIMIZE on the same files), or a
+    // did not read, so its read predicate matches nothing and a concurrent
+    // APPEND never conflicts — the new files simply stay uncompacted.
+    // Genuine conflicts — a winner removing one of OUR input files
+    // (concurrent DML/OPTIMIZE on the same files), or a
     // metadata/protocol/domain change (stale plan, stale row-id
-    // watermark) — still abort, and the staged rewrites are cleaned up.
+    // watermark) — abort, and the staged rewrites are deleted.
     // Versioned bits (readVersion, row-id assignment) recompute per
     // attempt; the watermark BASE from `snap` stays valid because any
     // winner that moved it carries a DomainMetadata action, which aborts.
-    def actionsAt(readV: Long): Seq[Action] = {
+    def actionsAt(v: Long): Seq[Action] = {
       val (rtAdds, rtDomain) = RowTracking.assign(rtEnabled,
-        RowTracking.highWaterMark(snap), adds, readV + 1)
-      Seq(commitInfo.copy(readVersion = Some(readV))) ++
+        RowTracking.highWaterMark(snap), adds, v)
+      Seq(commitInfo.copy(readVersion = Some(v - 1))) ++
         metaActs ++ rtDomain ++ rtAdds ++ removes
     }
-    try DeltaDml.commitDmlWithRetry(log, path, snap.version + 1,
-      rv => actionsAt(rv), removes.map(_.path).toSet, _ => false)
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        adds.foreach(a =>
-          fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-        throw e
-    }
+    log.optimisticCommit(Some(snap), actionsAt, _ => false, staged = adds.map(_.path))
     (snap.activeFiles.size, snap.activeFiles.size - removes.size + adds.size)
   }
 

@@ -376,10 +376,7 @@ object DeltaTableOps {
     val domainActs = snap.domainMetadata.toSeq.map { case (d, cfg) =>
       DomainMetadata(d, cfg)
     }
-    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(f =>
-      RemoveFile(f.path, Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(_.remove(now))
     tgtLog.writeCommit(commitV, Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes)
     CloneResult(commitV, adds.size)
   }
@@ -493,10 +490,7 @@ object DeltaTableOps {
     val domainActs = snap.domainMetadata.toSeq.map { case (d, cfg) =>
       DomainMetadata(d, cfg)
     }
-    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(f =>
-      RemoveFile(f.path, Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(_.remove(now))
     tgtLog.writeCommit(commitV, Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes)
     CloneResult(commitV, adds.size)
   }
@@ -534,10 +528,7 @@ object DeltaTableOps {
     if (missingPaths.isEmpty || dryRun)
       return FsckResult(snap.version, missingPaths.size.toLong)
     val now = System.currentTimeMillis()
-    val removes = snap.activeFiles.filter(f => missingPaths.contains(f.path)).map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = snap.activeFiles.filter(f => missingPaths.contains(f.path)).map(_.remove(now))
     val ci = CommitInfo(now, "FSCK",
       operationMetrics = Map("numRemovedFiles" -> removes.size.toString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
@@ -1248,10 +1239,7 @@ object DeltaTableOps {
     DeltaWrite.requireNotAppendOnly(snap, "TRUNCATE")
     if (snap.activeFiles.isEmpty) return TruncateResult(snap.version, 0L, 0L)
     val now = System.currentTimeMillis()
-    val removes = snap.activeFiles.map(f =>
-      RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-        extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-        size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = snap.activeFiles.map(_.remove(now))
     val statRows = snap.activeFiles.map(f =>
       StatsPruning.parse(f.stats).flatMap(_.numRecords).map(_ - f.dvCardinality))
     val removedRows: Long =
@@ -1928,9 +1916,7 @@ object DeltaTableOps {
       .map(_.copy(dataChange = true))
     val removes = current.activeFiles
       .filterNot(f => targetIncs.contains(incarnation(f.path, f.deletionVector)))
-      .map(f => RemoveFile(f.path, Some(now), dataChange = true,
-        partitionValues = f.partitionValues, size = Some(f.size),
-        deletionVector = f.deletionVector))
+      .map(_.remove(now))
     if (removes.nonEmpty) DeltaWrite.requireNotAppendOnly(current, "RESTORE")
 
     // a restored file — or its target incarnation's DV file — may have

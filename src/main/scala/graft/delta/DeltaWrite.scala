@@ -584,11 +584,7 @@ object DeltaWrite {
             f.partitionValues.get(physOf.getOrElse(p.column, p.column)).flatMap(Option(_)),
             fieldTypes.getOrElse(p.column, org.apache.spark.sql.types.StringType), p))))
       }
-    val removes: Seq[RemoveFile] =
-      replaced.map(f =>
-        RemoveFile(f.path, deletionTimestamp = Some(now), dataChange = true,
-          extendedFileMetadata = Some(true), partitionValues = f.partitionValues,
-          size = Some(f.size), deletionVector = f.deletionVector))
+    val removes = replaced.map(_.remove(now))
 
     // CDF overwrite: a cdc-less overwrite commit would read back as pure
     // inserts (the removes are invisible to the feed's fallback), so the
@@ -688,71 +684,11 @@ object DeltaWrite {
     // re-commit at the new head unless an interleaved commit logically
     // conflicts). Anything else — create, overwrite, schema change, a
     // row-id allocation (whose watermark base a concurrent allocator
-    // would invalidate) — loses the race outright; clean up the staged
-    // files either way on failure.
+    // would invalidate) — loses the race outright. Either way a lost
+    // commit deletes the staged data and cdc files.
     val retriable = mode == "append" && !isNew && metadata.isEmpty && !rtEnabled
-    val committedVersion =
-      try commitWithRetry(log, version, actionsAt, retriable, txn)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // add.path is URI-encoded; resolvePath decodes exactly like the
-          // read/vacuum paths do, so escaped partition dirs delete correctly
-          adds.foreach(a => fs.delete(new Path(DeltaRead.resolvePath(path, a.path)), false))
-          deleteCdc(fs, path, cdcActions)
-          throw e
-      }
-
-    // the table property (delta.checkpointInterval) overrides the
-    // caller's default cadence — the commit's own metadata wins when the
-    // same commit sets it
-    val ckInterval = metadata.orElse(existing.map(_.metadata))
-      .map(DeltaLog.checkpointIntervalOf(_, checkpointInterval))
-      .getOrElse(checkpointInterval)
-    if (checkpointInterval > 0 && ckInterval > 0 && committedVersion > 0 &&
-      committedVersion % ckInterval == 0)
-      log.writeCheckpoint(committedVersion)
-  }
-
-  /** Attempt the commit at `firstVersion`; on a lost race, when
-    * `retriable`, check every interleaved winner for logical conflicts
-    * with a blind append — a metadata (schema) or protocol change, or a
-    * SetTransaction for our own appId (an idempotent sink's duplicate
-    * batch) — and re-commit at the new head. Returns the version that
-    * actually committed. */
-  private[delta] def commitWithRetry(
-      log: DeltaLog,
-      firstVersion: Long,
-      actionsAt: Long => Seq[Action],
-      retriable: Boolean,
-      txn: Option[SetTransaction],
-      maxAttempts: Int = 20): Long = {
-    var v = firstVersion
-    var attempt = 0
-    while (true) {
-      try {
-        log.writeCommit(v, actionsAt(v))
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (!retriable || attempt >= maxAttempts) throw e
-          val latest = log.latestVersion
-          (v to latest).foreach { iv =>
-            log.readCommitActions(iv).foreach {
-              case _: MetadataAction => throw new java.util.ConcurrentModificationException(
-                s"Concurrent metadata change at version $iv; append aborted")
-              case _: Protocol => throw new java.util.ConcurrentModificationException(
-                s"Concurrent protocol change at version $iv; append aborted")
-              case t: SetTransaction if txn.exists(_.appId == t.appId) =>
-                throw new java.util.ConcurrentModificationException(
-                  s"Concurrent transaction for appId ${t.appId} at version $iv; append aborted")
-              case _ => ()
-            }
-          }
-          v = latest + 1
-      }
-    }
-    v // unreachable
+    log.optimisticCommit(existing, actionsAt, _ => false,
+      staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval, retriable)
   }
 
   /** Stage `df` as (hive-partitioned) parquet under `stagingDir`, move

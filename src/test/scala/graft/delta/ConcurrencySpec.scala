@@ -29,10 +29,10 @@ class ConcurrencySpec extends GraftSuite {
     GraftDelta.toDelta(Seq((1L, "a")).toDF("id", "v"), path)
     val log = DeltaLog.forTable(spark, path)
     plainCommit(log, 1) // someone else won version 1
-    val got = DeltaWrite.commitWithRetry(log, 1L,
+    val got = log.optimisticCommit(Some(log.snapshot(Some(0L))),
       v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
         Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-      retriable = true, txn = None)
+      _ => false, staged = Nil)
     assert(got == 2L, s"retry must land at version 2, got $got")
     assert(log.latestVersion == 2L)
   }
@@ -48,10 +48,10 @@ class ConcurrencySpec extends GraftSuite {
       schemaString = meta.schema.json, partitionColumns = Nil,
       configuration = Map.empty, createdTime = None)))
     intercept[java.util.ConcurrentModificationException] {
-      DeltaWrite.commitWithRetry(log, 1L,
+      log.optimisticCommit(Some(log.snapshot(Some(0L))),
         v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
           Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-        retriable = true, txn = None)
+        _ => false, staged = Nil)
     }
 
     val path2 = tmp()
@@ -59,16 +59,18 @@ class ConcurrencySpec extends GraftSuite {
     val log2 = DeltaLog.forTable(spark, path2)
     plainCommit(log2, 1, Seq(SetTransaction("sink-app", 7L)))
     intercept[java.util.ConcurrentModificationException] {
-      DeltaWrite.commitWithRetry(log2, 1L,
+      log2.optimisticCommit(Some(log2.snapshot(Some(0L))),
         v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
-          Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-        retriable = true, txn = Some(SetTransaction("sink-app", 8L)))
+          Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true)),
+          SetTransaction("sink-app", 8L)),
+        _ => false, staged = Nil)
     }
     // a different appId does not conflict
-    val ok = DeltaWrite.commitWithRetry(log2, 1L,
+    val ok = log2.optimisticCommit(Some(log2.snapshot(Some(0L))),
       v => Seq(CommitInfo(Instant.now().toEpochMilli, "WRITE",
-        Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true))),
-      retriable = true, txn = Some(SetTransaction("other-app", 1L)))
+        Map("mode" -> "Append"), Map.empty, Some(v - 1), Some(true)),
+        SetTransaction("other-app", 1L)),
+      _ => false, staged = Nil)
     assert(ok == 2L)
   }
 
@@ -114,8 +116,8 @@ class ConcurrencySpec extends GraftSuite {
       CommitInfo(1L, "DELETE", readVersion = Some(rv), isBlindAppend = Some(false)),
       RemoveFile(fileA.path, Some(1L), dataChange = true,
         partitionValues = fileA.partitionValues))
-    def attempt(v: Long) = DeltaDml.commitDmlWithRetry(
-      log, path, v, ourActions, Set(fileA.path), matcher)
+    def attempt(v: Long) = log.optimisticCommit(
+      Some(log.snapshot(Some(v - 1))), cv => ourActions(cv - 1), matcher, staged = Nil)
 
     // disjoint blind append to partition b → rebase succeeds at head+1
     plainCommit(log, 1, Seq(AddFile("p=b/w1.parquet", Map("p" -> "b"))))
@@ -144,16 +146,17 @@ class ConcurrencySpec extends GraftSuite {
     assert(attempt(6) == 7L)
   }
 
-  /** Start a watcher that fires `winner` the moment compact's staging dir
-    * appears under the table root — i.e. deterministically INSIDE the
-    * window between OPTIMIZE's snapshot and its commit attempt. */
-  private def raceIntoCompactWindow(path: String)(winner: => Unit): Thread = {
+  /** Start a watcher that fires `winner` the moment an operation's staging
+    * dir (named `prefix`…) appears under the table root — i.e.
+    * deterministically INSIDE the window between the operation's snapshot
+    * and its commit attempt. */
+  private def raceIntoStagingWindow(path: String, prefix: String)(winner: => Unit): Thread = {
     val t = new Thread(() => {
       val root = new java.io.File(path)
       val deadline = System.currentTimeMillis() + 30000
       while (System.currentTimeMillis() < deadline &&
         !Option(root.listFiles()).exists(_.exists(
-          _.getName.startsWith(".graft_compact_")))) Thread.sleep(1)
+          _.getName.startsWith(prefix)))) Thread.sleep(1)
       winner
     })
     t.start()
@@ -174,7 +177,7 @@ class ConcurrencySpec extends GraftSuite {
       .find(_.getName.endsWith(".parquet")).get
     val appended = new java.io.File(path, "appended.parquet")
     Files.move(part.toPath, appended.toPath)
-    val watcher = raceIntoCompactWindow(path) {
+    val watcher = raceIntoStagingWindow(path, ".graft_compact_") {
       log.writeCommit(3L, Seq(
         CommitInfo(Instant.now().toEpochMilli, "WRITE",
           operationParameters = Map("mode" -> "Append"),
@@ -207,7 +210,7 @@ class ConcurrencySpec extends GraftSuite {
     // the winner DVs the victim: remove + same-path re-add with a DV
     // descriptor — the protocol shape of a concurrent DV DELETE. The
     // write-write rule must catch the remove of OPTIMIZE's input file.
-    val watcher = raceIntoCompactWindow(path) {
+    val watcher = raceIntoStagingWindow(path, ".graft_compact_") {
       log.writeCommit(2L, Seq(
         CommitInfo(Instant.now().toEpochMilli, "DELETE",
           readVersion = Some(1L), isBlindAppend = Some(false)),
@@ -229,6 +232,75 @@ class ConcurrencySpec extends GraftSuite {
       .filter(_.getName.endsWith(".c.snappy.parquet"))
     assert(debris.isEmpty, s"aborted OPTIMIZE must clean its staged files: ${debris.toSeq}")
     assert(log.latestVersion == 2L)
+  }
+
+  /** A domain-metadata winner aborts only commits that are not blind
+    * appends: an append's actions assume nothing about a clustering
+    * domain, a DML's plan does. The winner is the CLUSTER BY commit shape
+    * on a table already at writer 7 with `clustering`: commitInfo plus
+    * the `delta.clustering` domain, no protocol action. */
+  test("a blind append rebases past a clustering-domain winner; DML aborts on it") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta(Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), path) // v0
+    DeltaTableOps.clusterBy(spark, path, Seq("id"))                                  // v1
+    val log = DeltaLog.forTable(spark, path)
+    val w1 = raceIntoStagingWindow(path, ".graft_staging_") {
+      DeltaTableOps.clusterBy(spark, path, Seq("v"))                                 // v2
+    }
+    GraftDelta.toDelta(Seq((3L, "c")).toDF("id", "v"), path, mode = "append")        // v3
+    w1.join()
+    assert(log.readCommitActions(2L).collect { case p: Protocol => p }.isEmpty)
+    val hist = DeltaTableOps.history(spark, path)
+      .select("version", "operation").as[(Long, String)].collect().toMap
+    assert(hist(2L) == "CLUSTER BY" && hist(3L) == "WRITE", hist.toString)
+
+    val w2 = raceIntoStagingWindow(path, ".graft_dml_") {
+      DeltaTableOps.clusterBy(spark, path, Seq("id"))                                // v4
+    }
+    val e = intercept[java.util.ConcurrentModificationException](
+      DeltaDml.delete(spark, path, Seq(Seq(Predicate("id", "==", 1L)))))
+    w2.join()
+    assert(e.getMessage.contains("domain-metadata"), e.getMessage)
+    assert(log.latestVersion == 4L)
+    assert(GraftDelta.readDelta(spark, path).select($"id").as[Long].collect().sorted
+      .sameElements(Seq(1L, 2L, 3L)), "the appended row committed; the aborted delete did not")
+  }
+
+  test("a DV UPDATE on a CDF table that loses a write-write race leaves no staged files") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta((1L to 4L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1), path,
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))                 // v0
+    val log = DeltaLog.forTable(spark, path)
+    val victim = log.snapshot(None).activeFiles.head
+    val root = new java.io.File(path)
+    def files(): Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
+          .filterNot(_.getName == "_delta_log").flatMap(walk)
+        else Seq(f)
+      walk(root).map(_.getPath.stripPrefix(root.getPath)).toSet
+    }
+    val before = files()
+    // the winner removes the file the UPDATE DVs, once the UPDATE has
+    // written its DV file and is staging its postimage rows
+    val watcher = raceIntoStagingWindow(path, ".graft_dml_") {
+      log.writeCommit(1L, Seq(
+        CommitInfo(Instant.now().toEpochMilli, "DELETE",
+          readVersion = Some(0L), isBlindAppend = Some(false)),
+        RemoveFile(victim.path, Some(Instant.now().toEpochMilli),
+          dataChange = true, partitionValues = victim.partitionValues)))
+    }
+    val e = intercept[java.util.ConcurrentModificationException](
+      DeltaDml.updateWithDv(spark, path, Seq(Seq(Predicate("id", "==", 2L))),
+        Map("v" -> org.apache.spark.sql.functions.lit("x"))))
+    watcher.join()
+    assert(e.getMessage.contains("Write-write"), e.getMessage)
+    assert(log.latestVersion == 1L, "the head is the winner's version")
+    val debris = files() -- before
+    assert(debris.isEmpty,
+      s"the lost UPDATE must delete its DV, staged parquet and _change_data files: $debris")
   }
 
   /** Identity allocation and row-id allocation are version-dependent and

@@ -52,7 +52,7 @@ class FuzzRacyFs extends RawLocalFileSystem {
   * ConcurrentModificationException by design — those are counted, their
   * effects excluded from the expectation, and the invariants hold across
   * whichever interleaving the scheduler produced. Appends are retriable
-  * (commitWithRetry rebases past disjoint winners) so they virtually
+  * (optimisticCommit rebases past disjoint winners) so they virtually
   * always land; the seed guarantees the op MIX is reproducible even
   * though the interleaving is not.
   */

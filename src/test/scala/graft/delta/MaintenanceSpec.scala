@@ -638,6 +638,19 @@ class MaintenanceSpec extends GraftSuite {
         Map("delta.checkpointInterval" -> "0")), 10) == 10)
   }
 
+  test("OPTIMIZE honors the delta.checkpointInterval cadence") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta(Seq((1L, "a")).toDF("id", "v"), path,
+      configuration = Map("delta.checkpointInterval" -> "2"))               // v0
+    GraftDelta.toDelta(Seq((2L, "b")).toDF("id", "v"), path, mode = "append") // v1
+    assert(DeltaMaintenance.compact(spark, path) == ((2, 1)))                // v2
+    val log = DeltaLog.forTable(spark, path)
+    assert(log.latestVersion == 2L)
+    assert(log.listCheckpointVersions == Seq(2L),
+      s"OPTIMIZE at v2 must checkpoint under interval 2: ${log.listCheckpointVersions}")
+  }
+
   test("multi-part checkpoints replay like single-file ones (foreign writers)") {
     import spark.implicits._
     val path = tmp()
