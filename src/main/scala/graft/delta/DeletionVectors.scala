@@ -253,7 +253,8 @@ object DeletionVectors {
       spark: org.apache.spark.sql.SparkSession, tableRoot: Path,
       files: Seq[AddFile]): Map[String, Array[Byte]] = {
     val carriers = files.filter(_.deletionVector.isDefined)
-    if (carriers.size <= DistributedLoadThreshold)
+    if (carriers.isEmpty) Map.empty
+    else if (carriers.size <= DistributedLoadThreshold)
       dvByteMap(tableRoot.getFileSystem(spark.sessionState.newHadoopConf()), tableRoot, carriers)
     else {
       val confBc = spark.sparkContext.broadcast(

@@ -1264,59 +1264,11 @@ object DeltaDml {
 
   private[delta] def readFiles(
       spark: SparkSession, path: String, snap: Snapshot, files: Seq[AddFile],
-      keepMeta: Boolean = false): DataFrame = {
-    val dvFiles = files.filter(_.deletionVector.isDefined)
-    val dvBytes =
-      if (dvFiles.isEmpty) Map.empty[String, Array[Byte]]
-      else DeletionVectors.dvByteMap(spark, new Path(path), dvFiles)
-    if (DeltaRead.mappingModeOf(snap) != "none")
-      // mapped tables read physical names + log-sourced partition values,
-      // renamed back to the logical schema (DV bitmaps apply on the raw
-      // scan inside); DML's predicates/assignments stay logical
-      DeltaRead.mappedScan(spark, path, snap, files, dvBytes, keepMeta)
-    else {
-      val absolute = files.map(f => DeltaRead.resolvePath(path, f.path))
-      val rootPrefix = path.stripSuffix("/") + "/"
-      if (absolute.forall(_.startsWith(rootPrefix)))
-        DeletionVectors.applyFilter(
-          spark.read
-            .format("parquet")
-            .schema(snap.schema)
-            .option("basePath", path)
-            .load(absolute: _*),
-          dvBytes)
-      else if (snap.partitionColumns.isEmpty)
-        // shallow-clone DML: absolute add paths under ANOTHER table's
-        // root — basePath would refuse the cross-root file index
-        DeletionVectors.applyFilter(
-          spark.read.format("parquet").schema(snap.schema).load(absolute: _*),
-          dvBytes)
-      else {
-        // partitioned clone DML: hive discovery can't span roots; the
-        // LOG carries the partition values — per-group scan with typed
-        // literals (mirrors DeltaRead's clone read branch). `_metadata`
-        // materializes as a regular column because Union does not
-        // propagate hidden metadata columns; dropped again when the
-        // caller didn't ask for it (a staging write must never see it).
-        val partCols = snap.partitionColumns.toSet
-        val partFields = snap.schema.fields.filter(f => partCols.contains(f.name))
-        val dataSchema = org.apache.spark.sql.types.StructType(
-          snap.schema.fields.filterNot(f => partCols.contains(f.name)))
-        val ordered = snap.schema.fieldNames.toSeq :+ "_metadata"
-        val union = files.groupBy(_.partitionValues).map { case (pv, group) =>
-          val g = spark.read.format("parquet").schema(dataSchema)
-            .load(group.map(f => DeltaRead.resolvePath(path, f.path)): _*)
-          partFields.foldLeft(g) { (d, f) =>
-            d.withColumn(f.name,
-              lit(pv.get(f.name).flatMap(Option(_)).orNull).cast(f.dataType))
-          }.withColumn("_metadata", col("_metadata"))
-            .select(ordered.map(col): _*)
-        }.reduce(_ unionByName _)
-        val filtered = DeletionVectors.applyFilter(union, dvBytes)
-        if (keepMeta) filtered else filtered.drop("_metadata")
-      }
-    }
-  }
+      keepMeta: Boolean = false): DataFrame =
+    // DML's predicates/assignments stay logical; DV bitmaps apply on the
+    // raw scan inside
+    DeltaRead.scan(spark, path, snap.metadata, files,
+      DeletionVectors.dvByteMap(spark, new Path(path), files), keepMeta)
 
   /** Normalizes a resolvePath output (ALREADY URI-decoded, possibly
     * scheme-qualified) to a bare scheme-less path. `Path.toUri` re-encodes

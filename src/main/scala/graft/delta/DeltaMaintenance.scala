@@ -60,7 +60,7 @@ object DeltaMaintenance {
     val log = DeltaLog.forTable(spark, path)
     val snap = log.snapshot(None)
     // Column-mapped tables OPTIMIZE through the same logical-read /
-    // physical-write machinery as DML: mappedScan reads physical names
+    // physical-write machinery as DML: DeltaRead.scan reads physical names
     // back to the logical schema, physicalizeForWrite renames the
     // compacted output to its on-disk shape, and stats/partition dirs
     // are physical-keyed (the append path's contract).
@@ -118,8 +118,6 @@ object DeltaMaintenance {
     // would silently drop columns past the bound on wide tables.
     val statsSchema = DeltaWrite.statsSchemaOf(
       snap.schema, snap.partitionColumns, snap.metadata.configuration)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.schema.fields.filterNot(f => snap.partitionColumns.contains(f.name)))
     // under column mapping, staged files and their stats carry PHYSICAL
     // names (the same fields, renamed/retyped) and hive dirs use the
     // physical partition-column names with physical-keyed values
@@ -143,7 +141,7 @@ object DeltaMaintenance {
     // but never surface for copied rows.
     // (composes with column mapping: the materialized columns are
     // unmapped PHYSICAL parquet names pinned in table config, read and
-    // written through the mapped scan's extraPhysical seam)
+    // written through DeltaRead.scan's extraPhysical seam)
     val rtEnabled = RowTracking.enabled(snap)
     val matCols: Option[(String, String)] =
       if (!rtEnabled) None
@@ -171,15 +169,11 @@ object DeltaMaintenance {
         name -> (f.baseRowId.get, f.defaultRowCommitVersion.getOrElse(-1L))
       }.toMap)))
     }
-    val readSchema = matCols match {
-      case Some((rid, rcv)) => org.apache.spark.sql.types.StructType(
-        dataSchema.fields :+
-          org.apache.spark.sql.types.StructField(rid,
-            org.apache.spark.sql.types.LongType, nullable = true) :+
-          org.apache.spark.sql.types.StructField(rcv,
-            org.apache.spark.sql.types.LongType, nullable = true))
-      case None => dataSchema
-    }
+    val matFields = matCols.toSeq.flatMap { case (rid, rcv) => Seq(
+      org.apache.spark.sql.types.StructField(rid,
+        org.apache.spark.sql.types.LongType, nullable = true),
+      org.apache.spark.sql.types.StructField(rcv,
+        org.apache.spark.sql.types.LongType, nullable = true)) }
 
     // Each partition group rewrites as its OWN Spark job; running them
     // from one driver thread serializes the cluster. A bounded pool
@@ -190,7 +184,6 @@ object DeltaMaintenance {
         : (List[AddFile], List[RemoveFile]) = {
       var adds = List.empty[AddFile]
       var removes = List.empty[RemoveFile]
-      val paths = files.map(f => DeltaRead.resolvePath(path, f.path))
       val numOut = math.max(1, (files.map(_.size).sum / targetFileBytes).toInt)
       // pv keys (and hive dir names) are physical under column mapping
       val partitionDir = dirPartCols.map { c =>
@@ -202,52 +195,29 @@ object DeltaMaintenance {
       // out of the data (they live in the path). Deletion vectors are
       // applied — OPTIMIZE is exactly where DVs get materialized away
       // (the compacted files carry no DV and no deleted rows).
-      val dvBytes = {
-        val dvFiles = files.filter(_.deletionVector.isDefined)
-        if (dvFiles.isEmpty) Map.empty[String, Array[Byte]]
-        else DeletionVectors.dvByteMap(fs, new Path(path), dvFiles)
-      }
+      val dvBytes = DeletionVectors.dvByteMap(fs, new Path(path), files)
+      // logical-name frame (physical read + rename inside for mapped
+      // tables); partition values are dropped — they live in the output
+      // path. A previous OPTIMIZE's materialized row-id columns ride
+      // along as unmapped extraPhysical fields
+      val scan = DeltaRead.scan(spark, path, snap.metadata, files, dvBytes,
+        keepMeta = rtBcast.isDefined, extraPhysical = matFields)
       val df = (matCols, rtBcast) match {
         case (Some((rid, rcv)), Some(bcast)) =>
           import org.apache.spark.sql.functions.coalesce
           // preserved id = materialized value if a previous OPTIMIZE
           // already stamped one, else the file's baseRowId arithmetic
-          val filtered =
-            if (mapped)
-              // logical-name frame; DVs applied inside; the materialized
-              // columns ride along as unmapped extraPhysical fields
-              DeltaRead.mappedScan(spark, path, snap, files, dvBytes,
-                keepMeta = true, extraPhysical = Seq(
-                  org.apache.spark.sql.types.StructField(rid,
-                    org.apache.spark.sql.types.LongType, nullable = true),
-                  org.apache.spark.sql.types.StructField(rcv,
-                    org.apache.spark.sql.types.LongType, nullable = true)))
-                .drop(snap.partitionColumns: _*)
-                .withColumn("__rt_path", col("_metadata.file_path"))
-                .withColumn("__rt_idx", col("_metadata.row_index"))
-                .drop("_metadata")
-            else {
-              val scan = spark.read.schema(readSchema).parquet(paths: _*)
-                .withColumn("__rt_path", col("_metadata.file_path"))
-                .withColumn("__rt_idx", col("_metadata.row_index"))
-              DeletionVectors.applyFilter(scan, dvBytes)
-            }
-          filtered
+          scan
+            .withColumn("__rt_path", col("_metadata.file_path"))
+            .withColumn("__rt_idx", col("_metadata.row_index"))
             .withColumn(rid, coalesce(col(rid),
               org.apache.spark.sql.graft.RowIdExpressions
                 .rowId(bcast, col("__rt_path"), col("__rt_idx"))))
             .withColumn(rcv, coalesce(col(rcv),
               org.apache.spark.sql.graft.RowIdExpressions
                 .commitVersion(bcast, col("__rt_path"))))
-            .drop("__rt_path", "__rt_idx")
-        case _ if mapped =>
-          // logical-name frame (physical read + rename inside); partition
-          // values arrive as literal columns — dropped, they live in the
-          // output path like the plain branch
-          DeltaRead.mappedScan(spark, path, snap, files, dvBytes)
-            .drop(snap.partitionColumns: _*)
-        case _ => DeletionVectors.applyFilter(
-          spark.read.schema(dataSchema).parquet(paths: _*), dvBytes)
+            .drop("__rt_path" +: "__rt_idx" +: "_metadata" +: snap.partitionColumns: _*)
+        case _ => scan.drop(snap.partitionColumns: _*)
       }
       val clustered =
         if (effSortBy.isEmpty) df.coalesce(numOut)

@@ -60,9 +60,6 @@ object DeltaRead {
       columns: Seq[String] = Nil,
       filters: Seq[Seq[Predicate]] = Nil
   ): DataFrame = {
-    val schema = snap.schema
-    val partCols = snap.partitionColumns.toSet
-
     // (a) log-level partition pruning: evaluate partition predicates
     // against add.partitionValues so pruned files are never planned —
     // the layer that keeps 100 TB plans small (SURVEY.md §4).
@@ -71,151 +68,16 @@ object DeltaRead {
     // Deletion vectors: bitmap bytes per DV-carrying file, applied right
     // on each parquet scan (where `_metadata.row_index` resolves); files
     // without a DV pay nothing.
-    val dvBytes = {
-      val dvFiles = files.filter(_.deletionVector.isDefined)
-      if (dvFiles.isEmpty) Map.empty[String, Array[Byte]]
-      else DeletionVectors.dvByteMap(spark, new org.apache.hadoop.fs.Path(path), dvFiles)
-    }
+    val dvBytes = DeletionVectors.dvByteMap(spark, new Path(path), files)
 
-    if (mappingModeOf(snap) == "name" || mappingModeOf(snap) == "id")
-      return finishProjection(
-        mappedScan(spark, path, snap, files, dvBytes), schema, partCols, columns, filters)
-
-    val base = if (files.isEmpty) {
-      // Empty-table branch (SURVEY.md §2 ⑨): correct schema, 0 rows.
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val absolute = files.map(f => resolvePath(path, f.path))
-      val rootPrefix = path.stripSuffix("/") + "/"
-      if (absolute.forall(_.startsWith(rootPrefix))) {
-        // basePath restores hive partition columns; the explicit schema makes
-        // pre-evolution files surface absent columns as nulls (⑧) and casts
-        // partition-dir strings to their declared types.
-        DeletionVectors.applyFilter(
-          spark.read
-            .format("parquet")
-            .schema(schema)
-            .option("basePath", path)
-            .load(absolute: _*),
-          dvBytes)
-      } else if (snap.partitionColumns.isEmpty) {
-        // absolute-path adds (shallow clones) live under ANOTHER table's
-        // root — no basePath; partition columns don't exist, so none of
-        // the hive recovery is needed
-        DeletionVectors.applyFilter(
-          spark.read.format("parquet").schema(schema).load(absolute: _*), dvBytes)
-      } else {
-        // partitioned table with outside-root files: hive discovery can't
-        // span roots, but the LOG is the source of truth for partition
-        // values anyway (delta protocol) — ONE scan over every file with
-        // the values attached per-row from a broadcast file→values index
-        // inside whole-stage codegen (the DvProbe/RowIdOf pattern). The
-        // per-group union alternative builds one relation per partition
-        // value: at 10k+ partitions that is a 10k-node plan whose
-        // analyzer cost and driver memory scale with partition count.
-        val partFields = schema.fields.filter(f => partCols.contains(f.name))
-        val dataSchema = StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
-        val scan = DeletionVectors.applyFilter(
-          spark.read.format("parquet").schema(dataSchema).load(absolute: _*), dvBytes)
-        attachLogPartitionValues(spark, scan, files, absolute, partFields.toIndexedSeq, identity)
-          .select(schema.fieldNames.map(col).toSeq: _*)
-      }
-    }
-
-    finishProjection(base, schema, partCols, columns, filters)
-  }
-
-  /** The cdc-plane twin of [[mappedScan]]: `_change_data` files of a
-    * column-mapped table carry PHYSICAL data-column names beside the
-    * protocol's `_change_type` column (which has no mapping id and binds
-    * by its own name in both modes); partition values attach from the
-    * physical-keyed action partitionValues via the broadcast index. */
-  private[graft] def mappedCdcScan(
-      spark: SparkSession, path: String, snap: Snapshot,
-      files: Seq[AddCDCFile],
-      streaming: Boolean = false): DataFrame = {
-    val schema = snap.schema
-    val byId = mappingModeOf(snap) == "id"
-    val readSession = if (byId) fieldIdReadSession(spark) else spark
-    val partCols = snap.partitionColumns
-    val physOf: Map[String, String] =
-      schema.fields.map(f => f.name -> physicalNameOf(f)).toMap
-    val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
-    val ct = ChangeFeed.ChangeTypeCol
-    val readSchema = StructType(
-      (if (byId) fieldIdSchema(StructType(dataFields)).fields
-       else dataFields.map(f =>
-         StructField(physicalNameOf(f), physicalize(f.dataType), f.nullable))) :+
-        StructField(ct, StringType, nullable = false))
-    val shims = files.map(c => AddFile(c.path, c.partitionValues, c.size))
-    val resolved = shims.map(f => resolvePath(path, f.path))
-    val g =
-      if (streaming) org.apache.spark.sql.graft.StreamingBridge
-        .streamingParquetBatch(readSession, resolved, readSchema, Map.empty)
-      else readSession.read.format("parquet").schema(readSchema).load(resolved: _*)
-    val partFields = schema.fields.filter(f => partCols.contains(f.name))
-    val withPv =
-      if (partFields.isEmpty) g
-      else attachLogPartitionValues(spark, g, shims, resolved,
-        partFields.toIndexedSeq.map(f => f.copy(name = s"__graft_pv_${f.name}")),
-        n => physOf.getOrElse(n.stripPrefix("__graft_pv_"), n.stripPrefix("__graft_pv_")))
-    val renamed = dataFields.map(f =>
-      (if (byId) col(f.name) else col(physicalNameOf(f)).cast(f.dataType)).as(f.name)) ++
-      partFields.map(f => col(s"__graft_pv_${f.name}").as(f.name)) :+ col(ct)
-    withPv.select(renamed.toIndexedSeq: _*)
-      .select((schema.fieldNames.toSeq :+ ct).map(col): _*)
-  }
-
-  /** Attach a partitioned table's log-carried partition values to a
-    * single-relation scan of its files: one broadcast file→values index,
-    * one codegen'd lookup per partition column keyed on
-    * `_metadata.file_path` — plan size stays O(1) in the partition
-    * count. `pvKeyOf` maps a logical partition field name to its
-    * partitionValues key (physical name under column mapping).
-    * Delta file names embed UUIDs, so basenames are unique; a collision
-    * (corrupt or adversarial log) refuses rather than mis-attributing. */
-  private def attachLogPartitionValues(
-      spark: SparkSession,
-      scan: DataFrame,
-      files: Seq[AddFile],
-      resolvedPaths: Seq[String],
-      partFields: Seq[StructField],
-      pvKeyOf: String => String): DataFrame = {
-    val keys = partFields.map(f => pvKeyOf(f.name))
-    // keys are the RESOLVED (uri-decoded) basenames — what
-    // `_metadata.file_path` carries at scan time, same as RowIdIndex.
-    // Delta file names embed UUIDs, so basenames are unique; if a log
-    // nevertheless collides (a shallow clone aggregating outside-root
-    // files from multiple sources), fall back to keying the index by the
-    // decoded FULL path instead of refusing the scan.
-    val byName = files.zip(resolvedPaths).map { case (f, p) =>
-      val name = p.substring(p.lastIndexOf('/') + 1)
-      name -> keys.map(k => f.partitionValues.get(k).flatMap(Option(_)).orNull).toArray
-    }
-    val collides = byName.map(_._1).distinct.size != byName.size
-    val idx =
-      if (!collides) spark.sparkContext.broadcast(new PartValueIndex(byName.toMap))
-      else {
-        val byPath = files.zip(resolvedPaths).map { case (f, p) =>
-          PartValueIndex.fileSideKey(p) ->
-            keys.map(k => f.partitionValues.get(k).flatMap(Option(_)).orNull).toArray
-        }
-        require(byPath.map(_._1).distinct.size == byPath.size,
-          "duplicate resolved data-file paths in one scan — corrupt log")
-        spark.sparkContext.broadcast(new PartValueIndex(byPath.toMap, fullPath = true))
-      }
-    val pathCol = col("_metadata.file_path")
-    partFields.zipWithIndex.foldLeft(scan) { case (d, (f, i)) =>
-      d.withColumn(f.name,
-        org.apache.spark.sql.graft.PartValueExpressions
-          .partValue(idx, i, pathCol).cast(f.dataType))
-    }
+    finishProjection(scan(spark, path, snap.metadata, files, dvBytes),
+      snap.partitionColumns.toSet, columns, filters)
   }
 
   /** (b) residual row-level filter → Catalyst → parquet row-group
     * pushdown, then the projection. */
   private def finishProjection(
-      base: DataFrame, schema: StructType, partCols: Set[String],
+      base: DataFrame, partCols: Set[String],
       columns: Seq[String], filters: Seq[Seq[Predicate]]): DataFrame = {
     val dataFilters = filters
       .map(_.filterNot(p => partCols.contains(p.column)))
@@ -231,8 +93,10 @@ object DeltaRead {
 
   // ---- Column mapping (delta.columnMapping.mode = name) ------------------
 
-  private[graft] def mappingModeOf(snap: Snapshot): String =
-    snap.metadata.configuration.getOrElse("delta.columnMapping.mode", "none")
+  private[graft] def mappingModeOf(snap: Snapshot): String = mappingModeOf(snap.metadata)
+
+  private def mappingModeOf(meta: MetadataAction): String =
+    meta.configuration.getOrElse("delta.columnMapping.mode", "none")
 
   /** A field's on-disk (parquet) name under column mapping. */
   private[delta] def physicalNameOf(f: StructField): String =
@@ -289,39 +153,53 @@ object DeltaRead {
     s2
   }
 
-  /** Scan of a column-mapped table. Mode `name`: parquet files carry
-    * PHYSICAL field names (col-<uuid>) at every nesting level — read
-    * with the physical schema, then rename back in one projection
-    * (nested renames ride on struct cast-by-position). Mode `id`:
-    * parquet files carry FIELD IDS — read with the logical schema
-    * stamped with `parquet.field.id` under Spark's field-id matching, no
-    * rename needed. In both modes `add.partitionValues` is keyed by
-    * physical partition names while `metaData.partitionColumns` and the
-    * surfaced schema are logical; partition values are attached as typed
-    * literals straight from the log (the hive dirs are physical-named,
-    * so basePath recovery would surface the wrong column names). */
-  /** `keepMeta` additionally surfaces the scan's `_metadata` struct as a
-    * regular column (the DML paths need file_path/row_index through the
-    * logical rename projection, which would otherwise drop it). */
-  /** `extraPhysical` surfaces columns that exist ONLY in the parquet
-    * files under unmapped physical names (the row-tracking materialized
-    * id columns): appended to the read schema verbatim, matched by name,
-    * never renamed — files lacking them read null. Under mode `id` this
-    * yields a MIXED read schema (field-id data columns + id-less extras);
-    * Spark's fieldId.read matches per-field — id-carrying fields bind by
-    * id, id-less fields fall back to name — pinned by RowTrackingSpec
-    * "row tracking composes with ID-mode column mapping". */
-  private[graft] def mappedScan(
-      spark: SparkSession, path: String, snap: Snapshot,
+  /** The one scan over data files the log names: a parquet relation on
+    * [[org.apache.spark.sql.graft.LogFileIndex]] (no listing, partition
+    * values from the log) with the DV bitmaps in `dvBytes` applied on it,
+    * where `_metadata` resolves.
+    *
+    * Unmapped tables surface the relation itself: data columns, then
+    * partition columns. Column-mapped tables read physical names and
+    * rename back to the logical schema, in schema order. Mode `name`:
+    * parquet files carry PHYSICAL field names (col-<uuid>) at every
+    * nesting level — read with the physical schema, then rename in one
+    * projection (nested renames ride on struct cast-by-position). Mode
+    * `id`: parquet files carry FIELD IDS — read with the logical schema
+    * stamped with `parquet.field.id` in a field-id read session, no
+    * rename needed. Partition values are keyed by physical names in the
+    * log and sit under `__graft_pv_` names inside the relation, since a
+    * logical partition name may equal some data field's physical name.
+    *
+    * `keepMeta` surfaces `_metadata` as a regular column through the
+    * rename (unmapped scans keep it as the relation's hidden column).
+    * `streaming` tags the relation as a micro-batch. `extraPhysical`
+    * surfaces columns that exist ONLY in the parquet files under unmapped
+    * physical names (the row-tracking materialized id columns, cdc's
+    * `_change_type`): appended to the read schema verbatim, matched by
+    * name, never renamed — files lacking them read null. Under mode `id`
+    * this yields a MIXED read schema (field-id data columns + id-less
+    * extras); Spark's fieldId.read matches per-field — id-carrying fields
+    * bind by id, id-less fields fall back to name — pinned by
+    * RowTrackingSpec "row tracking composes with ID-mode column mapping". */
+  private[graft] def scan(
+      spark: SparkSession, path: String, meta: MetadataAction,
       files: Seq[AddFile], dvBytes: Map[String, Array[Byte]] = Map.empty,
       keepMeta: Boolean = false,
       streaming: Boolean = false,
       extraPhysical: Seq[StructField] = Nil): DataFrame = {
-    val schema = snap.schema
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val byId = mappingModeOf(snap) == "id"
+    val schema = meta.schema
+    val mode = mappingModeOf(meta)
+    val partCols = meta.partitionColumns
+    val dataFields = schema.fields.toSeq.filterNot(f => partCols.contains(f.name))
+    // partitionColumns order: the hive directory order of the layout
+    val partFields = partCols.flatMap(c => schema.fields.find(_.name == c))
+    if (mode == "none")
+      return DeletionVectors.applyFilter(
+        org.apache.spark.sql.graft.LogFileIndex.scan(spark, path, files,
+          StructType(dataFields ++ extraPhysical), StructType(partFields),
+          partFields.map(_.name), streaming),
+        dvBytes)
+    val byId = mode == "id"
     // Field-id matching must be ON when this scan's parquet reader is
     // built (at physical planning, from the scan relation's session conf)
     // — but flipping the caller's session conf as a read side effect
@@ -330,37 +208,15 @@ object DeltaRead {
     // so the flag travels with the plan even when the frame is later
     // combined and executed under the caller's session.
     val readSession = if (byId) fieldIdReadSession(spark) else spark
-    val partCols = snap.partitionColumns
-    val physOf: Map[String, String] =
-      schema.fields.map(f => f.name -> physicalNameOf(f)).toMap
-    val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
-    val readSchema = StructType(
-      (if (byId) fieldIdSchema(StructType(dataFields))
-       else StructType(dataFields.map(f =>
-         StructField(physicalNameOf(f), physicalize(f.dataType), f.nullable))))
-        .fields ++ extraPhysical)
-    val partFields = schema.fields.filter(f => partCols.contains(f.name))
-    // ONE relation over every file; partition values attach per-row from
-    // the broadcast file→values index (physical-keyed pv entries), so the
-    // plan stays O(1) in the partition count — same shape as the plain
-    // outside-root branch. DVs apply on the raw physical scan, where
-    // _metadata resolves — bitmaps are keyed by file NAME, independent of
-    // column mapping. Values land under collision-proof temp names: a
-    // logical partition name may equal some data field's PHYSICAL name.
-    val resolved = files.map(f => resolvePath(path, f.path))
-    // `streaming` roots the relation as a streaming-tagged
-    // LogicalRelation (the micro-batch source contract); the rename
-    // projection and DV probe compose identically on top
-    val base =
-      if (streaming) org.apache.spark.sql.graft.StreamingBridge
-        .streamingParquetBatch(readSession, resolved, readSchema, Map.empty)
-      else readSession.read.format("parquet").schema(readSchema).load(resolved: _*)
-    val g = DeletionVectors.applyFilter(base, dvBytes)
-    val withPv =
-      if (partFields.isEmpty) g
-      else attachLogPartitionValues(spark, g, files, resolved,
-        partFields.toIndexedSeq.map(f => f.copy(name = s"__graft_pv_${f.name}")),
-        n => physOf.getOrElse(n.stripPrefix("__graft_pv_"), n.stripPrefix("__graft_pv_")))
+    val readSchema =
+      (if (byId) fieldIdSchema(StructType(dataFields)).fields.toSeq
+       else dataFields.map(f =>
+         StructField(physicalNameOf(f), physicalize(f.dataType), f.nullable))) ++ extraPhysical
+    val pvFields = partFields.map(f => f.copy(name = s"__graft_pv_${f.name}"))
+    val g = DeletionVectors.applyFilter(
+      org.apache.spark.sql.graft.LogFileIndex.scan(readSession, path, files,
+        StructType(readSchema), StructType(pvFields), partFields.map(physicalNameOf), streaming),
+      dvBytes)
     val renamed = dataFields.map(f =>
       (if (byId) col(f.name) else col(physicalNameOf(f)).cast(f.dataType)).as(f.name)) ++
       partFields.map(f => col(s"__graft_pv_${f.name}").as(f.name)) ++
@@ -368,8 +224,17 @@ object DeltaRead {
       (if (keepMeta) Seq(col("_metadata").as("_metadata")) else Nil)
     val ordered = schema.fieldNames.toSeq ++ extraPhysical.map(_.name) ++
       (if (keepMeta) Seq("_metadata") else Nil)
-    withPv.select(renamed.toIndexedSeq: _*).select(ordered.map(col): _*)
+    g.select(renamed: _*).select(ordered.map(col): _*)
   }
+
+  /** [[scan]] over `_change_data` files: the data columns plus the
+    * protocol's `_change_type` (no mapping id, bound by its own name). */
+  private[graft] def scanCdc(
+      spark: SparkSession, path: String, meta: MetadataAction,
+      files: Seq[AddCDCFile], streaming: Boolean = false): DataFrame =
+    scan(spark, path, meta, files.map(c => AddFile(c.path, c.partitionValues, c.size)),
+      streaming = streaming,
+      extraPhysical = Seq(StructField(ChangeFeed.ChangeTypeCol, StringType, nullable = false)))
 
   /** Two-level log-side file pruning, before any scan exists:
     * (1) partition-column conjuncts evaluated exactly against each add's

@@ -1103,7 +1103,7 @@ object DeltaTableOps {
     // row tracking composes: the materialized row-id columns are never
     // schema fields — they bind by PHYSICAL parquet name (stored in table
     // config), which renames under mapping can't re-bind; the row-id scan
-    // reads them through mappedScan's extraPhysical seam
+    // reads them through DeltaRead.scan's extraPhysical seam
     // identity columns compose: the watermark harvest translates to
     // physical stats keys (DeltaWrite.identityRebase)
     // mapped scans apply DVs on the raw physical scan (bitmaps are keyed
@@ -2048,30 +2048,15 @@ object DeltaTableOps {
     require(fromVersion <= hi,
       s"tableChanges range is empty: ($fromVersion, $hi]")
     val hiSnap = log.snapshot(Some(hi))
-    val mapped = DeltaRead.mappingModeOf(hiSnap) != "none"
     val schema = hiSnap.schema
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // mapped tables read physical names back to the logical schema on
-    // BOTH planes (data adds via mappedScan, cdc files via its cdc twin)
-    def scan(files: Seq[AddFile]) =
-      if (mapped) DeltaRead.mappedScan(spark, path, hiSnap, files)
-      else spark.read
-        .schema(schema)
-        .option("basePath", path)
-        .parquet(files.map(a => DeltaRead.resolvePath(path, a.path)): _*)
+    // both planes (data adds, cdc files) scan with hi's schema, from the
+    // log's file lists
+    def scan(files: Seq[AddFile]) = DeltaRead.scan(spark, path, hiSnap.metadata, files)
     def scanWithMeta(files: Seq[AddFile]) =
-      if (mapped) DeltaRead.mappedScan(spark, path, hiSnap, files, keepMeta = true)
-      else scan(files)
-    // cdc files carry _change_type physically; partition columns ride
-    // the hive dirs under _change_data/ exactly like the data plane
-    def scanCdc(files: Seq[AddCDCFile]) =
-      if (mapped) DeltaRead.mappedCdcScan(spark, path, hiSnap, files)
-      else spark.read
-        .schema(StructType(schema.fields :+
-          StructField(ChangeFeed.ChangeTypeCol, StringType, nullable = false)))
-        .option("basePath", new Path(path, "_change_data").toString)
-        .parquet(files.map(c => DeltaRead.resolvePath(path, c.path)): _*)
+      DeltaRead.scan(spark, path, hiSnap.metadata, files, keepMeta = true)
+    def scanCdc(files: Seq[AddCDCFile]) = DeltaRead.scanCdc(spark, path, hiSnap.metadata, files)
     val commits = ((fromVersion + 1) to hi).map(v => v -> log.readCommitActions(v))
     // all DV bitmap diffs across the range load in one batched pass
     // (one Spark job beyond the threshold) instead of per-commit

@@ -974,10 +974,12 @@ object DeltaWrite {
       if (perFile.forall(_.isDefined))
         Some(if (ic.step > 0) perFile.flatten.max else perFile.flatten.min)
       else {
-        val paths = nonEmpty.map { case (a, _) => DeltaRead.resolvePath(path, a.path) }
+        // the one physical column, read as an unmapped one-column table
         val agg = if (ic.step > 0) max(col(pk(ic.name))) else min(col(pk(ic.name)))
-        val row = spark.read.schema(StructType(Seq(StructField(pk(ic.name), LongType))))
-          .parquet(paths: _*).agg(agg).collect()(0)
+        val column = MetadataAction(id = "",
+          schemaString = StructType(Seq(StructField(pk(ic.name), LongType))).json)
+        val row = DeltaRead.scan(spark, path, column, nonEmpty.map(_._1))
+          .agg(agg).collect()(0)
         if (row.isNullAt(0)) None else Some(row.getLong(0))
       }
     }

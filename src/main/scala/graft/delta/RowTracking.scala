@@ -162,57 +162,23 @@ object RowTracking {
     val bcast = spark.sparkContext.broadcast(new RowIdIndex(byName))
     val root = new Path(path)
     val dvBytes = DeletionVectors.dvByteMap(spark, root, files)
-    val absolute = files.map(f => DeltaRead.resolvePath(path, f.path))
     // OPTIMIZE-compacted files carry materialized id columns (preserved
     // ids of copied rows); older files read them as null and fall back
-    // to the baseRowId arithmetic via coalesce — one read schema for all
+    // to the baseRowId arithmetic via coalesce — one read schema for all.
+    // They ride the shared scan as unmapped extraPhysical fields (never
+    // schema columns, so renames can't re-bind them — binding is by
+    // physical parquet name)
     val matCols = materializedColNames(snap)
-    val live = if (DeltaRead.mappingModeOf(snap) != "none") {
-      // column-mapped table: physical→logical rename, log-attached
-      // partition values and DV filtering all come from the shared
-      // mapped scan; the materialized id columns ride along as unmapped
-      // extraPhysical fields (they are never schema columns, so renames
-      // can't re-bind them — binding is by physical parquet name)
-      val matPhys = matCols.toSeq.flatMap { case (rid, rcv) => Seq(
-        org.apache.spark.sql.types.StructField(rid,
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField(rcv,
-          org.apache.spark.sql.types.LongType, nullable = true)) }
-      DeltaRead.mappedScan(spark, path, snap, files, dvBytes,
-        keepMeta = true, extraPhysical = matPhys)
-        .withColumn("__rt_path", col("_metadata.file_path"))
-        .withColumn("__rt_idx", col("_metadata.row_index"))
-        .drop("_metadata")
-    } else {
-      // absolute-path adds (shallow clones) live under ANOTHER table's
-      // root — basePath only when every file sits under ours (mirrors
-      // DeltaRead's clone-aware scan; row tracking refuses partitioned
-      // foreign-root tables rather than mis-recovering hive columns)
-      val underRoot = {
-        val rootStr = root.toUri.getPath
-        absolute.forall(p => new Path(p).toUri.getPath.startsWith(rootStr))
-      }
-      val readSchema = matCols match {
-        case Some((rid, rcv)) => org.apache.spark.sql.types.StructType(
-          snap.schema.fields :+
-            org.apache.spark.sql.types.StructField(rid,
-              org.apache.spark.sql.types.LongType, nullable = true) :+
-            org.apache.spark.sql.types.StructField(rcv,
-              org.apache.spark.sql.types.LongType, nullable = true))
-        case None => snap.schema
-      }
-      val reader = spark.read.schema(readSchema)
-      val base =
-        if (underRoot) reader.option("basePath", path).parquet(absolute: _*)
-        else if (snap.partitionColumns.isEmpty) reader.parquet(absolute: _*)
-        else throw new IllegalStateException(
-          "row-id reads of a PARTITIONED table with outside-root files " +
-            "(shallow clone) are not supported")
-      val scan = base
-        .withColumn("__rt_path", col("_metadata.file_path"))
-        .withColumn("__rt_idx", col("_metadata.row_index"))
-      DeletionVectors.applyFilter(scan, dvBytes)
-    }
+    val matPhys = matCols.toSeq.flatMap { case (rid, rcv) => Seq(
+      org.apache.spark.sql.types.StructField(rid,
+        org.apache.spark.sql.types.LongType, nullable = true),
+      org.apache.spark.sql.types.StructField(rcv,
+        org.apache.spark.sql.types.LongType, nullable = true)) }
+    val live = DeltaRead.scan(spark, path, snap.metadata, files, dvBytes,
+      keepMeta = true, extraPhysical = matPhys)
+      .withColumn("__rt_path", col("_metadata.file_path"))
+      .withColumn("__rt_idx", col("_metadata.row_index"))
+      .drop("_metadata")
     val freshId = org.apache.spark.sql.graft.RowIdExpressions
       .rowId(bcast, col("__rt_path"), col("__rt_idx"))
     val freshVer = org.apache.spark.sql.graft.RowIdExpressions

@@ -40,17 +40,9 @@ object DeltaTail {
       else {
         // a DV-carrying re-add must not leak its soft-deleted rows —
         // apply the bitmap exactly like batch scans do
-        val dvBytes = graft.delta.DeletionVectors.dvByteMap(
-          spark, new org.apache.hadoop.fs.Path(path), newAdds)
-        if (DeltaRead.mappingModeOf(snap) != "none")
-          // mapped tables: physical files renamed to the logical schema
-          DeltaRead.mappedScan(spark, path, snap, newAdds, dvBytes)
-        else graft.delta.DeletionVectors.applyFilter(
-          spark.read
-            .schema(snap.schema)
-            .option("basePath", path)
-            .parquet(newAdds.map(a => DeltaRead.resolvePath(path, a.path)): _*),
-          dvBytes)
+        DeltaRead.scan(spark, path, snap.metadata, newAdds,
+          graft.delta.DeletionVectors.dvByteMap(
+            spark, new org.apache.hadoop.fs.Path(path), newAdds))
       }
     Batch(fromVersion, latest, df)
   }

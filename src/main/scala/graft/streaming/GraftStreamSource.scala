@@ -78,11 +78,6 @@ class GraftStreamSource(
   private val initSnap: graft.delta.Snapshot = log.snapshot(None)
   private val (initSchema, schemaVersion): (StructType, Long) =
     (initSnap.schema, initSnap.version)
-  /** Column-mapped tables stream through the mapped scan (physical
-    * files renamed to the logical schema, streaming-tagged); a rename
-    * mid-stream is a metadata change and fails the stream like any
-    * other schema change. */
-  private val mapped = DeltaRead.mappingModeOf(initSnap) != "none"
   override val schema: StructType =
     if (opt("changeFeed").exists(_.toBoolean))
       StructType(initSchema.fields :+
@@ -314,22 +309,9 @@ class GraftStreamSource(
     else {
       // A DV-carrying add re-emitted under ignoreChanges must not leak
       // its soft-deleted rows — apply the bitmap exactly like batch scans
-      val dvAdds = adds.filter(_.deletionVector.isDefined)
-      val dvBytes =
-        if (dvAdds.isEmpty) Map.empty[String, Array[Byte]]
-        else graft.delta.DeletionVectors.dvByteMap(
-          spark, new org.apache.hadoop.fs.Path(path), dvAdds)
-      if (mapped)
-        // physical files renamed to the logical schema, streaming-tagged
-        // (DV bitmaps apply on the raw scan inside)
-        DeltaRead.mappedScan(spark, path, initSnap, adds, dvBytes, streaming = true)
-      else graft.delta.DeletionVectors.applyFilter(
-        org.apache.spark.sql.graft.StreamingBridge.streamingParquetBatch(
-          spark,
-          adds.map(a => DeltaRead.resolvePath(path, a.path)),
-          schema,
-          Map("basePath" -> path)),
-        dvBytes)
+      DeltaRead.scan(spark, path, initSnap.metadata, adds,
+        graft.delta.DeletionVectors.dvByteMap(
+          spark, new org.apache.hadoop.fs.Path(path), adds), streaming = true)
     }
   }
 
@@ -361,14 +343,9 @@ class GraftStreamSource(
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def scan(files: Seq[AddFile]) =
-      if (mapped) DeltaRead.mappedScan(spark, path, initSnap, files, streaming = true)
-      else org.apache.spark.sql.graft.StreamingBridge.streamingParquetBatch(
-        spark, files.map(a => DeltaRead.resolvePath(path, a.path)),
-        initSchema, Map("basePath" -> path))
+      DeltaRead.scan(spark, path, initSnap.metadata, files, streaming = true)
     def scanDeleteCarriers(files: Seq[AddFile]) =
-      if (mapped) DeltaRead.mappedScan(spark, path, initSnap, files,
-        keepMeta = true, streaming = true)
-      else scan(files)
+      DeltaRead.scan(spark, path, initSnap.metadata, files, keepMeta = true, streaming = true)
     val commits = ((from + 1) to to).map { v =>
       val actions = log.readCommitActions(v)
       checkSchemaStable(v, actions)
@@ -384,16 +361,7 @@ class GraftStreamSource(
         // a CDF writer recorded this commit's exact row changes — serve
         // them exclusively; no rewrite guard applies (the cdc files ARE
         // the per-row expression of the rewrite)
-        val cdcSchema = org.apache.spark.sql.types.StructType(
-          initSchema.fields :+ org.apache.spark.sql.types.StructField(
-            graft.delta.ChangeFeed.ChangeTypeCol,
-            org.apache.spark.sql.types.StringType, nullable = false))
-        Seq((if (mapped)
-          DeltaRead.mappedCdcScan(spark, path, initSnap, plan.cdcFiles, streaming = true)
-        else org.apache.spark.sql.graft.StreamingBridge.streamingParquetBatch(
-          spark, plan.cdcFiles.map(c => DeltaRead.resolvePath(path, c.path)),
-          cdcSchema,
-          Map("basePath" -> new org.apache.hadoop.fs.Path(path, "_change_data").toString)))
+        Seq(DeltaRead.scanCdc(spark, path, initSnap.metadata, plan.cdcFiles, streaming = true)
           .withColumn(graft.delta.ChangeFeed.CommitVersionCol, lit(v))
           .withColumn(graft.delta.ChangeFeed.CommitTimestampCol,
             lit(graft.delta.ChangeFeed.commitTimestamp(fs, log.commitFile(v), actions))))

@@ -2,35 +2,14 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSparkSession}
-import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 
-/** The one internal-API touchpoint of the engine, isolated in an
-  * `org.apache.spark.sql` subpackage the way Spark's own connectors do
-  * it: a DSv1 streaming `Source.getBatch` must return a DataFrame whose
-  * logical plan is already resolved and tagged `isStreaming = true`
-  * (MicroBatchExecution asserts this). `spark.read.parquet` can't
-  * produce that, so we mirror FileStreamSource: resolve the relation
-  * eagerly and wrap it in a streaming-tagged LogicalRelation. */
+/** Streaming-plan internals, isolated in an `org.apache.spark.sql`
+  * subpackage the way Spark's own connectors do it. A DSv1 streaming
+  * `Source.getBatch` must return a DataFrame whose logical plan is
+  * already resolved and tagged `isStreaming = true` (MicroBatchExecution
+  * asserts this); file batches get that from [[LogFileIndex.scan]]. */
 object StreamingBridge {
-
-  /** Resolved vectorized-parquet scan over explicit files, tagged as a
-    * streaming batch. */
-  def streamingParquetBatch(
-      spark: SparkSession,
-      paths: Seq[String],
-      schema: StructType,
-      options: Map[String, String]): DataFrame = {
-    val cs = spark.asInstanceOf[ClassicSparkSession]
-    val ds = DataSource(
-      sparkSession = cs,
-      className = "parquet",
-      paths = paths,
-      userSpecifiedSchema = Some(schema),
-      options = options)
-    Dataset.ofRows(cs,
-      LogicalRelation(ds.resolveRelation(checkFilesExist = false), isStreaming = true))
-  }
 
   /** Re-plan a sink-delivered micro-batch as a BATCH DataFrame: DSv1
     * `Sink.addBatch` hands over an incremental-execution frame that

@@ -157,9 +157,9 @@ class GraftTableSpec extends GraftSuite {
       "DML on the clone must not touch the source")
   }
 
-  /** Partitioned-clone DML drives readFiles' per-partition-group union
-    * branch: log-sourced partition literals, `_metadata` surviving the
-    * union for the DV bitmap path, and partition-column predicates. */
+  /** Partitioned-clone DML reads files outside the clone root:
+    * log-sourced partition values, `_metadata` for the DV bitmap path,
+    * and partition-column predicates. */
   test("DML on a PARTITIONED shallow clone: rewrite and DV flavors, both scoped") {
     val srcPath = tmp()
     GraftDelta.toDelta(

@@ -240,7 +240,7 @@ class RowTrackingSpec extends GraftSuite {
 
   test("row tracking composes with ID-mode column mapping: materialized " +
       "columns read by name alongside field-id-matched data columns") {
-    // Pins the ADVICE r11 corner: mappedScan under mode 'id' appends
+    // Pins the ADVICE r11 corner: DeltaRead.scan under mode 'id' appends
     // extraPhysical fields (no parquet.field.id metadata) to a field-id
     // read schema. Spark's fieldId.read matches per-FIELD — id-carrying
     // fields bind by id, id-less fields fall back to name — so the
@@ -304,10 +304,10 @@ class RowTrackingSpec extends GraftSuite {
   }
 
   test("delta scan-path expressions COMPILE under whole-stage codegen (no silent fallback)") {
-    // Row-id/commit-version materialization (RowIdOf/RowCommitVersionOf),
-    // the DV probe, and log partition-value attachment (PartValueOf, via
-    // the shallow clone whose data files sit outside the clone root) are
-    // injected into the scan as codegen'd expressions.
+    // Row-id/commit-version materialization (RowIdOf/RowCommitVersionOf)
+    // and the DV probe are injected into the scan as codegen'd
+    // expressions; the shallow clone (data files outside the clone root)
+    // reads its partition values from the log-backed file index.
     // spark.sql.codegen.fallback=false turns a generated-code compile
     // failure into a hard error instead of a WARN + interpreted scan —
     // the RollingHash60 lesson (a wrong-package reference ran every plan
@@ -316,8 +316,7 @@ class RowTrackingSpec extends GraftSuite {
     GraftDelta.toDelta((1L to 30L).map(i => (i, s"v$i")).toDF("k", "v"), src)
     GraftDelta.enableRowTracking(spark, src)
     GraftDelta.deleteWhereWithDv(spark, src, Seq(Seq(Predicate("k", "<=", 5L))))
-    // partitioned source for the clone path (row-id reads of partitioned
-    // clones are a refused combination, so PartValueOf pins separately)
+    // partitioned source for the clone path
     val psrc = tmp()
     GraftDelta.toDelta(
       (1L to 30L).map(i => (i, i % 3, s"v$i")).toDF("k", "p", "v"),
