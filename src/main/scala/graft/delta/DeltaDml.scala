@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
-import java.util.UUID
 
 /** Predicate DML — DELETE and UPDATE on a Delta table. Beyond the
   * reference's surface (delta-rs 0.6.4 exposes neither to the Python
@@ -244,10 +243,12 @@ object DeltaDml {
     val newAdds: Seq[AddFile] =
       if (isDelete || (provenFull.isEmpty && touched.isEmpty)) Nil
       else {
-        val stagingDir = new Path(path, s".graft_dml_${UUID.randomUUID().toString.take(12)}")
-        try stageDml(withAssignments(matchedRows(), snap, assignments),
-          spark, fs, path, stagingDir, snap, version)
-        finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
+        // generated columns re-derive from the post-update row (an
+        // UPDATE of a dependency can't leave them stale)
+        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(
+          withAssignments(matchedRows(), snap, assignments), snap.schema),
+          path, version, snap.metadata, DeltaWrite.DmlFiles,
+          DeltaWrite.checkConstraintsOf(snap.metadata))
       }
 
     // CDF: the DV flavor's row-level changes are exactly the matched
@@ -262,10 +263,10 @@ object DeltaDml {
           else matchedRows().withColumn(ct, lit("update_preimage")).unionByName(
             withAssignments(matchedRows(), snap, assignments)
               .withColumn(ct, lit("update_postimage")))
-        // postimages re-derive generated columns exactly like stageDml
-        // (identity on every already-valid pre/delete row)
-        DeltaWrite.stageCdc(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
-          spark, fs, path, version, snap)
+        // postimages re-derive generated columns exactly like the
+        // rewrite (identity on every already-valid pre/delete row)
+        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
+          path, version, snap.metadata, DeltaWrite.CdcFiles)
       }
     if (matchedUses > 1) matchedCached.unpersist(blocking = false)
 
@@ -428,7 +429,6 @@ object DeltaDml {
     val affected = provenRows + touchedScanned.map(matchedOf).sum
 
     // ---- phase 2: rewrite partially-matched files -----------------------
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val version = snap.version + 1
     // On CDF tables the partial files feed BOTH the rewrite staging and
     // the cdc capture — persist the scan so they're read once, not twice
@@ -450,9 +450,9 @@ object DeltaDml {
           if (isDelete) src.filter(!matched)
           else withAssignments(src, snap, assignments,
             (c, e) => when(matched, e).otherwise(col(c)))
-        val stagingDir = new Path(path, s".graft_dml_${UUID.randomUUID().toString.take(12)}")
-        try stageDml(rewritten, spark, fs, path, stagingDir, snap, version)
-        finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
+        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(rewritten, snap.schema),
+          path, version, snap.metadata, DeltaWrite.DmlFiles,
+          DeltaWrite.checkConstraintsOf(snap.metadata))
       }
 
     // CDF: record exactly the matched rows (proven-full files are read
@@ -481,9 +481,9 @@ object DeltaDml {
           else matchedRows.withColumn(ct, lit("update_preimage")).unionByName(
             withAssignments(matchedRows, snap, assignments)
               .withColumn(ct, lit("update_postimage")))
-        // postimages re-derive generated columns exactly like stageDml
-        DeltaWrite.stageCdc(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
-          spark, fs, path, version, snap)
+        // postimages re-derive generated columns exactly like the rewrite
+        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
+          path, version, snap.metadata, DeltaWrite.CdcFiles)
       }
     if (DeltaWrite.cdfEnabled(snap))
       partialSrc.foreach(_.unpersist(blocking = false))
@@ -1003,9 +1003,9 @@ object DeltaDml {
     val adds: Seq[AddFile] = toWrite match {
       case None => Nil
       case Some(df) =>
-        val stagingDir = new Path(path, s".graft_dml_${UUID.randomUUID().toString.take(12)}")
-        try stageDml(df, spark, fs, path, stagingDir, snap, version)
-        finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
+        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(df, snap.schema),
+          path, version, snap.metadata, DeltaWrite.DmlFiles,
+          DeltaWrite.checkConstraintsOf(snap.metadata))
     }
 
     // CDF: one frame per change kind, every branch conformed to the
@@ -1050,9 +1050,9 @@ object DeltaDml {
         inserts.foreach(i => frames += conform(i.withColumn(ct, lit("insert"))))
         val all = frames.result()
         if (all.isEmpty) Nil
-        else DeltaWrite.stageCdc(
+        else DeltaWrite.stageFiles(
           DeltaWrite.withGeneratedRecomputed(all.reduce(_ unionByName _), snap.schema),
-          spark, fs, path, version, snap)
+          path, version, snap.metadata, DeltaWrite.CdcFiles)
       }
 
     // inserted = rows added minus rows carried over from rewrites (stats
@@ -1090,7 +1090,8 @@ object DeltaDml {
       inserts.foreach(_.unpersist(blocking = false))
 
     if (adds.isEmpty && removes0.isEmpty) {
-      DeltaWrite.deleteCdc(fs, path, cdcActions) // no commit will reference them
+      // no commit will reference them
+      DeltaWrite.deleteStaged(fs, path, cdcActions.map(_.path))
       return MergeResult(matchedRows, 0, 0, 0)
     }
 
@@ -1211,42 +1212,6 @@ object DeltaDml {
     }
   }
 
-  /** Scan a specific subset of the snapshot's files with the snapshot
-    * schema and hive partition columns restored. Deletion vectors are
-    * applied so a rewrite of a DV-carrying file can never resurrect its
-    * soft-deleted rows. */
-  /** Physical partition-column names of a (possibly mapped) snapshot. */
-  private def stagePartCols(snap: Snapshot): Seq[String] = {
-    val physOf = snap.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    if (DeltaRead.mappingModeOf(snap) == "none") snap.partitionColumns
-    else snap.partitionColumns.map(c => physOf.getOrElse(c, c))
-  }
-
-  /** Stage a LOGICAL rewrite/insert frame for this table: constraints and
-    * invariants enforce against logical names, then column-mapped tables
-    * rename/stamp to their physical on-disk shape (DeltaWrite
-    * .physicalizeForWrite) and partition by physical dir names — the DML
-    * twin of the plain write path's mapped staging. */
-  private def stageDml(
-      df0: DataFrame, spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      path: String, stagingDir: Path, snap: Snapshot, version: Long): Seq[AddFile] = {
-    // generated columns re-derive from the post-update row — an UPDATE
-    // of a dependency can't leave them stale (the generatedEqualityOf
-    // constraint below then holds trivially)
-    val df = DeltaWrite.withGeneratedRecomputed(df0, snap.schema)
-    val constraints = DeltaWrite.checkConstraintsOf(snap.metadata)
-    if (DeltaRead.mappingModeOf(snap) == "none")
-      DeltaWrite.stageAndMove(df, spark, fs, path, stagingDir,
-        snap.partitionColumns, version, constraints,
-        snap.metadata.configuration)
-    else
-      DeltaWrite.stageAndMove(
-        DeltaWrite.physicalizeForWrite(
-          DeltaWrite.withConstraintsEnforced(df, constraints), snap),
-        spark, fs, path, stagingDir, stagePartCols(snap), version, Nil,
-        snap.metadata.configuration)
-  }
-
   /** Per-file matched positions aggregated executor-side into serialized
     * Roaring bitmaps plus counts: (file_path, dv_blob, n). Exposed as a
     * FRAME (collected by dvMutate) so specs can pin the plan shape — the
@@ -1262,6 +1227,10 @@ object DeltaDml {
         udaf(DeletionVectors.PositionBitmapAgg).apply(col("__i")).as("__dv"),
         count(lit(1)).as("__n"))
 
+  /** Scan a specific subset of the snapshot's files with the snapshot
+    * schema and hive partition columns restored. Deletion vectors are
+    * applied so a rewrite of a DV-carrying file can never resurrect its
+    * soft-deleted rows. */
   private[delta] def readFiles(
       spark: SparkSession, path: String, snap: Snapshot, files: Seq[AddFile],
       keepMeta: Boolean = false): DataFrame =

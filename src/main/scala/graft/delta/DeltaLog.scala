@@ -929,9 +929,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
       }
     } catch {
       case e: java.util.ConcurrentModificationException =>
-        staged.foreach(p =>
-          try fs.delete(new Path(DeltaRead.resolvePath(tablePath, p)), false)
-          catch { case _: java.io.IOException => () })
+        DeltaWrite.deleteStaged(fs, tablePath, staged)
         throw e
     }
     val meta = actions.collectFirst { case m: MetadataAction => m }.orElse(read.map(_.metadata))

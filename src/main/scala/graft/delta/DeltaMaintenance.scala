@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import java.time.Instant
+import scala.util.{Failure, Try}
 
 /** Table maintenance beyond the reference's surface: small-file
   * compaction (OPTIMIZE). Many streaming/append workloads fragment a
@@ -19,18 +20,6 @@ import java.time.Instant
   */
 object DeltaMaintenance {
 
-  /** Compact the current snapshot's files. Returns (filesBefore,
-    * filesAfter). Partition boundaries are preserved.
-    *
-    * @param sortBy optional clustering columns: the rewrite range-
-    *   partitions and sorts each partition group by these, so the
-    *   compacted files carry disjoint min/max ranges and later scans
-    *   with predicates on them prune whole files (StatsPruning) — the
-    *   OPTIMIZE ... ZORDER role for single-dimension keys.
-    * @param zorder with ≥2 numeric sortBy columns: cluster by the
-    *   interleaved-bit z-value of per-column quantile buckets instead of
-    *   lexicographic order, so predicates on EVERY clustered column
-    *   prune files, not just the leading one. */
   /** REORG TABLE ... APPLY (PURGE): rewrite exactly the files that carry
     * a deletion vector, materializing the DV away (soft-deleted rows
     * physically disappear; the new files carry no DV). Visible rows are
@@ -48,6 +37,24 @@ object DeltaMaintenance {
       where: Seq[Seq[Predicate]] = Nil): (Int, Int) =
     compact(spark, path, minFilesToCompact = 1, where = where, purge = true)
 
+  /** Compact the current snapshot's files. Returns (filesBefore,
+    * filesAfter). Partition boundaries are preserved.
+    *
+    * @param sortBy optional clustering columns: the rewrite range-
+    *   partitions and sorts each partition group by these, so the
+    *   compacted files carry disjoint min/max ranges and later scans
+    *   with predicates on them prune whole files (StatsPruning) — the
+    *   OPTIMIZE ... ZORDER role for single-dimension keys.
+    * @param zorder with ≥2 numeric sortBy columns: cluster by the
+    *   interleaved-bit z-value of per-column quantile buckets instead of
+    *   lexicographic order, so predicates on EVERY clustered column
+    *   prune files, not just the leading one.
+    *
+    * Each partition group stages through DeltaWrite.stageFiles on a
+    * bounded pool. A failed group fails the compaction only after every
+    * group's job has ended, and the files the finished groups moved are
+    * deleted: a failed OPTIMIZE leaves the table tree and the log as
+    * they were. */
   def compact(
       spark: SparkSession,
       path: String,
@@ -59,12 +66,6 @@ object DeltaMaintenance {
       purge: Boolean = false): (Int, Int) = {
     val log = DeltaLog.forTable(spark, path)
     val snap = log.snapshot(None)
-    // Column-mapped tables OPTIMIZE through the same logical-read /
-    // physical-write machinery as DML: DeltaRead.scan reads physical names
-    // back to the logical schema, physicalizeForWrite renames the
-    // compacted output to its on-disk shape, and stats/partition dirs
-    // are physical-keyed (the append path's contract).
-    val mapped = DeltaRead.mappingModeOf(snap) != "none"
     // liquid clustering: a table carrying stored clustering columns
     // (delta.clustering domain) OPTIMIZEs by them when the caller names
     // no explicit layout — Z-order for ≥2 columns, range for one; an
@@ -112,26 +113,6 @@ object DeltaMaintenance {
 
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val now = Instant.now().toEpochMilli
-    // statsSchema bounds which columns HARVEST stats (first N, the
-    // dataSkippingNumIndexedCols contract); the rewrite itself must read
-    // and copy EVERY column — reading with the truncated stats schema
-    // would silently drop columns past the bound on wide tables.
-    val statsSchema = DeltaWrite.statsSchemaOf(
-      snap.schema, snap.partitionColumns, snap.metadata.configuration)
-    // under column mapping, staged files and their stats carry PHYSICAL
-    // names (the same fields, renamed/retyped) and hive dirs use the
-    // physical partition-column names with physical-keyed values
-    val harvestSchema =
-      if (!mapped) statsSchema
-      else org.apache.spark.sql.types.StructType(statsSchema.fields.map(f =>
-        org.apache.spark.sql.types.StructField(DeltaRead.physicalNameOf(f),
-          DeltaRead.physicalize(f.dataType), f.nullable)))
-    val physOfPart: Map[String, String] =
-      snap.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    val dirPartCols =
-      if (!mapped) snap.partitionColumns
-      else snap.partitionColumns.map(c => physOfPart.getOrElse(c, c))
-
     // Row tracking: OPTIMIZE only COPIES rows (dataChange=false), so the
     // protocol requires each surviving row to keep its id. The compacted
     // files carry physical materialized columns (names minted once and
@@ -180,17 +161,8 @@ object DeltaMaintenance {
     // submits groups concurrently — with many small partitions the jobs
     // overlap and OPTIMIZE wall time approaches the largest group, not
     // the sum (the delta-spark thread-pool shape).
-    def rewriteGroup(pv: Map[String, String], files: Seq[AddFile])
-        : (List[AddFile], List[RemoveFile]) = {
-      var adds = List.empty[AddFile]
-      var removes = List.empty[RemoveFile]
+    def rewriteGroup(pv: Map[String, String], files: Seq[AddFile]): Seq[AddFile] = {
       val numOut = math.max(1, (files.map(_.size).sum / targetFileBytes).toInt)
-      // pv keys (and hive dir names) are physical under column mapping
-      val partitionDir = dirPartCols.map { c =>
-        val v = pv.getOrElse(c, null)
-        val escaped = if (v == null) "__HIVE_DEFAULT_PARTITION__" else v
-        s"$c=$escaped"
-      }.mkString("/")
       // rewrite: read only this partition's files, keep partition columns
       // out of the data (they live in the path). Deletion vectors are
       // applied — OPTIMIZE is exactly where DVs get materialized away
@@ -222,67 +194,40 @@ object DeltaMaintenance {
       val clustered =
         if (effSortBy.isEmpty) df.coalesce(numOut)
         else if (effZorder && effSortBy.size >= 2) {
-          import org.apache.spark.sql.functions.col
           val z = zValueColumn(df, effSortBy)
           df.withColumn("__z", z)
             .repartitionByRange(numOut, col("__z"))
             .sortWithinPartitions(col("__z"))
             .drop("__z")
         } else {
-          val cols = effSortBy.map(org.apache.spark.sql.functions.col)
+          val cols = effSortBy.map(col)
           df.repartitionByRange(numOut, cols: _*).sortWithinPartitions(cols: _*)
         }
-      val tmp = new Path(path, s".graft_compact_${java.util.UUID.randomUUID().toString.take(12)}")
-      val staged =
-        if (!mapped) clustered
-        else DeltaWrite.physicalizeForWrite(clustered, snap,
-          exclude = snap.partitionColumns.toSet,
-          // the materialized row-id columns are already physical —
-          // carried through the select verbatim, never renamed
-          extra = matCols.toSeq.flatMap { case (rid, rcv) =>
-            Seq(col(rid), col(rcv)) })
-      staged.write.parquet(tmp.toString)
-      fs.listStatus(tmp)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .zipWithIndex.foreach { case (st, i) =>
-          val fileName =
-            f"part-${snap.version + 1}%05d-${java.util.UUID.randomUUID()}-$i%04d.c.snappy.parquet"
-          val destRel = if (partitionDir.isEmpty) fileName else s"$partitionDir/$fileName"
-          val dest = new Path(path, destRel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(st.getPath, dest))
-            throw new java.io.IOException(s"Failed to move ${st.getPath} -> $dest")
-          val status = fs.getFileStatus(dest)
-          adds ::= AddFile(
-            path = DeltaWrite.uriEncodePath(destRel),
-            partitionValues = pv,
-            size = status.getLen,
-            modificationTime = status.getModificationTime,
-            dataChange = false,
-            stats = Some(DeltaWrite.harvestStats(fs.getConf, dest, harvestSchema)))
-        }
-      fs.delete(tmp, true)
-      removes :::= files.map(_.remove(now, dataChange = false)).toList
-      (adds, removes)
+      // the materialized row-id columns are already physical — staged
+      // verbatim, never renamed
+      DeltaWrite.stageFiles(clustered, path, snap.version + 1, snap.metadata,
+        DeltaWrite.CompactedFiles(pv))
     }
 
     val groups = toCompact.toSeq
     val parallelism = math.max(1, math.min(8, groups.size))
-    val (adds, removes) =
-      if (parallelism == 1) {
-        val rs = groups.map { case (pv, files) => rewriteGroup(pv, files) }
-        (rs.flatMap(_._1).toList, rs.flatMap(_._2).toList)
-      } else {
+    val outcomes: Seq[Try[Seq[AddFile]]] =
+      if (parallelism == 1) groups.map { case (pv, files) => Try(rewriteGroup(pv, files)) }
+      else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
         try {
           import scala.concurrent.{Await, ExecutionContext, Future}
           implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          val fut = Future.sequence(groups.map { case (pv, files) =>
-            Future(rewriteGroup(pv, files)) })
-          val rs = Await.result(fut, scala.concurrent.duration.Duration.Inf)
-          (rs.flatMap(_._1).toList, rs.flatMap(_._2).toList)
+          Await.result(Future.traverse(groups) { case (pv, files) =>
+            Future(Try(rewriteGroup(pv, files))) }, scala.concurrent.duration.Duration.Inf)
         } finally pool.shutdown()
       }
+    val adds = outcomes.flatMap(_.getOrElse(Nil))
+    outcomes.collectFirst { case Failure(e) =>
+      DeltaWrite.deleteStaged(fs, path, adds.map(_.path))
+      throw e
+    }
+    val removes = groups.flatMap(_._2).map(_.remove(now, dataChange = false))
 
     val commitInfo = CommitInfo(
       timestamp = now,

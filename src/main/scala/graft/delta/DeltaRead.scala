@@ -95,7 +95,7 @@ object DeltaRead {
 
   private[graft] def mappingModeOf(snap: Snapshot): String = mappingModeOf(snap.metadata)
 
-  private def mappingModeOf(meta: MetadataAction): String =
+  private[delta] def mappingModeOf(meta: MetadataAction): String =
     meta.configuration.getOrElse("delta.columnMapping.mode", "none")
 
   /** A field's on-disk (parquet) name under column mapping. */

@@ -630,7 +630,7 @@ object DeltaTableOps {
   /** ALTER TABLE … SET TBLPROPERTIES (delta.enableChangeDataFeed=true):
     * metadata-only commit; from the NEXT commit on, every row-removing
     * write records its exact changes as `cdc` actions (DeltaWrite
-    * .stageCdc) and [[tableChanges]] serves them per-row. Upgrades the
+    * .stageFiles) and [[tableChanges]] serves them per-row. Upgrades the
     * protocol the addCheckConstraint way: legacy writers bump to 4,
     * table-features writers list 'changeDataFeed' explicitly. Refused on
     * column-mapped tables (the cdc plane is not mapped-aware) and on
@@ -1248,9 +1248,9 @@ object DeltaTableOps {
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val cdcActions =
       if (!DeltaWrite.cdfEnabled(snap)) Nil
-      else DeltaWrite.stageCdc(
+      else DeltaWrite.stageFiles(
         DeltaRead.load(spark, path).withColumn("_change_type", lit("delete")),
-        spark, fs, path, snap.version + 1, snap)
+        path, snap.version + 1, snap.metadata, DeltaWrite.CdcFiles)
     val ci = CommitInfo(now, "TRUNCATE",
       operationParameters = Map.empty,
       operationMetrics = Map(
@@ -1260,7 +1260,7 @@ object DeltaTableOps {
     try log.writeCommit(snap.version + 1, Seq(ci) ++ cdcActions ++ removes)
     catch {
       case e: Throwable =>
-        DeltaWrite.deleteCdc(fs, path, cdcActions)
+        DeltaWrite.deleteStaged(fs, path, cdcActions.map(_.path))
         throw e
     }
     TruncateResult(snap.version + 1, removes.size.toLong, removedRows)
@@ -1974,7 +1974,6 @@ object DeltaTableOps {
         val ct = ChangeFeed.ChangeTypeCol
         val removedAdds = current.activeFiles
           .filterNot(f => targetIncs.contains(incarnation(f.path, f.deletionVector)))
-        val fsc = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
         val frames = Seq.newBuilder[DataFrame]
         if (removedAdds.nonEmpty)
           frames += DeltaDml.readFiles(spark, path, current, removedAdds)
@@ -1982,8 +1981,8 @@ object DeltaTableOps {
         if (adds.nonEmpty)
           frames += DeltaDml.readFiles(spark, path, target, adds)
             .withColumn(ct, lit("insert"))
-        DeltaWrite.stageCdc(frames.result().reduce(_ unionByName _),
-          spark, fsc, path, latest + 1, current)
+        DeltaWrite.stageFiles(frames.result().reduce(_ unionByName _),
+          path, latest + 1, current.metadata, DeltaWrite.CdcFiles)
       }
     val ci = CommitInfo(now, "RESTORE",
       operationParameters = Map("version" -> toVersion.toString),

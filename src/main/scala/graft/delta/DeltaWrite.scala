@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{assert_true, coalesce, col, expr, lit, max, min, monotonically_increasing_id}
 import org.apache.spark.sql.types._
 
@@ -119,12 +120,12 @@ object DeltaWrite {
           s"(writerFeatures=${p.writerFeatures.getOrElse(Nil).mkString(",")}) — " +
           s"supported: ≤ $MaxSupportedWriterVersion, or 7 with features all in " +
           s"${DeltaLog.SupportedWriterFeatures.mkString("{", ",", "}")}")
-    // change data feed + column mapping compose: stageCdc writes the
+    // change data feed + column mapping compose: stageFiles writes the
     // cdc plane with PHYSICAL names and physical-keyed dirs (like the
     // data plane) and tableChanges renames back to the logical schema
     // generated columns are computed/validated for TOP-LEVEL fields
     // (write() computes missing ones, checkConstraintsOf enforces
-    // provided ones, stageDml recomputes on rewrite); a generation
+    // provided ones, DML rewrites recompute them); a generation
     // expression on a NESTED field can't be computed into its struct
     // without rebuilding the parent, so those still refuse
     def hasNestedGenerated(dt: DataType): Boolean = dt match {
@@ -162,7 +163,6 @@ object DeltaWrite {
       s"Unknown mode: $mode")
     val spark = df.sparkSession
     val log = DeltaLog.forTable(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
     val existing: Option[Snapshot] =
       if (log.tableExists) Some(log.snapshot(None)) else None
@@ -257,44 +257,15 @@ object DeltaWrite {
       if (existing.isDefined) existing.get.partitionColumns else partitionBy
     val version = existing.map(_.version + 1).getOrElse(0L)
 
-    // Column-mapped tables store PHYSICAL names (and, in id mode, parquet
-    // field ids) on disk: enforce constraints/invariants against the
-    // LOGICAL frame first, then rename/stamp in one projection; staging
-    // then partitions by the physical partition-column names so hive dirs
-    // and partitionValues come out physical-keyed, like delta-spark's.
-    val mappedSnap = existing.filter(s => DeltaRead.mappingModeOf(s) != "none")
-    val physOf: Map[String, String] = mappedSnap
-      .map(_.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap)
-      .getOrElse(Map.empty)
     val tableConstraints = existing match {
       case Some(s0) => checkConstraintsOf(s0.metadata)
       // a NEW table's schema comes from the frame itself — validate any
       // provided generated values against their expressions
       case None => generatedEqualityOf(dfGuarded.schema)
     }
-    val (dfStage, stagePartitionBy, stageConstraints) = mappedSnap match {
-      case Some(snap) =>
-        (physicalizeForWrite(withConstraintsEnforced(dfGuarded, tableConstraints), snap),
-          effectivePartitionBy.map(c => physOf.getOrElse(c, c)),
-          Nil)
-      case None => (dfGuarded, effectivePartitionBy, tableConstraints)
-    }
-
-    // ---- data plane: stage files with a normal Spark write job ----------
-    // Delta's timestamp type is microsecond INT64 — stage with
-    // TIMESTAMP_MICROS (Spark's default INT96 is not protocol-portable),
-    // mirroring the reference's µs coercion (writer.py:53-59).
-    val stagingDir = new Path(path, s".graft_staging_${UUID.randomUUID().toString.take(12)}")
-    // any failure from here to the commit must not leak the staging dir
-    // (a crashed write otherwise leaves orphan parquet under the table)
-    try {
-      writeStagedAndCommit(dfStage, spark, log, fs, path, stagingDir, mode,
-        effectivePartitionBy, overwriteSchema, mergeSchema, name, description, configuration,
-        checkpointInterval, txn, existing, version, replaceWhere,
-        stagePartitionBy, stageConstraints, physOf)
-    } finally {
-      if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
-    }
+    writeStagedAndCommit(dfGuarded, spark, log, path, mode,
+      effectivePartitionBy, overwriteSchema, mergeSchema, name, description, configuration,
+      checkpointInterval, txn, existing, version, replaceWhere, tableConstraints)
     // ---- write-path auto-maintenance (VERDICT r15 #3) -------------------
     // delta.autoOptimize.autoCompact (public delta-spark behavior): after
     // the commit lands, a table whose partitions accreted enough small
@@ -462,18 +433,18 @@ object DeltaWrite {
     }
 
   /** Rename a logical frame to its on-disk shape under column mapping:
-    * top-level columns take their physicalName (with `parquet.field.id`
-    * stamped from the mapping id, so id-mode readers — ours and
-    * foreign — can bind by id), nested struct fields rename via a cast
-    * to the physicalized type. id-mode tables with nested structs
-    * refuse: nested parquet field ids can't ride a cast, and a file
-    * without them would be unreadable under field-id matching. */
-  private[delta] def physicalizeForWrite(
-      df: DataFrame, snap: Snapshot,
-      exclude: Set[String] = Set.empty,
-      extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
-    val byId = DeltaRead.mappingModeOf(snap) == "id"
-    val cols = snap.schema.fields.filterNot(f => exclude.contains(f.name)).map { f =>
+    * top-level table columns take their physicalName (with
+    * `parquet.field.id` stamped from the mapping id, so id-mode readers —
+    * ours and foreign — can bind by id), nested struct fields rename via
+    * a cast to the physicalized type. Columns the table does not have
+    * (`_change_type`, row tracking's materialized columns) are already
+    * physical and pass through verbatim. id-mode tables with nested
+    * structs refuse: nested parquet field ids can't ride a cast, and a
+    * file without them would be unreadable under field-id matching. */
+  private def physicalizeForWrite(df: DataFrame, table: MetadataAction): DataFrame = {
+    val byId = DeltaRead.mappingModeOf(table) == "id"
+    val fields = table.schema.fields
+    val renamed = fields.filter(f => df.columns.contains(f.name)).map { f =>
       if (byId && f.dataType.isInstanceOf[StructType])
         throw new IllegalStateException(
           s"id-mode write with nested struct column ${f.name} is not supported " +
@@ -486,7 +457,8 @@ object DeltaWrite {
             .build())
       else c.as(DeltaRead.physicalNameOf(f))
     }
-    df.select(cols.toIndexedSeq ++ extra: _*)
+    val verbatim = df.columns.filterNot(c => fields.exists(_.name == c)).map(col)
+    df.select(renamed.toIndexedSeq ++ verbatim: _*)
   }
 
   // Continuation of write(): stage files, harvest stats, commit atomically.
@@ -494,9 +466,7 @@ object DeltaWrite {
       df: DataFrame,
       spark: SparkSession,
       log: DeltaLog,
-      fs: org.apache.hadoop.fs.FileSystem,
       path: String,
-      stagingDir: Path,
       mode: String,
       effectivePartitionBy: Seq[String],
       overwriteSchema: Boolean,
@@ -509,9 +479,7 @@ object DeltaWrite {
       existing: Option[Snapshot],
       version: Long,
       replaceWhere: Seq[Seq[Predicate]],
-      stagePartitionBy: Seq[String],
-      stageConstraints: Seq[(String, String)],
-      physOf: Map[String, String]): Unit = {
+      constraints: Seq[(String, String)]): Unit = {
     // the stats-harvest config mirrors the metadata decision below: only
     // a create or a schema-replacing overwrite installs the CALLER's
     // configuration; appends honor the table's stored properties (a
@@ -523,12 +491,18 @@ object DeltaWrite {
     // staged shape under the same effective-property decision; the
     // advisory size rides the staging ACTION so the rebalance splits to
     // the table's target file size
-    val dfShaped = optimizeWriteShape(df, stagePartitionBy, statsConfig)
+    val dfShaped = optimizeWriteShape(df, effectivePartitionBy, statsConfig)
     val advisory =
       if (dfShaped ne df) Some(targetFileBytesOf(statsConfig)) else None
+    // the layout staged for: a column-mapped table's own metadata (its
+    // physical names), else the frame's schema, so a mergeSchema append's
+    // new columns carry stats too
+    val mapped = existing.filter(s => DeltaRead.mappingModeOf(s) != "none")
+    val table = mapped.map(_.metadata)
+      .getOrElse(MetadataAction(id = "", schemaString = df.schema.json,
+        partitionColumns = effectivePartitionBy, configuration = statsConfig))
     val adds = withAdvisoryBytes(spark, advisory) {
-      stageAndMove(dfShaped, spark, fs, path, stagingDir, stagePartitionBy, version,
-        stageConstraints, statsConfig)
+      stageFiles(dfShaped, path, version, table, WriteFiles, constraints)
     }
 
     // ---- control plane: single atomic commit ---------------------------
@@ -579,6 +553,9 @@ object DeltaWrite {
         val fieldTypes = existing.get.schema.fields
           .map(f => f.name -> f.dataType).toMap
         // partitionValues are physical-keyed under column mapping
+        val physOf = mapped
+          .map(_.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap)
+          .getOrElse(Map.empty[String, String])
         existing.get.activeFiles.filter(f => replaceWhere.exists(_.forall(p =>
           DeltaRead.evalPredicate(
             f.partitionValues.get(physOf.getOrElse(p.column, p.column)).flatMap(Option(_)),
@@ -604,8 +581,7 @@ object DeltaWrite {
         // the caller's (possibly expensive) input plan a second time
         val inserts = DeltaDml.readFiles(spark, path, snap, adds)
           .withColumn(ct, lit("insert"))
-        stageCdc(deletes.unionByName(inserts),
-          spark, fs, path, version, snap)
+        stageFiles(deletes.unionByName(inserts), path, version, snap.metadata, CdcFiles)
       case _ => Nil
     }
 
@@ -691,14 +667,6 @@ object DeltaWrite {
       staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval, retriable)
   }
 
-  /** Stage `df` as (hive-partitioned) parquet under `stagingDir`, move
-    * every staged file into the table root under its protocol name, and
-    * return the AddFile actions with footer stats. The data plane shared
-    * by WRITE and the DML rewrites (DeltaDml delete/update).
-    *
-    * Serial on the driver below a threshold; above it, one Spark job does
-    * the rename + footer read per file in parallel (at 10^5-10^6 files an
-    * O(#files) serial driver phase is the write-path scale-killer). */
   /** `delta.appendOnly=true` forbids removing committed rows — DML
     * rewrites, DV soft-deletes, overwrite, restore all refuse (anything
     * that would emit a dataChange=true remove); OPTIMIZE's
@@ -826,60 +794,188 @@ object DeltaWrite {
     StructType(prefix.filterNot(f => partitionBy.contains(f.name)))
   }
 
-  private[delta] def stageAndMove(
-      df0: DataFrame,
-      spark: SparkSession,
-      fs: FileSystem,
-      path: String,
-      stagingDir: Path,
-      partitionBy: Seq[String],
-      version: Long,
-      constraints: Seq[(String, String)] = Nil,
-      tableConfig: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val df = withConstraintsEnforced(df0, constraints)
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(tsTypeKey)
-    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    try {
-      val writer = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(stagingDir.toString)
-    } finally {
-      prevTsType match {
-        case Some(v) => spark.conf.set(tsTypeKey, v)
-        case None => spark.conf.unset(tsTypeKey)
-      }
-    }
+  /** What [[stageFiles]] makes of a frame. `prefix` names the staging
+    * dir under the table root; `action` is the log action of one moved
+    * file (table-relative path, partition values, size, mtime, stats). */
+  private[delta] sealed abstract class Staged[A](val prefix: String) {
+    private[delta] def action(
+        path: String, pv: Map[String, String], size: Long, mtime: Long,
+        stats: Option[String]): A
+  }
 
-    val staged = listParquetFiles(fs, stagingDir)
-    val statsSchema = statsSchemaOf(df.schema, partitionBy, tableConfig)
-    val stagingStr = stagingDir.toString
-    val adds: Seq[AddFile] =
-      if (staged.size <= DistributedMoveThreshold) {
-        staged.zipWithIndex.map { case (st, i) =>
-          moveAndStat(fs.getConf, stagingStr, path, version, partitionBy,
-            statsSchema, st.getPath.toString, i)
-        }
-      } else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        val items = staged.zipWithIndex.map { case (st, i) => (st.getPath.toString, i) }
-        spark.sparkContext
-          .parallelize(items, math.min(64, 1 + items.size / 16))
-          .map { case (p, i) =>
-            moveAndStat(confBc.value.value, stagingStr, path, version,
-              partitionBy, statsSchema, p, i)
-          }
-          .collect().toSeq.sortBy(_.path)
+  /** Data files of a WRITE or a DML rewrite: `part-` files in the hive
+    * dirs the table's partition columns split the frame into, with
+    * footer stats and dataChange = true. */
+  private[delta] final class DataFiles(prefix: String) extends Staged[AddFile](prefix) {
+    private[delta] def action(path: String, pv: Map[String, String], size: Long,
+        mtime: Long, stats: Option[String]): AddFile =
+      AddFile(path, pv, size, mtime, dataChange = true, stats = stats)
+  }
+  private[delta] val WriteFiles = new DataFiles(".graft_staging_")
+  private[delta] val DmlFiles = new DataFiles(".graft_dml_")
+
+  /** Change-data files: `cdc-` files under `_change_data/`, split into
+    * hive dirs like data files (a foreign CDF reader resolves partition
+    * columns the same way), no stats. */
+  private[delta] case object CdcFiles extends Staged[AddCDCFile](".graft_cdc_") {
+    private[delta] def action(path: String, pv: Map[String, String], size: Long,
+        mtime: Long, stats: Option[String]): AddCDCFile = AddCDCFile(path, pv, size)
+  }
+
+  /** One OPTIMIZE group: the frame is written WITHOUT a partition split,
+    * so no sort lands over the caller's range or Z-order layout, and its
+    * files move into the group's hive dir. The adds keep the group's
+    * logged partitionValues verbatim, with dataChange = false. */
+  private[delta] final case class CompactedFiles(partitionValues: Map[String, String])
+      extends Staged[AddFile](".graft_compact_") {
+    private[delta] def action(path: String, pv: Map[String, String], size: Long,
+        mtime: Long, stats: Option[String]): AddFile =
+      AddFile(path, partitionValues, size, mtime, dataChange = false, stats = stats)
+  }
+
+  /** Stage a LOGICAL frame as files of the table `table` describes and
+    * return their actions: the one way rows become table files (WRITE,
+    * the DML rewrites, change-data files, OPTIMIZE).
+    *
+    *  - `constraints` enforce in flight on the logical frame; a
+    *    column-mapped table's columns then rename to their physical
+    *    names, hive dirs and partitionValues are physical-keyed, and
+    *    stats carry physical names (the delta-spark layout).
+    *  - The frame is written under `<table>/<out.prefix><uuid>` with
+    *    TIMESTAMP_MICROS ([[withMicrosTimestamps]]); the dir is deleted on
+    *    the way out, success or failure.
+    *  - Each staged file moves to a name derived from (version, staged
+    *    path), so a retried or speculative move finds its own completed
+    *    move. Serial on the driver up to [[DistributedMoveThreshold]]
+    *    files; above it one Spark job renames and reads footers in
+    *    parallel (at 10^5-10^6 files an O(#files) serial driver phase is
+    *    the write-path scale-killer). A failed move deletes every file
+    *    the plan named.
+    *  - Data files carry footer stats over the first
+    *    `delta.dataSkippingNumIndexedCols` table columns. */
+  private[delta] def stageFiles[A](
+      df: DataFrame,
+      path: String,
+      version: Long,
+      table: MetadataAction,
+      out: Staged[A],
+      constraints: Seq[(String, String)] = Nil): Seq[A] = {
+    val spark = df.sparkSession
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val mapped = DeltaRead.mappingModeOf(table) != "none"
+    def phys(f: StructField): StructField =
+      if (!mapped) f
+      else StructField(DeltaRead.physicalNameOf(f), DeltaRead.physicalize(f.dataType), f.nullable)
+    val physOf = table.schema.fields.map(f => f.name -> phys(f).name).toMap
+    val partCols = table.partitionColumns.map(c => physOf.getOrElse(c, c))
+    val (splitBy, groupDir) = out match {
+      case CompactedFiles(pv) => (Nil, Some(partCols.map(c =>
+        ExternalCatalogUtils.getPartitionPathString(c, pv.getOrElse(c, null))).mkString("/")))
+      case _ => (partCols, None)
+    }
+    val (namePrefix, root) = if (out == CdcFiles) ("cdc", "_change_data/") else ("part", "")
+    val statsSchema =
+      if (out == CdcFiles) None
+      else Some(StructType(statsSchemaOf(
+        table.schema, table.partitionColumns, table.configuration).fields.map(phys)))
+    val checked = withConstraintsEnforced(df, constraints)
+    val onDisk = if (mapped) physicalizeForWrite(checked, table) else checked
+    val stagingDir = new Path(path, out.prefix + UUID.randomUUID().toString.take(12))
+    try {
+      withMicrosTimestamps(spark) {
+        val w = onDisk.write.mode("overwrite")
+        (if (splitBy.nonEmpty) w.partitionBy(splitBy: _*) else w).parquet(stagingDir.toString)
       }
-    fs.delete(stagingDir, true)
-    adds
+      // (staged path, table-relative destination, partition values)
+      val plan = listParquetFiles(fs, stagingDir).zipWithIndex.map { case (st, i) =>
+        val rel = relativize(stagingDir, st.getPath) // e.g. col=1/part-...parquet
+        val dir = groupDir.getOrElse(parentDirs(rel))
+        val nameUuid = UUID.nameUUIDFromBytes(
+          s"graft-$namePrefix:$version:$rel".getBytes(StandardCharsets.UTF_8))
+        val fileName = f"$namePrefix-$version%05d-$nameUuid-$i%04d.snappy.parquet"
+        (st.getPath.toString, root + (if (dir.isEmpty) fileName else s"$dir/$fileName"),
+          partitionValuesFromPath(rel, splitBy))
+      }
+      // pure function of (conf, paths): runs on executors above the threshold
+      val move: (Configuration, String, String) => (Long, Long, Option[String]) =
+        (conf, from, destRel) => {
+          val (src, dest) = (new Path(from), new Path(path, destRel))
+          val destFs = dest.getFileSystem(conf)
+          destFs.mkdirs(dest.getParent)
+          if (!destFs.rename(src, dest) && !(!destFs.exists(src) && destFs.exists(dest)))
+            throw new java.io.IOException(s"Failed to move $src -> $dest")
+          val st = destFs.getFileStatus(dest)
+          (st.getLen, st.getModificationTime, statsSchema.map(harvestStats(conf, dest, _)))
+        }
+      val moved =
+        try {
+          if (plan.size <= DistributedMoveThreshold)
+            plan.map { case (from, to, _) => move(fs.getConf, from, to) }
+          else {
+            val confBc = spark.sparkContext.broadcast(
+              new org.apache.spark.util.SerializableConfiguration(
+                spark.sessionState.newHadoopConf()))
+            spark.sparkContext
+              .parallelize(plan.map(p => (p._1, p._2)), math.min(64, 1 + plan.size / 16))
+              .map { case (from, to) => move(confBc.value.value, from, to) }
+              .collect().toSeq
+          }
+        } catch {
+          case e: Throwable =>
+            deleteStaged(fs, path, plan.map(p => uriEncodePath(p._2)))
+            throw e
+        }
+      plan.zip(moved).map { case ((_, rel, pv), (size, mtime, stats)) =>
+        out.action(uriEncodePath(rel), pv, size, mtime, stats)
+      }
+    } finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
   }
 
   /** Above this many staged files the rename/stat phase runs as a Spark
     * job instead of a serial driver loop. */
   val DistributedMoveThreshold = 32
+
+  /** Stages in flight on a session, and the timestamp type the last one
+    * restores. */
+  private final class MicrosHold(var stages: Int, var prev: Option[String])
+  private val microsHolds = new java.util.WeakHashMap[SparkSession, MicrosHold]()
+
+  /** Run `body` with Delta's timestamp encoding: microsecond INT64
+    * (TIMESTAMP_MICROS), mirroring the reference's µs coercion
+    * (writer.py:53-59). Spark's default INT96 is not protocol-portable,
+    * and its footer carries no min/max, so timestamp data skipping
+    * would stop. Spark reads the session conf when a write plans, and
+    * OPTIMIZE's groups stage concurrently on one session: the override
+    * is held while ANY stage runs on the session — the first sets it,
+    * the last restores the caller's value — so no stage undoes another's
+    * mid-write, and the lock guards only the count, never a write. */
+  private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val hold = microsHolds.synchronized {
+      val h = microsHolds.computeIfAbsent(spark, _ => new MicrosHold(0, None))
+      if (h.stages == 0) {
+        h.prev = spark.conf.getOption(key)
+        spark.conf.set(key, "TIMESTAMP_MICROS")
+      }
+      h.stages += 1
+      h
+    }
+    try body
+    finally microsHolds.synchronized {
+      hold.stages -= 1
+      if (hold.stages == 0) hold.prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  /** Best-effort removal of staged files no commit will reference
+    * (table-relative paths as the actions spell them). */
+  private[delta] def deleteStaged(fs: FileSystem, path: String, staged: Seq[String]): Unit =
+    staged.foreach(p =>
+      try fs.delete(new Path(DeltaRead.resolvePath(path, p)), false)
+      catch { case _: java.io.IOException => () })
 
   /** Top-level generated columns: (name, generation-expression SQL). */
   private[delta] def generatedColumnsOf(schema: StructType): Seq[(String, String)] =
@@ -1009,133 +1105,6 @@ object DeltaWrite {
   private[delta] def cdfEnabled(snap: Snapshot): Boolean =
     snap.metadata.configuration.get("delta.enableChangeDataFeed")
       .exists(_.trim.equalsIgnoreCase("true"))
-
-  /** Stage `changes` — the table's columns plus a `_change_type` string
-    * column — as parquet and move the files under `_change_data/`,
-    * returning the commit's cdc actions. Hive-partitioned exactly like
-    * the data plane (partition columns live in the action's
-    * partitionValues and the dir name, not the file), so a foreign CDF
-    * reader resolves them the same way it does for data files. The
-    * changes frame is a normal distributed plan — nothing is collected;
-    * the move phase reuses the data plane's serial/distributed split. */
-  private[delta] def stageCdc(
-      changes0: DataFrame,
-      spark: SparkSession,
-      fs: FileSystem,
-      path: String,
-      version: Long,
-      snap: Snapshot): Seq[AddCDCFile] = {
-    // column-mapped tables: the cdc plane carries PHYSICAL column names
-    // and physical-keyed hive dirs/partitionValues, exactly like the
-    // data plane (a mapped-aware foreign CDF reader reconciles both the
-    // same way); `_change_type` stays by its protocol name
-    val (changes, partitionBy) =
-      if (DeltaRead.mappingModeOf(snap) == "none")
-        (changes0, snap.partitionColumns)
-      else {
-        val physOf = snap.schema.fields
-          .map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-        (physicalizeForWrite(changes0, snap,
-          extra = Seq(col(ChangeFeed.ChangeTypeCol))),
-          snap.partitionColumns.map(c => physOf.getOrElse(c, c)))
-      }
-    val stagingDir = new Path(path, s".graft_cdc_${UUID.randomUUID().toString.take(12)}")
-    try {
-      val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-      val prevTsType = spark.conf.getOption(tsTypeKey)
-      spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-      try {
-        val w = changes.write.mode("overwrite")
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-          .parquet(stagingDir.toString)
-      } finally prevTsType match {
-        case Some(v) => spark.conf.set(tsTypeKey, v)
-        case None => spark.conf.unset(tsTypeKey)
-      }
-      val staged = listParquetFiles(fs, stagingDir)
-      val moveOne: (Configuration, String, Int) => AddCDCFile = (conf, stagedPath, i) => {
-        val st = new Path(stagedPath)
-        val sfs = st.getFileSystem(conf)
-        val rel = relativize(stagingDir, st)
-        val pv = partitionValuesFromPath(rel, partitionBy)
-        val dirs = parentDirs(rel)
-        val nameUuid = UUID.nameUUIDFromBytes(
-          s"graft-cdc:$version:$rel".getBytes(StandardCharsets.UTF_8))
-        val fileName = f"cdc-$version%05d-$nameUuid-$i%04d.snappy.parquet"
-        val destRel =
-          "_change_data/" + (if (dirs.isEmpty) fileName else s"$dirs/$fileName")
-        val dest = new Path(path, destRel)
-        sfs.mkdirs(dest.getParent)
-        if (!sfs.rename(st, dest) && !(!sfs.exists(st) && sfs.exists(dest)))
-          throw new java.io.IOException(s"Failed to move $st -> $dest")
-        AddCDCFile(uriEncodePath(destRel), pv, sfs.getFileStatus(dest).getLen)
-      }
-      if (staged.size <= DistributedMoveThreshold)
-        staged.zipWithIndex.map { case (st, i) =>
-          moveOne(fs.getConf, st.getPath.toString, i)
-        }
-      else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        val items = staged.zipWithIndex.map { case (st, i) => (st.getPath.toString, i) }
-        spark.sparkContext
-          .parallelize(items, math.min(64, 1 + items.size / 16))
-          .map { case (sp, i) => moveOne(confBc.value.value, sp, i) }
-          .collect().toSeq.sortBy(_.path)
-      }
-    } finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
-  }
-
-  /** Best-effort removal of already-moved cdc files after a failed
-    * commit (the commit is the only thing that makes them reachable). */
-  private[delta] def deleteCdc(
-      fs: FileSystem, path: String, cdc: Seq[AddCDCFile]): Unit =
-    cdc.foreach(c =>
-      try fs.delete(new Path(DeltaRead.resolvePath(path, c.path)), false)
-      catch { case _: java.io.IOException => () })
-
-  /** Move one staged file to its final name and build its AddFile with
-    * footer stats. Pure function of (conf, paths) — runs on executors in
-    * the distributed path. IDEMPOTENT under task retry / speculation: the
-    * destination name is derived deterministically from (version, staged
-    * relative path), and a missing source with an existing destination is
-    * treated as a prior attempt's completed move, not a failure. */
-  private def moveAndStat(
-      conf: Configuration,
-      stagingDir: String,
-      tablePath: String,
-      version: Long,
-      partitionBy: Seq[String],
-      statsSchema: StructType,
-      stagedPath: String,
-      idx: Int): AddFile = {
-    val staged = new Path(stagedPath)
-    val fs = staged.getFileSystem(conf)
-    val rel = relativize(new Path(stagingDir), staged) // e.g. col=1/part-...parquet
-    val partitionValues = partitionValuesFromPath(rel, partitionBy)
-    val partitionDir = parentDirs(rel)
-    val nameUuid = UUID.nameUUIDFromBytes(
-      s"graft:$version:$rel".getBytes(StandardCharsets.UTF_8))
-    val fileName = f"part-$version%05d-$nameUuid-$idx%04d.snappy.parquet"
-    val destRel = if (partitionDir.isEmpty) fileName else s"$partitionDir/$fileName"
-    val dest = new Path(tablePath, destRel)
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(staged, dest)) {
-      val alreadyMoved = !fs.exists(staged) && fs.exists(dest)
-      if (!alreadyMoved)
-        throw new java.io.IOException(s"Failed to move $staged -> $dest")
-    }
-    val destStatus = fs.getFileStatus(dest)
-    val stats = harvestStats(conf, dest, statsSchema)
-    AddFile(
-      path = uriEncodePath(destRel),
-      partitionValues = partitionValues,
-      size = destStatus.getLen,
-      modificationTime = destStatus.getModificationTime,
-      dataChange = true,
-      stats = Some(stats))
-  }
 
   /** The Delta protocol stores `add.path` URI-encoded (delta-spark
     * behavior): encode each segment of the on-disk relative path. */

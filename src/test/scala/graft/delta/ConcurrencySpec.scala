@@ -210,6 +210,7 @@ class ConcurrencySpec extends GraftSuite {
     // the winner DVs the victim: remove + same-path re-add with a DV
     // descriptor — the protocol shape of a concurrent DV DELETE. The
     // write-write rule must catch the remove of OPTIMIZE's input file.
+    val treeBefore = TestBase.tableTree(path)
     val watcher = raceIntoStagingWindow(path, ".graft_compact_") {
       log.writeCommit(2L, Seq(
         CommitInfo(Instant.now().toEpochMilli, "DELETE",
@@ -227,11 +228,16 @@ class ConcurrencySpec extends GraftSuite {
     watcher.join()
     assert(e.getMessage.contains("Write-write") ||
       Option(e.getCause).exists(_.getMessage.contains("Write-write")), e.toString)
-    // staged rewrites were cleaned up — no orphan .c.snappy.parquet debris
-    val debris = new java.io.File(path).listFiles()
-      .filter(_.getName.endsWith(".c.snappy.parquet"))
-    assert(debris.isEmpty, s"aborted OPTIMIZE must clean its staged files: ${debris.toSeq}")
+    // staged rewrites were cleaned up: the tree outside the log is what
+    // it was, and its data files are exactly the ones the log references
+    val treeAfter = TestBase.tableTree(path)
+    assert(treeAfter == treeBefore, "aborted OPTIMIZE must clean its staged files: " +
+      s"new ${treeAfter -- treeBefore}, gone ${treeBefore -- treeAfter}")
     assert(log.latestVersion == 2L)
+    val logged = log.snapshot(None).activeFiles
+      .map(f => new org.apache.hadoop.fs.Path(DeltaRead.resolvePath(path, f.path)).toUri.getPath)
+    assert(treeAfter.filter(_.endsWith(".parquet")).map(r => s"$path/$r") == logged.toSet,
+      s"data files on disk vs log: $treeAfter vs $logged")
   }
 
   /** A domain-metadata winner aborts only commits that are not blind

@@ -4,6 +4,7 @@ import graft.streaming.DeltaSink
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Data skipping, compaction, and the exactly-once streaming sink. */
 class MaintenanceSpec extends GraftSuite {
@@ -213,6 +214,88 @@ class MaintenanceSpec extends GraftSuite {
     val snap = DeltaLog.forTable(spark, path).snapshot(None)
     val stats = snap.activeFiles.head.stats.get
     assert(stats.contains("\"c31\"") && !stats.contains("\"c32\""), stats)
+  }
+
+  test("OPTIMIZE stages timestamps as INT64 TIMESTAMP(MICROS) with min/max; ts predicates prune after it") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import spark.implicits._
+    val path = tmp()
+    // two partitions, so the two groups stage concurrently: k=0 holds
+    // 2020 timestamps, k=1 holds 2021 ones
+    def batch(i: Int) = (0 until 20).map { j =>
+      (i * 100L + j, java.sql.Timestamp.valueOf(s"${2020 + j % 2}-0${i + 1}-01 00:00:00"), j % 2)
+    }.toDF("id", "ts", "k").repartition(2)
+    GraftDelta.toDelta(batch(0), path, partitionBy = Seq("k"))
+    GraftDelta.toDelta(batch(1), path, mode = "append", partitionBy = Seq("k"))
+    GraftDelta.toDelta(batch(2), path, mode = "append", partitionBy = Seq("k"))
+    val (nBefore, nAfter) = DeltaMaintenance.compact(spark, path)
+    assert(nBefore > 2 && nAfter == 2, s"$nBefore -> $nAfter")
+    val snap = DeltaLog.forTable(spark, path).snapshot(None)
+    val conf = spark.sessionState.newHadoopConf()
+    snap.activeFiles.foreach { f =>
+      val file = new org.apache.hadoop.fs.Path(DeltaRead.resolvePath(path, f.path))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val ts =
+        try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.find(_.getName == "ts").get.asPrimitiveType
+        finally reader.close()
+      assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+          true, LogicalTypeAnnotation.TimeUnit.MICROS), s"${f.path}: $ts")
+      val st = StatsPruning.parse(f.stats)
+      assert(st.exists(s => s.min.contains("ts") && s.max.contains("ts")), s"${f.path}: ${f.stats}")
+    }
+    // ts is not a partition column: only the compacted files' stats can
+    // exclude the 2020 partition
+    val late = Seq(Seq(Predicate("ts", ">=", java.sql.Timestamp.valueOf("2021-01-01 00:00:00"))))
+    val kept = DeltaRead.prunedFiles(snap, late)
+    assert(kept.map(_.partitionValues("k")) == Seq("1"), kept)
+    assert(GraftDelta.readDelta(spark, path, filters = late).count() == 30L)
+  }
+
+  test("a failed OPTIMIZE ends every group's job, then leaves the tree and the log as they were") {
+    import spark.implicits._
+    val path = tmp()
+    val df = (0 until 400).map(i => (i.toLong, s"v$i", i % 2)).toDF("id", "v", "k")
+    GraftDelta.toDelta(df.repartition(4), path, partitionBy = Seq("k"))
+    GraftDelta.toDelta(df.repartition(4), path, mode = "append", partitionBy = Seq("k"))
+    val log = DeltaLog.forTable(spark, path)
+    val snap = log.snapshot(None)
+    // truncate one input file of k=0: that group's read fails, k=1's succeeds
+    val victim = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(DeltaRead.resolvePath(path,
+      snap.activeFiles.find(_.partitionValues("k") == "0").get.path)).toUri.getPath)
+    val bytes = Files.readAllBytes(victim)
+    Files.write(victim, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    val treeBefore = TestBase.tableTree(path)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.putIfAbsent(e.jobId, -1L)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobs.put(e.jobId, e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val thrownAt =
+      try {
+        intercept[Exception](DeltaMaintenance.compact(spark, path))
+        System.currentTimeMillis()
+      } finally {
+        // listener events arrive asynchronously; wait for every job's end
+        val deadline = System.currentTimeMillis() + 60000
+        while (jobs.containsValue(-1L) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(jobs.size >= 2, s"both groups must have run a job: $jobs")
+    assert(jobs.asScala.values.forall(t => t >= 0 && t <= thrownAt),
+      s"a group's job ended after compact threw at $thrownAt: $jobs")
+    val treeAfter = TestBase.tableTree(path)
+    assert(!treeAfter.exists(_.split('/').exists(_.startsWith(".graft_"))),
+      s"staging dirs leaked: $treeAfter")
+    assert(treeAfter == treeBefore,
+      s"new ${treeAfter -- treeBefore}, gone ${treeBefore -- treeAfter}")
+    assert(log.latestVersion == snap.version)
   }
 
   test("verbose foreign stats compact at replay; bounds stay sound, small stats verbatim") {

@@ -58,6 +58,22 @@ object TestBase {
     } finally zin.close()
     out.resolve(innerDir(name)).toString
   }
+
+  /** Every file and directory under a table root outside `_delta_log`,
+    * as root-relative paths (hidden ones included). */
+  def tableTree(path: String): Set[String] = {
+    val root = Paths.get(path)
+    val walk = Files.walk(root)
+    try {
+      val it = walk.iterator()
+      var out = Set.empty[String]
+      while (it.hasNext) {
+        val rel = root.relativize(it.next()).toString
+        if (rel.nonEmpty && !rel.startsWith("_delta_log")) out += rel
+      }
+      out
+    } finally walk.close()
+  }
 }
 
 abstract class GraftSuite extends AnyFunSuite with BeforeAndAfterAll {

@@ -183,6 +183,20 @@ class WriterSpec extends GraftSuite {
     assert(total == 100)
   }
 
+  test("above DistributedMoveThreshold staged files move and stat in one Spark job") {
+    val path = tmp()
+    val n = DeltaWrite.DistributedMoveThreshold + 8
+    GraftDelta.toDelta(spark.range(0, 20L * n).toDF().repartition(n, col("id")), path)
+    val adds = DeltaLog.forTable(spark, path).snapshot(None).activeFiles
+    assert(adds.size == n, s"${adds.size} files")
+    assert(adds.map(_.path).distinct.size == n && adds.forall(_.path.startsWith("part-00000-")))
+    val rows = adds.map(a => StatsPruning.parse(a.stats).flatMap(_.numRecords))
+    assert(rows.forall(_.isDefined) && rows.flatten.sum == 20L * n, rows)
+    assert(adds.forall(a => a.size == new java.io.File(s"$path/${a.path}").length()))
+    assert(GraftDelta.readDelta(spark, path).count() == 20L * n)
+    assert(!TestBase.tableTree(path).exists(_.startsWith(".graft_")))
+  }
+
   test("failed write leaves no staging dir and no orphan data files") {
     import org.apache.spark.sql.functions.udf
     val path = tmp()
