@@ -113,40 +113,21 @@ object ChangeFeed {
   }
 
   /** Change plans for a RANGE of commits. All DV bitmap diffs across the
-    * range load in ONE pass — driver-side below
-    * [[DeletionVectors.DistributedLoadThreshold]], else a single Spark
-    * job (a 100-commit DV history plans in one round of parallel tasks
-    * instead of a serial driver loop; each task opens its own
-    * FileSystem from the broadcast Hadoop conf). */
+    * range load in ONE [[FanOut]] pass — driver-side at or below
+    * `distributedThreshold`, else a single Spark job (a 100-commit DV
+    * history plans in one round of parallel tasks instead of a serial
+    * driver loop). */
   def planRange(
       spark: org.apache.spark.sql.SparkSession, root: Path,
       commits: Seq[(Long, Seq[Action])],
-      distributedThreshold: Int = DeletionVectors.DistributedLoadThreshold)
+      distributedThreshold: Int = FanOut.Threshold)
       : Seq[VersionPlan] = {
     val classified = commits.map { case (v, actions) => v -> classify(v, actions) }
-    val pending = classified.flatMap(_._2._3)
-    val loaded: Map[(Long, String), Array[Byte]] =
-      if (pending.isEmpty) Map.empty
-      else if (pending.size <= distributedThreshold) {
-        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-        pending.flatMap(p => diffBytes(fs, root, p).map((p.version, p.add.path) -> _)).toMap
-      } else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        val rootStr = root.toString
-        val items = pending.map(p => (p.version, p.add.path, p.newDv, p.oldDv))
-        spark.sparkContext
-          .parallelize(items, math.min(64, 1 + items.size / 32))
-          .flatMap { case (v, addPath, nd, od) =>
-            val r = new Path(rootStr)
-            val fs = r.getFileSystem(confBc.value.value)
-            val bm = DeletionVectors.loadBitmap(fs, r, nd)
-            od.foreach(o => bm.andNot(DeletionVectors.loadBitmap(fs, r, o)))
-            if (bm.isEmpty) None
-            else Some((v, addPath) -> DeletionVectors.serializeBitmap(bm))
-          }.collect().toMap
-      }
+    val rootStr = root.toString
+    val loaded = FanOut(spark, classified.flatMap(_._2._3), distributedThreshold) { (conf, p) =>
+      val r = new Path(rootStr)
+      diffBytes(r.getFileSystem(conf), r, p).map((p.version, p.add.path) -> _)
+    }.flatten.toMap
     assemble(root, classified, loaded)
   }
 

@@ -232,45 +232,20 @@ object DeletionVectors {
 
   // ---- scan-side application --------------------------------------------
 
-  /** Above this many DV-carrying files the byte loading fans out as a
-    * Spark job — a serial driver loop over 10^4+ object-store reads is
-    * plan-time latency nobody should pay. */
-  val DistributedLoadThreshold = 64
-
-  /** Collect name → bitmap bytes for every DV-carrying file, or empty.
-    * Driver-side serial loop — fine for a handful of DVs; prefer the
-    * SparkSession overload on read paths, which distributes large loads. */
-  def dvByteMap(fs: FileSystem, tableRoot: Path, files: Seq[AddFile]): Map[String, Array[Byte]] =
-    files.flatMap { f =>
-      f.deletionVector.map(d => dataFileName(tableRoot, f.path) -> loadBytes(fs, tableRoot, d))
-    }.toMap
-
-  /** name → bitmap bytes, loading with a Spark job when the DV-carrying
-    * file count is large (each task re-opens its own FileSystem from the
-    * broadcast Hadoop conf; one DV file per COMMIT means tasks mostly hit
-    * distinct objects). */
+  /** name → bitmap bytes for every DV-carrying file, or empty. The loads
+    * go through [[FanOut]]: serial on the driver for a few carriers, one
+    * Spark job above its threshold (a serial driver loop over 10^4+
+    * object-store reads is plan-time latency nobody should pay; one DV
+    * file per COMMIT means tasks mostly hit distinct objects). */
   def dvByteMap(
       spark: org.apache.spark.sql.SparkSession, tableRoot: Path,
       files: Seq[AddFile]): Map[String, Array[Byte]] = {
-    val carriers = files.filter(_.deletionVector.isDefined)
-    if (carriers.isEmpty) Map.empty
-    else if (carriers.size <= DistributedLoadThreshold)
-      dvByteMap(tableRoot.getFileSystem(spark.sessionState.newHadoopConf()), tableRoot, carriers)
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
-      val rootStr = tableRoot.toString
-      val items = carriers.map(f => (f.path, f.deletionVector.get))
-      spark.sparkContext
-        .parallelize(items, math.min(64, 1 + items.size / 32))
-        .map { case (p, d) =>
-          val root = new Path(rootStr)
-          val fs = root.getFileSystem(confBc.value.value)
-          dataFileName(root, p) -> loadBytes(fs, root, d)
-        }
-        .collect().toMap
-    }
+    val rootStr = tableRoot.toString
+    FanOut(spark, files.flatMap(f => f.deletionVector.map(f.path -> _))) {
+      case (conf, (p, d)) =>
+        val root = new Path(rootStr)
+        dataFileName(root, p) -> loadBytes(root.getFileSystem(conf), root, d)
+    }.toMap
   }
 
   private def dataFileName(tableRoot: Path, addPath: String): String = {

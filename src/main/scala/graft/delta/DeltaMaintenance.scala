@@ -167,7 +167,7 @@ object DeltaMaintenance {
       // out of the data (they live in the path). Deletion vectors are
       // applied — OPTIMIZE is exactly where DVs get materialized away
       // (the compacted files carry no DV and no deleted rows).
-      val dvBytes = DeletionVectors.dvByteMap(fs, new Path(path), files)
+      val dvBytes = DeletionVectors.dvByteMap(spark, new Path(path), files)
       // logical-name frame (physical read + rename inside for mapped
       // tables); partition values are dropped — they live in the output
       // path. A previous OPTIMIZE's materialized row-id columns ride

@@ -396,9 +396,9 @@ object DeltaTableOps {
     * on either side can never touch the other (the shallow-clone
     * guarantee, without the source-lifetime dependency).
     *
-    * File copies fan out as a Spark job above the move threshold —
-    * the data plane of the clone is distributed; the commit is one
-    * driver-side control-plane write like every other commit. */
+    * File copies go through [[FanOut]] (one Spark job above its
+    * threshold) — the data plane of the clone is distributed; the commit
+    * is one driver-side control-plane write like every other commit. */
   def deepClone(
       spark: SparkSession, sourcePath: String, targetPath: String,
       version: Option[Long] = None, replace: Boolean = false): CloneResult = {
@@ -432,26 +432,14 @@ object DeltaTableOps {
         else f.path // keep the original relative (encoded) layout
       (abs, stored)
     }
-    def copyOne(c: org.apache.hadoop.conf.Configuration, src: String, storedRel: String): Unit = {
+    FanOut(spark, plan) { case (c, (src, storedRel)) =>
       val from = new Path(src)
       val to = new Path(targetPath, DeltaWrite.unescapePathName(storedRel))
-      val ffs = from.getFileSystem(c)
-      val tfs = to.getFileSystem(c)
       // overwrite=true: the copy is deterministic, so a retried or
       // speculative task re-copying the same bytes must succeed, not
       // fail on its predecessor's output
-      org.apache.hadoop.fs.FileUtil.copy(ffs, from, tfs, to,
+      org.apache.hadoop.fs.FileUtil.copy(from.getFileSystem(c), from, to.getFileSystem(c), to,
         /*deleteSource=*/ false, /*overwrite=*/ true, c)
-      ()
-    }
-    if (plan.size <= DeltaWrite.DistributedMoveThreshold)
-      plan.foreach { case (src, rel) => copyOne(conf, src, rel) }
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(conf))
-      spark.sparkContext
-        .parallelize(plan, math.min(64, 1 + plan.size / 16))
-        .foreach { case (src, rel) => copyOne(confBc.value.value, src, rel) }
     }
 
     // DVs re-materialize as one fresh file under the TARGET root:
@@ -501,34 +489,21 @@ object DeltaTableOps {
     * exist on storage (manual deletion, a botched lifecycle policy) —
     * one commit of removes, so scans stop failing on the missing files
     * while every surviving row stays untouched. `dryRun` reports without
-    * committing. The existence check fans out as a Spark job above the
-    * move threshold — O(#files) control-plane, zero data I/O. */
+    * committing. The existence check goes through [[FanOut]] (one Spark
+    * job above its threshold) — O(#files) control-plane, zero data I/O. */
   def fsckRepair(
       spark: SparkSession, path: String, dryRun: Boolean = false): FsckResult = {
     val log = DeltaLog.forTable(spark, path)
     val snap = log.snapshot(None)
-    val conf = spark.sessionState.newHadoopConf()
-    val checks: Seq[(String, String)] = snap.activeFiles.map(f =>
-      f.path -> DeltaRead.resolvePath(path, f.path))
-    def missing(c: org.apache.hadoop.conf.Configuration, abs: String): Boolean = {
-      val p = new Path(abs)
-      !p.getFileSystem(c).exists(p)
+    val exists = FanOut(spark, snap.activeFiles.map(_.path)) { (c, rel) =>
+      val p = new Path(DeltaRead.resolvePath(path, rel))
+      p.getFileSystem(c).exists(p)
     }
-    val missingPaths: Set[String] =
-      if (checks.size <= DeltaWrite.DistributedMoveThreshold)
-        checks.filter { case (_, abs) => missing(conf, abs) }.map(_._1).toSet
-      else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(conf))
-        spark.sparkContext
-          .parallelize(checks, math.min(64, 1 + checks.size / 16))
-          .filter { case (_, abs) => missing(confBc.value.value, abs) }
-          .map(_._1).collect().toSet
-      }
-    if (missingPaths.isEmpty || dryRun)
-      return FsckResult(snap.version, missingPaths.size.toLong)
+    val missing = snap.activeFiles.zip(exists).collect { case (f, false) => f }
+    if (missing.isEmpty || dryRun)
+      return FsckResult(snap.version, missing.size.toLong)
     val now = System.currentTimeMillis()
-    val removes = snap.activeFiles.filter(f => missingPaths.contains(f.path)).map(_.remove(now))
+    val removes = missing.map(_.remove(now))
     val ci = CommitInfo(now, "FSCK",
       operationMetrics = Map("numRemovedFiles" -> removes.size.toString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
@@ -547,8 +522,8 @@ object DeltaTableOps {
     * first file's `col=val` path segments.
     *
     * Scale: the data plane is untouched (converting a petabyte lake is
-    * metadata work); stats harvesting opens footers only and fans out as
-    * a Spark job above the same threshold the writer's move phase uses. */
+    * metadata work); stats harvesting opens footers only and goes
+    * through [[FanOut]] like the writer's move phase. */
   def convertToDelta(spark: SparkSession, path: String): ConvertResult = {
     val log = DeltaLog.forTable(spark, path)
     require(!log.tableExists, s"$path is already a Delta table")
@@ -577,20 +552,9 @@ object DeltaTableOps {
         size = size, modificationTime = mtime, dataChange = true,
         stats = Some(DeltaWrite.harvestStats(conf, p, statsSchema)))
     }
-    val adds: Seq[AddFile] =
-      if (files.size <= DeltaWrite.DistributedMoveThreshold) {
-        val conf = spark.sessionState.newHadoopConf()
-        files.map(f => toAdd(conf, f.getPath.toString, f.getLen, f.getModificationTime))
-      } else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        val items = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-        spark.sparkContext
-          .parallelize(items, math.min(64, 1 + items.size / 16))
-          .map { case (p, sz, mt) => toAdd(confBc.value.value, p, sz, mt) }
-          .collect().toSeq.sortBy(_.path)
-      }
+    val adds = FanOut(spark, files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))) {
+      case (conf, (p, sz, mt)) => toAdd(conf, p, sz, mt)
+    }
 
     val now = System.currentTimeMillis()
     val meta = MetadataAction(
@@ -1480,8 +1444,8 @@ object DeltaTableOps {
       // typeWidening IS baked into data files: a file written before the
       // widening keeps its narrow physical type, and only the feature
       // tells a reader to upcast. The gate proves no active file is
-      // narrow-backed — a distributed footer probe (one small-footer read
-      // per file, fans out as a Spark job; never a data scan).
+      // narrow-backed — a footer probe through FanOut (one small-footer
+      // read per file; never a data scan).
       case "typeWidening" =>
         // a foreign writer may record type changes ANYWHERE in the schema
         // tree: on nested struct fields (metadata on the StructField at
@@ -1503,45 +1467,36 @@ object DeltaTableOps {
         val widened = changed.map { case (segs, dt, _) => segs -> dt }
         if (widened.nonEmpty && snap.activeFiles.nonEmpty) {
           val files = snap.activeFiles.map(f => DeltaRead.resolvePath(path, f.path))
-          val confBc = spark.sparkContext.broadcast(
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()))
-          val expect = widened.map { case (segs, dt) => segs -> dt.json }
-          val narrow = spark.sparkContext
-            .parallelize(files, math.min(64, files.size))
-            .flatMap { fp =>
-              val p = new Path(fp)
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(p, confBc.value.value)
-              val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              val msg =
-                try reader.getFooter.getFileMetaData.getSchema
-                finally reader.close()
-              expect.flatMap { case (segs, dtJson) =>
-                val dt = org.apache.spark.sql.types.DataType.fromJson(dtJson)
-                // walk the group nesting to the leaf; a primitive where the
-                // schema expects more nesting is a shape divergence — flag
-                // it as suspect rather than pass it
-                var cur: org.apache.parquet.schema.Type = msg
-                var absent = false
-                var diverged = false
-                for (seg <- segs if !absent && !diverged) {
-                  if (cur.isPrimitive) diverged = true
-                  else {
-                    val g = cur.asGroupType()
-                    if (!g.containsField(seg)) absent = true
-                    else cur = g.getType(seg)
-                  }
-                }
-                if (absent) None // absent → null-filled, wide-safe
+          val narrow = FanOut(spark, files) { (conf, fp) =>
+            val p = new Path(fp)
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            val msg =
+              try reader.getFooter.getFileMetaData.getSchema
+              finally reader.close()
+            widened.flatMap { case (segs, dt) =>
+              // walk the group nesting to the leaf; a primitive where the
+              // schema expects more nesting is a shape divergence — flag
+              // it as suspect rather than pass it
+              var cur: org.apache.parquet.schema.Type = msg
+              var absent = false
+              var diverged = false
+              for (seg <- segs if !absent && !diverged) {
+                if (cur.isPrimitive) diverged = true
                 else {
-                  val ok = !diverged && cur.isPrimitive &&
-                    physicalMatchesDeclared(cur.asPrimitiveType(), dt)
-                  if (ok) None else Some(p.getName)
+                  val g = cur.asGroupType()
+                  if (!g.containsField(seg)) absent = true
+                  else cur = g.getType(seg)
                 }
-              }.headOption
-            }
-            .take(5)
+              }
+              if (absent) None // absent → null-filled, wide-safe
+              else {
+                val ok = !diverged && cur.isPrimitive &&
+                  physicalMatchesDeclared(cur.asPrimitiveType(), dt)
+                if (ok) None else Some(p.getName)
+              }
+            }.headOption
+          }.flatten.take(5)
           require(narrow.isEmpty,
             s"Feature $feature is in use: active file(s) still carry " +
               s"pre-widening physical types (e.g. ${narrow.mkString(", ")}) — " +
@@ -1885,8 +1840,7 @@ object DeltaTableOps {
     * and re-emits the target's metadata if
     * the schema/partitioning changed in between. Protocol is never
     * downgraded. Fails fast if any file to restore was already vacuumed
-    * (driver loop below `existsCheckThreshold`, distributed above —
-    * same fan-out shape as vacuum's delete).
+    * ([[FanOut]] with `existsCheckThreshold`, like vacuum's delete).
     *
     * Control-plane cost is O(|target files| + |head files|) driver-side
     * — identical to the snapshot replay every read already does. */
@@ -1930,22 +1884,10 @@ object DeltaTableOps {
           case "p" => Some(DeltaRead.resolvePath(path, d.pathOrInlineDv))
           case _ => None
         }).distinct
-    val missing: Seq[String] =
-      if (checkPaths.size <= existsCheckThreshold) {
-        val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-        checkPaths.filterNot(p => fs.exists(new Path(p)))
-      } else {
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        spark.sparkContext
-          .parallelize(checkPaths, math.min(64, 1 + checkPaths.size / 1000))
-          .filter { p =>
-            val hp = new Path(p)
-            !hp.getFileSystem(confBc.value.value).exists(hp)
-          }
-          .collect().toSeq
-      }
+    val missing = FanOut(spark, checkPaths, existsCheckThreshold) { (conf, p) =>
+      val hp = new Path(p)
+      if (hp.getFileSystem(conf).exists(hp)) None else Some(p)
+    }.flatten
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"Cannot restore $path to version $toVersion: ${missing.size} data " +
@@ -2101,16 +2043,17 @@ object DeltaTableOps {
 
   /** Tombstoned file paths older than the retention window
     * (reference core.py:121-151). dryRun returns the list; otherwise the
-    * deletes fan out as a Spark job when the list is large (the
-    * reference's delayed-per-file pattern), driver-side below a threshold.
+    * deletes go through [[FanOut]] with `distributedDeleteThreshold`: one
+    * Spark job when the list is large (the reference's delayed-per-file
+    * pattern), driver-side at or below it.
     *
     * `includeOrphans = true` additionally reclaims UNTRACKED files — the
     * delta-spark directory-listing mode the reference lacks: a crashed
     * write job (files staged, commit never written) leaves parquet on
     * disk that no log action references, and at 100 TB with task retries
     * that is the most common real leak. Orphan mode lists the table root
-    * (per-directory fan-out as a Spark job above
-    * `distributedListThreshold` visible directories), subtracts every
+    * (per-directory [[FanOut.rdd]] job above `distributedListThreshold`
+    * visible directories), subtracts every
     * path ANY retained log file references (commit JSONs and checkpoints
     * alike, adds and removes, data and DV files), and deletes the
     * unreferenced remainder whose mtime is past the retention window —
@@ -2261,18 +2204,12 @@ object DeltaTableOps {
           // return value, O(actual debris) — is collected. Driver memory:
           // O(dirs + log file names + orphans).
           import spark.implicits._
-          val confBc = spark.sparkContext.broadcast(
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()))
-          val listed = spark.sparkContext
-            .parallelize(dirs.toSeq.map(_.toString), math.min(64, dirs.size))
-            .flatMap { d =>
-              val dp = new Path(d)
-              dp.getFileSystem(confBc.value.value).listStatus(dp).iterator
-                .filter(st => st.isFile && visible(st.getPath.getName))
-                .map(st => (st.getPath.toString, st.getModificationTime))
-            }
-            .toDF("p", "mtime")
+          val listed = FanOut.rdd(spark, dirs.toSeq.map(_.toString)) { (conf, d) =>
+            val dp = new Path(d)
+            dp.getFileSystem(conf).listStatus(dp).toSeq
+              .filter(st => st.isFile && visible(st.getPath.getName))
+              .map(st => (st.getPath.toString, st.getModificationTime))
+          }.flatMap(identity).toDF("p", "mtime")
           val dvT = StructType(Seq(
             StructField("storageType", StringType),
             StructField("pathOrInlineDv", StringType)))
@@ -2318,17 +2255,17 @@ object DeltaTableOps {
             else jsonRefs.unionByName(
               refsOf(spark.read.schema(actT)
                 .option("ignoreCorruptFiles", "false").parquet(pqPaths: _*)))
-          val tablePath0 = path
+          // qualified as rootFs.makeQualified does, from the root FS's
+          // URI and working dir (both serializable)
+          val (tablePath0, fsUri, fsWd) = (path, rootFs.getUri, rootFs.getWorkingDirectory.toString)
           val referencedDf = allRefs
             .as[(String, Option[String], Option[String])]
             .mapPartitions { it =>
               // control-plane metadata pass, not a data hot path: the DV
               // name needs the z85 uuid decode no builtin expresses
-              val conf = confBc.value.value
-              val rfs = new Path(tablePath0).getFileSystem(conf)
+              val wd = new Path(fsWd)
               def abs(rel: String): String =
-                rfs.makeQualified(new Path(
-                  DeltaRead.resolvePath(tablePath0, rel))).toString
+                new Path(DeltaRead.resolvePath(tablePath0, rel)).makeQualified(fsUri, wd).toString
               it.flatMap { case (rp, st, dvp) =>
                 val dv = (st, dvp) match {
                   case (Some("u"), Some(d)) =>
@@ -2353,27 +2290,11 @@ object DeltaTableOps {
       org.slf4j.LoggerFactory.getLogger("graft.delta").info(
         s"vacuum($path): skipping ${foreign.size} expired tombstone(s) outside " +
           s"the table root (shallow-clone references), e.g. ${foreign.take(3).mkString(", ")}")
-    if (!dryRun && tombstones.nonEmpty) {
-      val tablePath = path
-      if (tombstones.size <= distributedDeleteThreshold) {
-        val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-        tombstones.foreach(p => fs.delete(new Path(DeltaRead.resolvePath(tablePath, p)), false))
-      } else {
-        // 100 TB path: distribute deletes across executors.
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()))
-        spark.sparkContext
-          .parallelize(tombstones, math.min(64, 1 + tombstones.size / 1000))
-          .foreachPartition { it =>
-            val conf = confBc.value.value
-            it.foreach { p =>
-              val hp = new Path(DeltaRead.resolvePath(tablePath, p))
-              hp.getFileSystem(conf).delete(hp, false)
-            }
-          }
+    if (!dryRun)
+      FanOut(spark, tombstones, distributedDeleteThreshold) { (conf, p) =>
+        val hp = new Path(DeltaRead.resolvePath(path, p))
+        hp.getFileSystem(conf).delete(hp, false)
       }
-    }
     tombstones
   }
 }

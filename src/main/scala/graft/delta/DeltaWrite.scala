@@ -846,11 +846,11 @@ object DeltaWrite {
     *    the way out, success or failure.
     *  - Each staged file moves to a name derived from (version, staged
     *    path), so a retried or speculative move finds its own completed
-    *    move. Serial on the driver up to [[DistributedMoveThreshold]]
-    *    files; above it one Spark job renames and reads footers in
-    *    parallel (at 10^5-10^6 files an O(#files) serial driver phase is
-    *    the write-path scale-killer). A failed move deletes every file
-    *    the plan named.
+    *    move through [[FanOut]]: serial on the driver up to its
+    *    threshold, one Spark job that renames and reads footers in
+    *    parallel above it (at 10^5-10^6 files an O(#files) serial driver
+    *    phase is the write-path scale-killer). A failed move deletes
+    *    every file the plan named.
     *  - Data files carry footer stats over the first
     *    `delta.dataSkippingNumIndexedCols` table columns. */
   private[delta] def stageFiles[A](
@@ -896,9 +896,8 @@ object DeltaWrite {
         (st.getPath.toString, root + (if (dir.isEmpty) fileName else s"$dir/$fileName"),
           partitionValuesFromPath(rel, splitBy))
       }
-      // pure function of (conf, paths): runs on executors above the threshold
-      val move: (Configuration, String, String) => (Long, Long, Option[String]) =
-        (conf, from, destRel) => {
+      val moved =
+        try FanOut(spark, plan.map(p => (p._1, p._2))) { case (conf, (from, destRel)) =>
           val (src, dest) = (new Path(from), new Path(path, destRel))
           val destFs = dest.getFileSystem(conf)
           destFs.mkdirs(dest.getParent)
@@ -906,20 +905,6 @@ object DeltaWrite {
             throw new java.io.IOException(s"Failed to move $src -> $dest")
           val st = destFs.getFileStatus(dest)
           (st.getLen, st.getModificationTime, statsSchema.map(harvestStats(conf, dest, _)))
-        }
-      val moved =
-        try {
-          if (plan.size <= DistributedMoveThreshold)
-            plan.map { case (from, to, _) => move(fs.getConf, from, to) }
-          else {
-            val confBc = spark.sparkContext.broadcast(
-              new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf()))
-            spark.sparkContext
-              .parallelize(plan.map(p => (p._1, p._2)), math.min(64, 1 + plan.size / 16))
-              .map { case (from, to) => move(confBc.value.value, from, to) }
-              .collect().toSeq
-          }
         } catch {
           case e: Throwable =>
             deleteStaged(fs, path, plan.map(p => uriEncodePath(p._2)))
@@ -930,10 +915,6 @@ object DeltaWrite {
       }
     } finally if (fs.exists(stagingDir)) fs.delete(stagingDir, true)
   }
-
-  /** Above this many staged files the rename/stat phase runs as a Spark
-    * job instead of a serial driver loop. */
-  val DistributedMoveThreshold = 32
 
   /** Stages in flight on a session, and the timestamp type the last one
     * restores. */

@@ -262,7 +262,9 @@ class ChangeDataFeedSpec extends GraftSuite {
     val commits = (1L to 3L).map(v => v -> log.readCommitActions(v))
     val driverSide = commits.map { case (v, a) => ChangeFeed.planVersion(fs, root, v, a) }
     // threshold 0 forces the Spark-job branch on the same range
-    val distributed = ChangeFeed.planRange(spark, root, commits, distributedThreshold = 0)
+    val (distributed, jobs) = TestBase.jobsDuring(
+      ChangeFeed.planRange(spark, root, commits, distributedThreshold = 0))
+    assert(TestBase.fanOutJobs(jobs) == 1, jobs.map(_.jobId))
     assert(distributed.map(_.version) == driverSide.map(_.version))
     driverSide.zip(distributed).foreach { case (d, x) =>
       assert(x.insertFiles.map(_.path) == d.insertFiles.map(_.path))

@@ -1,11 +1,13 @@
 package graft.delta
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.zip.ZipInputStream
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession + golden-fixture extraction.
   *
@@ -58,6 +60,38 @@ object TestBase {
     } finally zin.close()
     out.resolve(innerDir(name)).toString
   }
+
+  /** `body`'s result and the start events of the Spark jobs it ran.
+    * Listener events arrive asynchronously, so a marker job after `body`
+    * is the barrier: one listener queue delivers in order, so once the
+    * marker's end arrives every earlier job's start and end have too. */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val markerKey = "graft.test.jobsDuring"
+    val marker = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(markerKey) == marker)) markerJob.set(e.jobId)
+        else started.add(e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) barrier.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(markerKey, marker)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(markerKey, null)
+      assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never ended")
+      (out, started.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** How many of `jobs` ran a [[FanOut]] job-side RDD. */
+  def fanOutJobs(jobs: Seq[SparkListenerJobStart]): Int =
+    jobs.count(_.stageInfos.exists(_.rddInfos.exists(_.name == FanOut.RddName)))
 
   /** Every file and directory under a table root outside `_delta_log`,
     * as root-relative paths (hidden ones included). */

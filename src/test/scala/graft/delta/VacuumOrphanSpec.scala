@@ -178,8 +178,9 @@ class VacuumOrphanSpec extends GraftSuite {
     plant(s"$path/g=2/part-crashed.snappy.parquet"); age(s"$path/g=2/part-crashed.snappy.parquet")
     val driver = DeltaTableOps.vacuum(spark, path, retentionHours = 168.0,
       includeOrphans = true)
-    val dist = DeltaTableOps.vacuum(spark, path, retentionHours = 168.0,
-      includeOrphans = true, distributedListThreshold = 0)
+    val (dist, jobs) = TestBase.jobsDuring(DeltaTableOps.vacuum(spark, path,
+      retentionHours = 168.0, includeOrphans = true, distributedListThreshold = 0))
+    assert(TestBase.fanOutJobs(jobs) == 1, jobs.map(_.jobId))
     assert(driver == dist &&
       driver.map(p => DeltaRead.resolvePath(path, p)) ==
         Seq(s"$path/g=2/part-crashed.snappy.parquet"),

@@ -185,8 +185,10 @@ class WriterSpec extends GraftSuite {
 
   test("above DistributedMoveThreshold staged files move and stat in one Spark job") {
     val path = tmp()
-    val n = DeltaWrite.DistributedMoveThreshold + 8
-    GraftDelta.toDelta(spark.range(0, 20L * n).toDF().repartition(n, col("id")), path)
+    val n = FanOut.Threshold + 8
+    val (_, jobs) = TestBase.jobsDuring(
+      GraftDelta.toDelta(spark.range(0, 20L * n).toDF().repartition(n, col("id")), path))
+    assert(TestBase.fanOutJobs(jobs) == 1, jobs.map(_.jobId))
     val adds = DeltaLog.forTable(spark, path).snapshot(None).activeFiles
     assert(adds.size == n, s"${adds.size} files")
     assert(adds.map(_.path).distinct.size == n && adds.forall(_.path.startsWith("part-00000-")))
@@ -341,9 +343,10 @@ class WriterSpec extends GraftSuite {
     GraftDelta.toDelta(sample.repartition(4), path)
     GraftDelta.toDelta(sample.repartition(2), path, mode = "overwrite")
     // threshold 1 forces the executor-fan-out branch with 4 tombstones
-    val gone = DeltaTableOps.vacuum(spark, path, retentionHours = -0.01,
-      dryRun = false, distributedDeleteThreshold = 1)
+    val (gone, jobs) = TestBase.jobsDuring(DeltaTableOps.vacuum(spark, path,
+      retentionHours = -0.01, dryRun = false, distributedDeleteThreshold = 1))
     assert(gone.size == 4)
+    assert(TestBase.fanOutJobs(jobs) == 1, jobs.map(_.jobId))
     def pq(): Int = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
     assert(pq() == 2)
     assert(GraftDelta.readDelta(spark, path).count() == 100)
