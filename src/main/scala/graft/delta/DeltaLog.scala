@@ -1,13 +1,14 @@
 package graft.delta
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.graft.LogParquet
 import org.apache.spark.sql.types._
 
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 import scala.io.Source
+import scala.util.control.NonFatal
 
 /** A snapshot of a Delta table pinned at `version`.
   *
@@ -40,10 +41,11 @@ final case class LastCheckpoint(version: Long, size: Long, parts: Option[Int])
   * (reference core.py:50-56, writer.py:295-313).
   *
   * Scale design: checkpoint parquet (potentially millions of add actions at
-  * 100 TB) is read through Spark's distributed parquet reader, and the
-  * JSON tail between checkpoints is bounded by the checkpoint interval, so
-  * driver-side state stays O(active files) — the same planning-time cost
-  * delta-spark itself pays. Partition pruning happens against
+  * 100 TB) streams through Spark's parquet reader on the driver (the rows
+  * end there anyway, so a Spark job would only add scheduling and
+  * serialization), and the JSON tail between checkpoints is bounded by
+  * the checkpoint interval, so driver-side state stays O(active files) —
+  * the same planning-time cost delta-spark itself pays. Partition pruning happens against
   * `add.partitionValues` *before* any scan is constructed, so pruned files
   * are never listed, planned, or opened (SURVEY.md §2 ⑦).
   */
@@ -231,8 +233,8 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
     actions
   }
 
-  /** Read a checkpoint parquet into actions. Uses Spark's (distributed,
-    * vectorized) reader; only the projected action structs are collected.
+  /** Read a checkpoint parquet into actions, in-process on the driver
+    * ([[LogParquet.read]]: no Spark job); only the action columns are read.
     * Multi-part checkpoints are validated against the part count declared
     * in the filenames (and `_last_checkpoint.parts` when it points here):
     * a missing part would otherwise silently drop that part's add actions
@@ -260,7 +262,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
           s"Checkpoint v$v in $logPath has ${parts.length} parts but _last_checkpoint declares $n")
       }
     }
-    val parsed = checkpointDfToActions(spark.read.parquet(parts.map(_.toString): _*))
+    val parsed = readParquetActions(parts)
     // A classic-NAMED checkpoint can still be V2-structured — spec-valid
     // when the v2Checkpoint feature is set (delta-spark's compat mode
     // writes exactly this shape). The checkpointMetadata action is the
@@ -285,7 +287,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
           try Source.fromInputStream(in, "UTF-8").getLines().toList
           finally in.close()
         lines.filter(_.trim.nonEmpty).flatMap(ActionCodec.fromJsonLine)
-      } else checkpointDfToActions(spark.read.parquet(top.toString))
+      } else readParquetActions(Seq(top))
     val cm = topActions.collectFirst { case c: CheckpointMetadata => c }
     require(cm.nonEmpty,
       s"V2 checkpoint ${top.getName} carries no checkpointMetadata action")
@@ -313,7 +315,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
         }
         paths.foreach(p => require(fs.exists(p),
           s"V2 checkpoint $name references missing sidecar $p"))
-        checkpointDfToActions(spark.read.parquet(paths.map(_.toString): _*))
+        readParquetActions(paths)
       }
     (topActions ++ sidecarActions).filter {
       case _: CheckpointMetadata | _: Sidecar => false
@@ -333,14 +335,13 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
       lines.filter(_.trim.nonEmpty).flatMap(ActionCodec.fromJsonLine)
         .collect { case s: Sidecar => new Path(s.path).getName }
     } else {
-      // projection-pruned: only the sidecar column leaves the scan — a
-      // classic-named top can be a full-size checkpoint, and collecting
-      // its add actions here would cost O(#files) driver memory per
-      // cleanup just to learn the (usually empty) sidecar refs
-      val df = spark.read.parquet(top.toString)
-      if (!df.columns.contains("sidecar")) Nil
-      else df.select("sidecar.path").where(df.col("sidecar.path").isNotNull)
-        .collect().map(r => new Path(r.getString(0)).getName).toSeq
+      // only the sidecar column is read — a classic-named top can be a
+      // full-size checkpoint, and decoding its add actions here would cost
+      // O(#files) driver memory per cleanup just to learn the (usually
+      // empty) sidecar refs
+      LogParquet.read(spark, Seq(top), Seq("sidecar")).flatMap { r =>
+        Option(r.getStruct(0)).flatMap(strField(_, "path")).map(new Path(_).getName)
+      }.toSeq
     }
   }
 
@@ -935,7 +936,15 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
     val meta = actions.collectFirst { case m: MetadataAction => m }.orElse(read.map(_.metadata))
     if (checkpointInterval > 0 && v > 0 &&
       v % meta.fold(checkpointInterval)(checkpointIntervalOf(_, checkpointInterval)) == 0)
-      writeCheckpoint(v)
+      // version v is published: a failed checkpoint must not fail the
+      // write (a retrying caller would commit its rows twice); replay
+      // reaches v through the JSON tail until the next checkpoint
+      try writeCheckpoint(v)
+      catch {
+        case NonFatal(e) =>
+          DeltaLog.logger.warn(
+            s"Checkpoint of committed version $v in $tablePath failed ($e); the commit stands", e)
+      }
     v
   }
 
@@ -946,10 +955,11 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
 
   /** Write a checkpoint for `version` plus `_last_checkpoint`, bounding
     * future replays (SURVEY.md §2 ④). Small snapshots emit the classic
-    * single file; above `maxActionsPerPart` the write becomes multi-part
-    * (`N.checkpoint.i.n.parquet`) so the parquet encode parallelizes —
-    * a single-file checkpoint is a serial bottleneck exactly when the
-    * active set is large enough for checkpoints to matter. */
+    * single file; above `maxActionsPerPart` actions the write becomes
+    * multi-part (`N.checkpoint.i.n.parquet`) in near-equal contiguous
+    * parts ([[slices]]). Parts are written on the driver with
+    * no Spark job ([[publishParquet]]). A failed write throws and leaves
+    * no file behind. */
   def writeCheckpoint(version: Long, maxActionsPerPart: Int = 500000): Unit = {
     // verbatim stats: the checkpoint must not make the in-memory
     // compaction durable (see snapshot()'s compactStats contract)
@@ -986,31 +996,55 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
             Row(t.appId, t.version, t.lastUpdated.map(Long.box).orNull), null)) ++
           snap.domainMetadata.toSeq.map { case (dom, cfg) =>
             Row(null, null, null, null, null, Row(dom, cfg, false)) })
-    val nParts = math.min(64, 1 + (rows.size - 1) / math.max(1, maxActionsPerPart))
-    val tmp = new Path(logPath, s".checkpoint-tmp-${java.util.UUID.randomUUID()}")
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, nParts), checkpointSchema)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val parts = fs
-      .listStatus(tmp)
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    require(parts.nonEmpty, s"No part files written under $tmp")
-    // clear any stale checkpoint files for this version, then move parts
+    val parts = slices(rows, maxActionsPerPart)
+    val n = parts.length
+    val files =
+      if (n == 1) Seq(checkpointFile(version))
+      else (1 to n).map(i => new Path(logPath, f"$version%020d.checkpoint.$i%010d.$n%010d.parquet"))
+    publishParquet(checkpointSchema, files.zip(parts))(clearStale(version))
+    val partsField = if (n == 1) "" else s""","parts":$n"""
+    writeLastCheckpoint(s"""{"version":$version,"size":${rows.size}$partsField}""")
+  }
+
+  /** Delete any checkpoint files already at `version` (a rewrite). */
+  private def clearStale(version: Long): Unit =
     checkpointPartFiles(version).foreach(fs.delete(_, false))
-    val lc =
-      if (parts.length == 1) {
-        fs.rename(parts.head, checkpointFile(version))
-        s"""{"version":$version,"size":${rows.size}}"""
-      } else {
-        parts.zipWithIndex.foreach { case (p, i) =>
-          fs.rename(p,
-            new Path(logPath, f"$version%020d.checkpoint.${i + 1}%010d.${parts.length}%010d.parquet"))
-        }
-        s"""{"version":$version,"size":${rows.size},"parts":${parts.length}}"""
+
+  /** `rows` cut into ceil(n / `perPart`) (at most 64) contiguous parts
+    * of near-equal size: part i holds rows [i*n/parts, (i+1)*n/parts),
+    * the split Spark gives a local list. */
+  private def slices(rows: Seq[Row], perPart: Int): Seq[Seq[Row]] = {
+    val all = rows.toIndexedSeq
+    val n = math.min(64, 1 + (all.size - 1) / math.max(1, perPart))
+    (0 until n).map(i => all.slice((i.toLong * all.size / n).toInt,
+      ((i + 1).toLong * all.size / n).toInt))
+  }
+
+  /** Write each `(file, rows)` of `files` as `schema` parquet to a hidden
+    * `_delta_log/.<name>.tmp-<uuid8>` temp (through [[FanOut]]), run
+    * `beforeInstall`, then rename every temp to its file. On failure the
+    * temps and any file already renamed are deleted and the error
+    * rethrown, so a failed write leaves nothing behind. */
+  private def publishParquet(schema: StructType, files: Seq[(Path, Seq[Row])])(
+      beforeInstall: => Unit): Unit = {
+    val writer = LogParquet.writer(spark, schema)
+    val temps = files.map { case (dest, _) => new Path(logPath, LogStore.tempName(dest.getName)) }
+    val installed = mutable.ArrayBuffer.empty[Path]
+    try {
+      FanOut(spark, temps.map(_.toString).zip(files.map(_._2))) { case (conf, (tmp, rows)) =>
+        writer.write(conf, new Path(tmp), rows.iterator)
       }
-    fs.delete(tmp, true)
-    writeLastCheckpoint(lc)
+      beforeInstall
+      temps.zip(files).foreach { case (tmp, (dest, _)) =>
+        if (!fs.rename(tmp, dest)) throw new java.io.IOException(s"Failed to move $tmp -> $dest")
+        installed += dest
+      }
+    } catch {
+      case NonFatal(e) =>
+        (temps ++ installed).foreach(p =>
+          try fs.delete(p, false) catch { case NonFatal(_) => () })
+        throw e
+    }
   }
 
   /** Install `_last_checkpoint` via temp-file + rename where the
@@ -1020,24 +1054,25 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
     * either way ([[readLastCheckpoint]]) — this is belt to that braces. */
   private def writeLastCheckpoint(lc: String): Unit = {
     val lcPath = new Path(logPath, "_last_checkpoint")
-    val tmp = new Path(logPath, s"._last_checkpoint-tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(lc.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val renamed = try fs.rename(tmp, lcPath) catch { case _: java.io.IOException => false }
-    if (!renamed) {
-      val out2 = fs.create(lcPath, true)
-      try out2.write(lc.getBytes(StandardCharsets.UTF_8))
-      finally out2.close()
-      fs.delete(tmp, false)
-    }
+    val tmp = new Path(logPath, LogStore.tempName(lcPath.getName))
+    try {
+      val out = fs.create(tmp, true)
+      try out.write(lc.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      val renamed = try fs.rename(tmp, lcPath) catch { case _: java.io.IOException => false }
+      if (!renamed) {
+        val out2 = fs.create(lcPath, true)
+        try out2.write(lc.getBytes(StandardCharsets.UTF_8))
+        finally out2.close()
+      }
+    } finally if (fs.exists(tmp)) fs.delete(tmp, false)
   }
 
   /** V2 checkpoint write: add/remove actions go to sidecar parquet(s)
     * under `_delta_log/_sidecars/`, the uuid-named top-level file keeps
     * the non-file actions plus checkpointMetadata and the sidecar refs.
-    * Sidecar encode parallelizes exactly like multi-part classic
-    * checkpoints (the file actions ARE the bulk at scale). */
+    * Sidecars split at `maxActionsPerPart` exactly like multi-part
+    * classic checkpoints (the file actions ARE the bulk at scale). */
   private def writeV2Checkpoint(
       version: Long, snap: Snapshot, maxActionsPerPart: Int): Unit = {
     val sidecarDir = new Path(logPath, "_sidecars")
@@ -1050,24 +1085,13 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
     val sidecarRefs: Seq[Sidecar] =
       if (fileRows.isEmpty) Nil
       else {
-        val nParts = math.min(64, 1 + (fileRows.size - 1) / math.max(1, maxActionsPerPart))
-        val tmp = new Path(logPath, s".checkpoint-tmp-${java.util.UUID.randomUUID()}")
-        spark.createDataFrame(spark.sparkContext.parallelize(fileRows, nParts), sidecarSchema)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val parts = fs.listStatus(tmp).map(_.getPath)
-          .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-          .sortBy(_.getName)
-        require(parts.nonEmpty, s"No sidecar part files written under $tmp")
-        val refs = parts.map { p =>
-          val name = s"${java.util.UUID.randomUUID()}.parquet"
-          val dest = new Path(sidecarDir, name)
-          if (!fs.rename(p, dest))
-            throw new java.io.IOException(s"Failed to move $p -> $dest")
+        val parts = slices(fileRows, maxActionsPerPart)
+          .map(p => new Path(sidecarDir, s"${java.util.UUID.randomUUID()}.parquet") -> p)
+        publishParquet(sidecarSchema, parts)(())
+        parts.map { case (dest, _) =>
           val st = fs.getFileStatus(dest)
-          Sidecar(name, st.getLen, st.getModificationTime)
-        }.toSeq
-        fs.delete(tmp, true)
-        refs
+          Sidecar(dest.getName, st.getLen, st.getModificationTime)
+        }
       }
     val v2Schema = StructType(checkpointSchema.fields ++ Seq(
       StructField("checkpointMetadata", StructType(Seq(
@@ -1092,17 +1116,8 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
             topRow(domain = Row(dom, cfg, false)) } ++
           sidecarRefs.map(s => topRow(sc =
             Row(s.path, s.sizeInBytes, s.modificationTime, Map.empty[String, String]))))
-    val tmpTop = new Path(logPath, s".checkpoint-tmp-${java.util.UUID.randomUUID()}")
-    spark.createDataFrame(spark.sparkContext.parallelize(topRows, 1), v2Schema)
-      .write.mode("overwrite").parquet(tmpTop.toString)
-    val topPart = fs.listStatus(tmpTop).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .head
-    val topDest = new Path(logPath,
-      f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")
-    if (!fs.rename(topPart, topDest))
-      throw new java.io.IOException(s"Failed to move $topPart -> $topDest")
-    fs.delete(tmpTop, true)
+    publishParquet(v2Schema, Seq(new Path(logPath,
+      f"$version%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet") -> topRows))(())
     writeLastCheckpoint(s"""{"version":$version,"size":${topRows.size + fileRows.size}}""")
   }
 
@@ -1184,19 +1199,18 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
       f.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
         d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull)
 
-  /** Convert a checkpoint DataFrame (any writer's field superset) into
-    * actions. Projects only the action structs and STREAMS rows to the
-    * driver (toLocalIterator) — at millions of checkpoint rows a full
-    * collect() would double-materialize the active set. */
-  private def checkpointDfToActions(df: DataFrame): Seq[Action] = {
-    val cols = df.columns.toSet
-    val wanted = Seq("protocol", "metaData", "add", "remove", "txn", "domainMetadata",
-      "checkpointMetadata", "sidecar")
-      .filter(cols.contains)
-    val proj = df.select(wanted.map(col): _*)
-    import scala.jdk.CollectionConverters._
-    proj.toLocalIterator().asScala.toSeq.flatMap { row =>
-      wanted.zipWithIndex.flatMap {
+  /** The actions in checkpoint parquet `files` (any writer's field
+    * superset): only the action columns are read, and rows stream from
+    * the reader into the decoder — at millions of checkpoint rows a
+    * materialized row list would double the active set in memory. */
+  private def readParquetActions(files: Seq[Path]): Seq[Action] =
+    checkpointRowsToActions(LogParquet.read(spark, files, CheckpointActionColumns))
+
+  /** Decode checkpoint rows (one action column set per row, any subset
+    * of [[CheckpointActionColumns]]) into actions. */
+  private def checkpointRowsToActions(rows: Iterator[Row]): Seq[Action] =
+    rows.flatMap { row =>
+      row.schema.fieldNames.toSeq.zipWithIndex.flatMap {
         case (name, i) if !row.isNullAt(i) =>
           val r = row.getStruct(i)
           name match {
@@ -1277,8 +1291,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
           }
         case _ => None
       }
-    }
-  }
+    }.toSeq
 
   // Null-safe field access tolerant of absent columns in foreign checkpoints.
   private def idx(r: Row, name: String): Option[Int] = {
@@ -1304,6 +1317,10 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
 object DeltaLog {
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.delta")
+
+  /** The top-level checkpoint columns that hold actions. */
+  private val CheckpointActionColumns = Seq("protocol", "metaData", "add", "remove", "txn",
+    "domainMetadata", "checkpointMetadata", "sidecar")
 
   /** Attempts [[DeltaLog.optimisticCommit]] makes before a lost race aborts. */
   private val MaxCommitAttempts = 20

@@ -364,9 +364,10 @@ object DeltaMaintenance {
     // version checksums (ours or delta-spark's) age out WITH their commit
     val CrcRe = """(\d{20})\.crc""".r
     val allLog = fs.listStatus(log.logPath).toSeq
-    // Crash debris: LogStore's content-atomic publish stages hidden
-    // `.<name>.tmp-<uuid8>` siblings; a crash between staging and publish
-    // leaves them forever (the commit/checkpoint regexes below never
+    // Crash debris: LogStore's content-atomic publish and the checkpoint
+    // writers stage hidden `.<name>.tmp-<uuid8>` files
+    // (`LogStore.tempName`); a crash between staging and publish leaves
+    // them forever (the commit/checkpoint regexes below never
     // match, orphan vacuum skips hidden trees). Sweep them once aged past
     // the retention window — a LIVE temp is mid-publish (seconds old) and
     // survives any sane retention.

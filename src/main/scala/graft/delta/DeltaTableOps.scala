@@ -3,6 +3,7 @@ package graft.delta
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LogParquet
 import org.apache.spark.sql.types._
 
 /** Table-maintenance surface: history + vacuum
@@ -1469,11 +1470,7 @@ object DeltaTableOps {
           val files = snap.activeFiles.map(f => DeltaRead.resolvePath(path, f.path))
           val narrow = FanOut(spark, files) { (conf, fp) =>
             val p = new Path(fp)
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-            val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            val msg =
-              try reader.getFooter.getFileMetaData.getSchema
-              finally reader.close()
+            val msg = LogParquet.footer(conf, p).getFileMetaData.getSchema
             widened.flatMap { case (segs, dt) =>
               // walk the group nesting to the leaf; a primitive where the
               // schema expects more nesting is a shape divergence — flag

@@ -2,12 +2,11 @@ package graft.delta
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{assert_true, coalesce, col, expr, lit, max, min, monotonically_increasing_id}
+import org.apache.spark.sql.graft.LogParquet
 import org.apache.spark.sql.types._
 
 import java.nio.charset.StandardCharsets
@@ -1246,63 +1245,59 @@ object DeltaWrite {
     * data skipping; leaf primitive columns only. */
   private[delta] def harvestStats(
       conf: Configuration, file: Path, schema: StructType): String = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks
-      var numRecords = 0L
-      val mins = mutable.LinkedHashMap.empty[String, Any]
-      val maxs = mutable.LinkedHashMap.empty[String, Any]
-      val nulls = mutable.LinkedHashMap.empty[String, Long]
-      val fieldType: Map[String, DataType] =
-        schema.fields.map(f => f.name -> f.dataType).toMap
-      blocks.forEach { b =>
-        numRecords += b.getRowCount
-        b.getColumns.forEach { c =>
-          val colPath = c.getPath.toDotString
-          if (fieldType.contains(colPath)) {
-            val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
-            if (st != null) {
-              nulls(colPath) = nulls.getOrElse(colPath, 0L) +
-                (if (st.isNumNullsSet) st.getNumNulls else 0L)
-              if (st.hasNonNullValue) {
-                val (mn, mx) = statValues(st, c.getPrimitiveType.getLogicalTypeAnnotation,
-                  fieldType(colPath))
-                (mn, mins.get(colPath)) match {
-                  case (Some(v), None) => mins(colPath) = v
-                  case (Some(v), Some(cur)) => if (lessThan(v, cur)) mins(colPath) = v
-                  case _ => ()
-                }
-                (mx, maxs.get(colPath)) match {
-                  case (Some(v), None) => maxs(colPath) = v
-                  case (Some(v), Some(cur)) => if (lessThan(cur, v)) maxs(colPath) = v
-                  case _ => ()
-                }
+    val blocks = LogParquet.footer(conf, file).getBlocks
+    var numRecords = 0L
+    val mins = mutable.LinkedHashMap.empty[String, Any]
+    val maxs = mutable.LinkedHashMap.empty[String, Any]
+    val nulls = mutable.LinkedHashMap.empty[String, Long]
+    val fieldType: Map[String, DataType] =
+      schema.fields.map(f => f.name -> f.dataType).toMap
+    blocks.forEach { b =>
+      numRecords += b.getRowCount
+      b.getColumns.forEach { c =>
+        val colPath = c.getPath.toDotString
+        if (fieldType.contains(colPath)) {
+          val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+          if (st != null) {
+            nulls(colPath) = nulls.getOrElse(colPath, 0L) +
+              (if (st.isNumNullsSet) st.getNumNulls else 0L)
+            if (st.hasNonNullValue) {
+              val (mn, mx) = statValues(st, c.getPrimitiveType.getLogicalTypeAnnotation,
+                fieldType(colPath))
+              (mn, mins.get(colPath)) match {
+                case (Some(v), None) => mins(colPath) = v
+                case (Some(v), Some(cur)) => if (lessThan(v, cur)) mins(colPath) = v
+                case _ => ()
+              }
+              (mx, maxs.get(colPath)) match {
+                case (Some(v), None) => maxs(colPath) = v
+                case (Some(v), Some(cur)) => if (lessThan(cur, v)) maxs(colPath) = v
+                case _ => ()
               }
             }
           }
         }
       }
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = m.createObjectNode()
-      root.put("numRecords", numRecords)
-      def putVals(field: String, vals: mutable.LinkedHashMap[String, Any]): Unit = {
-        val n = root.putObject(field)
-        vals.foreach {
-          case (k, v: Long) => n.put(k, v)
-          case (k, v: Double) => n.put(k, v)
-          case (k, v: String) => n.put(k, v)
-          case (k, v: Boolean) => n.put(k, v)
-          case (k, v: java.math.BigDecimal) => n.put(k, v)
-          case (k, v) => n.put(k, v.toString)
-        }
+    }
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = m.createObjectNode()
+    root.put("numRecords", numRecords)
+    def putVals(field: String, vals: mutable.LinkedHashMap[String, Any]): Unit = {
+      val n = root.putObject(field)
+      vals.foreach {
+        case (k, v: Long) => n.put(k, v)
+        case (k, v: Double) => n.put(k, v)
+        case (k, v: String) => n.put(k, v)
+        case (k, v: Boolean) => n.put(k, v)
+        case (k, v: java.math.BigDecimal) => n.put(k, v)
+        case (k, v) => n.put(k, v.toString)
       }
-      putVals("minValues", mins)
-      putVals("maxValues", maxs)
-      val nn = root.putObject("nullCount")
-      nulls.foreach { case (k, v) => nn.put(k, v) }
-      m.writeValueAsString(root)
-    } finally reader.close()
+    }
+    putVals("minValues", mins)
+    putVals("maxValues", maxs)
+    val nn = root.putObject("nullCount")
+    nulls.foreach { case (k, v) => nn.put(k, v) }
+    m.writeValueAsString(root)
   }
 
   private def lessThan(a: Any, b: Any): Boolean = (a, b) match {

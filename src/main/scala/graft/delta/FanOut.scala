@@ -16,14 +16,15 @@ import scala.reflect.ClassTag
   * broadcast, the partition count and the error surface exist once.
   *
   * Where the two sides cross (median of 5 timed calls after one warm-up,
-  * ms per call; local FS, `local[4]` on a 4-vCPU VM, 328 ticks of
-  * hypervisor steal over the 285 s run):
+  * ms per call; local FS, `local[4]` on a 4-vCPU VM; hypervisor steal
+  * was 9 ticks over the move rows' 10 s run and 328 ticks over the other
+  * rows' 285 s):
   *
   * {{{
   *   items               16      64      256     1024
   *   rename + footer stat
-  *     serial           264     745     3109    11231
-  *     job              192     340     1054     3513
+  *     serial            42      85      203      472
+  *     job              164     125      177      301
   *   DV byte load
   *     serial             3.7     9.7     42      173
   *     job               41      42       67      112
@@ -32,12 +33,11 @@ import scala.reflect.ClassTag
   *     job               41      37       34       48
   * }}}
   *
-  * A job costs ~40 ms to schedule here. DV loads cross near 500 items,
-  * exists checks above 1024, and the move crosses below 16 because its
-  * serial footer read costs ~15 ms a file. One threshold cannot fit all
-  * three, so [[Threshold]] stays at 64, where no DV load in the lake_dml
-  * benchmark's read planning runs as a job, and callers with a cheaper
-  * action pass their own (`restore`, `vacuum`). */
+  * A job costs ~40-120 ms to schedule here. The move crosses between
+  * 64 and 256 items, DV loads near 500 and exists checks above 1024, so
+  * [[Threshold]] stays at 64: the move and every DV load in the lake_dml
+  * benchmark's read planning run serially up to it, and callers with a
+  * cheaper action pass their own (`restore`, `vacuum`). */
 private[delta] object FanOut {
 
   /** Default item count at or below which the action runs serially on

@@ -33,6 +33,12 @@ trait LogStore {
 
 object LogStore {
 
+  /** Hidden temp name for a `_delta_log` file being written,
+    * `.<name>.tmp-<uuid8>`: listers skip it, and log cleanup sweeps it
+    * once aged. */
+  private[delta] def tempName(name: String): String =
+    s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
+
   /** POSIX CREATE_NEW — atomic on local filesystems. */
   /** Write fully to a same-directory hidden temp file, close, then move
     * into place — the commit body becomes visible to listers and readers
@@ -48,8 +54,7 @@ object LogStore {
     * local the pre-check carries it, same as before). */
   private def publishViaRename(
       fs: FileSystem, target: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(target.getParent,
-      s".${target.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = new Path(target.getParent, tempName(target.getName))
     val out = fs.create(tmp, /*overwrite=*/ true)
     try out.write(bytes) finally out.close()
     var published = false
@@ -79,8 +84,7 @@ object LogStore {
       // window the old create-then-stream left open (see
       // [[publishViaRename]]). Filesystems without hard links fall back
       // to exists-check + ATOMIC_MOVE (content still atomic).
-      val tmp = p.resolveSibling(
-        s".${p.getFileName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      val tmp = p.resolveSibling(tempName(p.getFileName.toString))
       val out = java.nio.file.Files.newOutputStream(tmp,
         java.nio.file.StandardOpenOption.CREATE_NEW,
         java.nio.file.StandardOpenOption.WRITE)
