@@ -274,7 +274,7 @@ object DeltaDml {
     val removes = (fullRemoves ++ dvTargets).map(_.remove(now))
     val readds = dvTargets.map(f =>
       f.copy(dataChange = true, deletionVector = Some(descriptors(f.path))))
-    val protocolUpgrade = dvProtocolUpgrade(snap.protocol)
+    val protocolUpgrade = DeltaLog.withFeatures(snap.protocol, Seq("deletionVectors"))
 
     val op = if (isDelete) "DELETE" else "UPDATE"
     def mkActions(v: Long): Seq[Action] = (CommitInfo(
@@ -310,30 +310,6 @@ object DeltaDml {
     // property
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
     DmlResult(affected, fullRemoves.size, 0, readds.size + newAdds.size)
-  }
-
-  /** Protocol action upgrading to reader 3 / writer 7 + deletionVectors,
-    * enumerating the features the current version numbers imply (the
-    * table-features upgrade rule); None when already sufficient. */
-  private def dvProtocolUpgrade(p: Protocol): Option[Protocol] = {
-    val hasReader = p.minReaderVersion >= 3 &&
-      p.readerFeatures.exists(_.contains("deletionVectors"))
-    val hasWriter = p.minWriterVersion >= 7 &&
-      p.writerFeatures.exists(_.contains("deletionVectors"))
-    if (hasReader && hasWriter) None
-    else {
-      // the table-features upgrade rule: enumerate EVERY feature the
-      // legacy version implied, or a feature-aware foreign writer could
-      // legally skip an obligation the version used to carry
-      val legacyWriter = DeltaLog.legacyWriterFeatures(p)
-      val legacyReader =
-        if (p.minReaderVersion >= 3) p.readerFeatures.getOrElse(Nil)
-        else if (p.minReaderVersion == 2) Seq("columnMapping")
-        else Nil
-      Some(Protocol(3, 7,
-        readerFeatures = Some((legacyReader :+ "deletionVectors").distinct),
-        writerFeatures = Some((legacyWriter :+ "deletionVectors").distinct)))
-    }
   }
 
   /** UPDATE table SET <assignments> WHERE <filters>. Each assignment's

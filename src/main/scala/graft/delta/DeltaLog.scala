@@ -76,10 +76,13 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
       .toSeq
       .sorted
 
-  /** Checkpoint versions in a log-directory name listing: classic
+  /** Checkpoint versions in a log-directory listing: classic
     * single-file, multi-part (`N.checkpoint.i.n.parquet`) when every
-    * declared part exists, and V2 uuid-named. */
-  private def checkpointVersionsIn(names: Seq[String]): Seq[Long] = {
+    * declared part exists, and V2 uuid-named. Only regular files count: a
+    * directory under a checkpoint's name is no checkpoint, and must not
+    * move the table's head past its last commit. */
+  private def checkpointVersionsIn(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Long] = {
+    val names = statuses.filter(_.isFile).map(_.getPath.getName)
     val single = names.collect { case CheckpointFileRe(v) => v.toLong }
     val multi = names
       .collect { case MultiPartCheckpointRe(v, _, n) => (v.toLong, n.toInt) }
@@ -93,7 +96,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
     * (`N.checkpoint.i.n.parquet`) when every declared part exists, and
     * V2 uuid-named (`N.checkpoint.<uuid>.parquet|json`). */
   def listCheckpointVersions: Seq[Long] =
-    checkpointVersionsIn(listLogStatuses().map(_.getPath.getName))
+    checkpointVersionsIn(listLogStatuses())
 
   /** V2 top-level checkpoint files for `v` (several uuids possible when
     * writers raced — any one is a complete, equivalent checkpoint). */
@@ -158,9 +161,9 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
 
   def latestVersion: Long = {
     // one listing, not two — this sits in every commit-retry loop
-    val names = listLogStatuses().map(_.getPath.getName)
-    val vs = names.collect { case CommitFileRe(v) => v.toLong }
-    val cps = checkpointVersionsIn(names)
+    val statuses = listLogStatuses()
+    val vs = statuses.map(_.getPath.getName).collect { case CommitFileRe(v) => v.toLong }
+    val cps = checkpointVersionsIn(statuses)
     if (vs.isEmpty && cps.isEmpty)
       throw new IllegalArgumentException(s"Not a Delta table (no commits): $tablePath")
     (vs ++ cps).max
@@ -489,7 +492,7 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
         case CommitFileRe(v) => Some(v.toLong -> s)
         case _ => None
       }).toMap
-    val cpVs = checkpointVersionsIn(statuses.map(_.getPath.getName))
+    val cpVs = checkpointVersionsIn(statuses)
     if (commitSt.isEmpty && cpVs.isEmpty)
       throw new IllegalArgumentException(s"Not a Delta table (no commits): $tablePath")
     val latest = (commitSt.keysIterator ++ cpVs.iterator).max
@@ -861,8 +864,11 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
 
   def crcFile(v: Long): Path = new Path(logPath, f"$v%020d.crc")
 
-  /** The optimistic commit every data-changing operation (WRITE,
-    * DELETE/UPDATE in both flavors, MERGE, OPTIMIZE) goes through.
+  /** The one commit every table operation goes through: WRITE,
+    * DELETE/UPDATE in both flavors, MERGE and OPTIMIZE retry past
+    * compatible winners; the metadata and maintenance operations
+    * (ALTER, clone, FSCK, CONVERT, TRUNCATE, RESTORE, DROP FEATURE, row
+    * tracking's enable) commit once with `retriable = false`.
     * `actionsAt(v)` is committed at the version after `read` (0 for a
     * create). On a lost race, when `retriable`, each interleaved winner is
     * checked against this commit and the actions re-commit at the new
@@ -886,8 +892,8 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
   private[delta] def optimisticCommit(
       read: Option[Snapshot],
       actionsAt: Long => Seq[Action],
-      readPredicate: AddFile => Boolean,
-      staged: Seq[String],
+      readPredicate: AddFile => Boolean = _ => false,
+      staged: Seq[String] = Nil,
       checkpointInterval: Int = 10,
       retriable: Boolean = true): Long = {
     def lose(w: Long, why: String, cause: Throwable): Nothing =
@@ -1523,11 +1529,47 @@ object DeltaLog {
     * to carry. Already-featured protocols return their own list. */
   def legacyWriterFeatures(p: Protocol): Seq[String] =
     if (p.minWriterVersion >= 7) p.writerFeatures.getOrElse(Nil)
-    else Seq(
-      "appendOnly" -> 2, "invariants" -> 2, "checkConstraints" -> 3,
-      "changeDataFeed" -> 4, "generatedColumns" -> 4, "columnMapping" -> 5,
-      "identityColumns" -> 6)
-      .collect { case (f, mv) if p.minWriterVersion >= mv => f }
+    else LegacyWriterVersions.collect { case (f, mv) if p.minWriterVersion >= mv => f }
+
+  /** The lowest legacy writer version implying each feature that has one
+    * (columnMapping also needs reader 2). */
+  private val LegacyWriterVersions = Seq(
+    "appendOnly" -> 2, "invariants" -> 2, "checkConstraints" -> 3,
+    "changeDataFeed" -> 4, "generatedColumns" -> 4, "columnMapping" -> 5,
+    "identityColumns" -> 6)
+
+  /** The table-features upgrade rule: `p` raised to support `features`,
+    * None when it already does. A legacy protocol first bumps to the
+    * lowest version implying the features that have one (writer 4 for
+    * changeDataFeed, reader 2 / writer 5 for columnMapping, …). Features
+    * still missing convert it to writer 7 — reader 3 when one of them is a
+    * reader-writer feature — listing every feature the bumped version
+    * implied, or a feature-aware foreign writer could legally skip an
+    * obligation the version used to carry. */
+  def withFeatures(p: Protocol, features: Seq[String]): Option[Protocol] = {
+    def missing(q: Protocol): Seq[String] = features.filterNot(f =>
+      legacyWriterFeatures(q).contains(f) &&
+        (!SupportedReaderFeatures(f) || legacyReaderFeatures(q).contains(f)))
+    if (missing(p).isEmpty) return None
+    val bumped =
+      if (p.minWriterVersion >= 7) p
+      else p.copy(
+        minReaderVersion =
+          if (features.contains("columnMapping")) math.max(2, p.minReaderVersion)
+          else p.minReaderVersion,
+        minWriterVersion = (p.minWriterVersion +:
+          LegacyWriterVersions.collect { case (f, v) if features.contains(f) => v }).max)
+    val rest = missing(bumped)
+    if (rest.isEmpty) return Some(bumped)
+    val readerRest = rest.filter(SupportedReaderFeatures)
+    Some(Protocol(
+      if (readerRest.isEmpty) bumped.minReaderVersion else 3, 7,
+      readerFeatures =
+        if (readerRest.isEmpty) bumped.readerFeatures
+        else Some((legacyReaderFeatures(bumped) ++ readerRest).distinct),
+      writerFeatures = Some((legacyWriterFeatures(bumped) ++ features).distinct)))
+  }
+
   private val CommitFileRe = """(\d{20})\.json""".r
   private val CheckpointFileRe = """(\d{20})\.checkpoint\.parquet""".r
   private val MultiPartCheckpointRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r

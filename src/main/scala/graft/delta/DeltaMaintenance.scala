@@ -270,7 +270,7 @@ object DeltaMaintenance {
       Seq(commitInfo.copy(readVersion = Some(v - 1))) ++
         metaActs ++ rtDomain ++ rtAdds ++ removes
     }
-    log.optimisticCommit(Some(snap), actionsAt, _ => false, staged = adds.map(_.path))
+    log.optimisticCommit(Some(snap), actionsAt, staged = adds.map(_.path))
     (snap.activeFiles.size, snap.activeFiles.size - removes.size + adds.size)
   }
 

@@ -337,7 +337,6 @@ object DeltaTableOps {
     // clone's adds, metadata/protocol replace wholesale, the table id
     // stays (it is the same table, replaced)
     val tgtSnap = if (exists) Some(tgtLog.snapshot(None)) else None
-    val commitV = tgtSnap.map(_.version + 1).getOrElse(0L)
     val now = System.currentTimeMillis()
     val adds = snap.activeFiles.map { f =>
       val abs = DeltaRead.resolvePath(sourcePath, f.path)
@@ -378,8 +377,9 @@ object DeltaTableOps {
       DomainMetadata(d, cfg)
     }
     val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(_.remove(now))
-    tgtLog.writeCommit(commitV, Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes)
-    CloneResult(commitV, adds.size)
+    val v = tgtLog.optimisticCommit(tgtSnap,
+      _ => Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes, retriable = false)
+    CloneResult(v, adds.size)
   }
 
   private def hasScheme(p: String): Boolean =
@@ -480,8 +480,11 @@ object DeltaTableOps {
       DomainMetadata(d, cfg)
     }
     val removes = tgtSnap.toSeq.flatMap(_.activeFiles).map(_.remove(now))
-    tgtLog.writeCommit(commitV, Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes)
-    CloneResult(commitV, adds.size)
+    // no `staged`: copy names repeat across attempts, so a lost race
+    // must not delete what a concurrent clone may have committed
+    val v = tgtLog.optimisticCommit(tgtSnap,
+      _ => Seq(ci, snap.protocol, meta) ++ domainActs ++ adds ++ removes, retriable = false)
+    CloneResult(v, adds.size)
   }
 
   final case class FsckResult(tableVersion: Long, removedEntries: Long)
@@ -508,8 +511,8 @@ object DeltaTableOps {
     val ci = CommitInfo(now, "FSCK",
       operationMetrics = Map("numRemovedFiles" -> removes.size.toString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ removes)
-    FsckResult(snap.version + 1, removes.size.toLong)
+    FsckResult(log.optimisticCommit(Some(snap), _ => Seq(ci) ++ removes, retriable = false),
+      removes.size.toLong)
   }
 
   final case class ConvertResult(numFiles: Long, partitionColumns: Seq[String])
@@ -571,15 +574,9 @@ object DeltaTableOps {
       isBlindAppend = Some(false))
     // a discovered TIMESTAMP_NTZ / VARIANT column carries the same
     // protocol obligation as a written one (see DeltaWrite)
-    val typeFeats = DeltaWrite.typeFeaturesOf(DeltaWrite.normalize(schema))
-    val proto =
-      if (typeFeats.nonEmpty)
-        Protocol(3, 7,
-          readerFeatures = Some(typeFeats),
-          writerFeatures = Some(
-            (DeltaLog.legacyWriterFeatures(Protocol(1, 2)) ++ typeFeats).distinct))
-      else Protocol(1, 2)
-    log.writeCommit(0L, Seq(ci, proto, meta) ++ adds)
+    val proto = DeltaLog.withFeatures(Protocol(1, 2),
+      DeltaWrite.typeFeaturesOf(DeltaWrite.normalize(schema))).getOrElse(Protocol(1, 2))
+    log.optimisticCommit(None, _ => Seq(ci, proto, meta) ++ adds, retriable = false)
     ConvertResult(adds.size, partCols)
   }
 
@@ -613,19 +610,12 @@ object DeltaTableOps {
     if (DeltaWrite.cdfEnabled(snap)) return snap.version // idempotent
     val meta = snap.metadata.copy(configuration =
       snap.metadata.configuration + ("delta.enableChangeDataFeed" -> "true"))
-    val proto =
-      if (snap.protocol.minWriterVersion >= 7) {
-        val feats = snap.protocol.writerFeatures.getOrElse(Nil)
-        if (feats.contains("changeDataFeed")) Nil
-        else Seq(snap.protocol.copy(writerFeatures = Some(feats :+ "changeDataFeed")))
-      } else if (snap.protocol.minWriterVersion >= 4) Nil
-      else Seq(snap.protocol.copy(minWriterVersion = 4))
+    val proto = DeltaLog.withFeatures(snap.protocol, Seq("changeDataFeed"))
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters =
         Map("properties" -> """{"delta.enableChangeDataFeed":"true"}"""),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ proto ++ Seq(meta))
-    snap.version + 1
+    log.optimisticCommit(Some(snap), _ => Seq(ci) ++ proto ++ Seq(meta), retriable = false)
   }
 
   /** ALTER TABLE … SET TBLPROPERTIES (generic): merge the given
@@ -662,8 +652,7 @@ object DeltaTableOps {
       operationParameters = Map("properties" ->
         props.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    snap.version + 1
+    log.optimisticCommit(Some(snap), _ => Seq(ci, meta), retriable = false)
   }
 
   /** ALTER TABLE … ALTER COLUMN … TYPE — type widening (the
@@ -728,24 +717,15 @@ object DeltaTableOps {
             .build())
       else f
     })
-    val cur = snap.protocol
-    val needsFeature = !cur.readerFeatures.exists(_.contains("typeWidening"))
-    val protocol =
-      if (!needsFeature) None
-      else Some(Protocol(3, 7,
-        readerFeatures = Some(
-          (DeltaLog.legacyReaderFeatures(cur) :+ "typeWidening").distinct),
-        writerFeatures = Some(
-          (DeltaLog.legacyWriterFeatures(cur) :+ "typeWidening").distinct)))
+    val protocol = DeltaLog.withFeatures(snap.protocol, Seq("typeWidening"))
     val ci = CommitInfo(System.currentTimeMillis(), "ALTER COLUMN TYPE",
       operationParameters = Map("column" -> column,
         "fromType" -> field.dataType.simpleString,
         "toType" -> newType.simpleString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1,
-      Seq(ci) ++ protocol.toSeq ++
-        Seq(snap.metadata.copy(schemaString = widened.json)))
-    snap.version + 1
+    log.optimisticCommit(Some(snap),
+      _ => Seq(ci) ++ protocol ++ Seq(snap.metadata.copy(schemaString = widened.json)),
+      retriable = false)
   }
 
   /** Liquid clustering (writer feature `clustering` + the
@@ -766,14 +746,7 @@ object DeltaTableOps {
         "— clustering and hive partitioning are competing physical layouts")
     columns.foreach(c => require(snap.schema.fieldNames.contains(c),
       s"Unknown clustering column: $c"))
-    val cur = snap.protocol
-    val needsUpgrade = !cur.writerFeatures.exists(_.contains("clustering"))
-    val protocol =
-      if (!needsUpgrade) None
-      else Some(Protocol(cur.minReaderVersion, 7,
-        readerFeatures = cur.readerFeatures,
-        writerFeatures = Some((DeltaLog.legacyWriterFeatures(cur) ++
-          Seq("clustering", "domainMetadata")).distinct)))
+    val protocol = DeltaLog.withFeatures(snap.protocol, Seq("clustering", "domainMetadata"))
     val domain =
       if (columns.isEmpty)
         // CLUSTER BY NONE: evict the domain — replay keeps the latest
@@ -785,8 +758,7 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "CLUSTER BY",
       operationParameters = Map("clusterBy" -> columns.mkString(",")),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ protocol.toSeq ++ Seq(domain))
-    snap.version + 1
+    log.optimisticCommit(Some(snap), _ => Seq(ci) ++ protocol ++ Seq(domain), retriable = false)
   }
 
   private[delta] val ClusteringDomain = "delta.clustering"
@@ -880,8 +852,7 @@ object DeltaTableOps {
         "minReaderVersion" -> minReader.toString,
         "minWriterVersion" -> minWriter.toString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, next))
-    snap.version + 1
+    log.optimisticCommit(Some(snap), _ => Seq(ci, next), retriable = false)
   }
 
   /** ALTER TABLE … UNSET TBLPROPERTIES: remove configuration keys in one
@@ -912,8 +883,7 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "UNSET TBLPROPERTIES",
       operationParameters = Map("properties" -> keys.mkString("[", ",", "]")),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    snap.version + 1
+    log.optimisticCommit(Some(snap), _ => Seq(ci, meta), retriable = false)
   }
 
   /** DESCRIBE DETAIL: a one-row table summary straight from the snapshot
@@ -980,18 +950,12 @@ object DeltaTableOps {
         ("delta.enableInCommitTimestamps" -> "true") +
         ("delta.inCommitTimestampEnablementVersion" -> version.toString) +
         ("delta.inCommitTimestampEnablementTimestamp" -> now.toString))
-    val proto = {
-      val feats = DeltaLog.legacyWriterFeatures(snap.protocol)
-      if (feats.contains("inCommitTimestamp")) Nil
-      else Seq(snap.protocol.copy(minWriterVersion = 7,
-        writerFeatures = Some((feats :+ "inCommitTimestamp").distinct)))
-    }
+    val proto = DeltaLog.withFeatures(snap.protocol, Seq("inCommitTimestamp"))
     val ci = CommitInfo(now, "SET TBLPROPERTIES",
       operationParameters =
         Map("properties" -> """{"delta.enableInCommitTimestamps":"true"}"""),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(version, Seq(ci) ++ proto ++ Seq(meta))
-    version
+    log.optimisticCommit(Some(snap), _ => Seq(ci) ++ proto ++ Seq(meta), retriable = false)
   }
 
   def addCheckConstraint(
@@ -1012,22 +976,16 @@ object DeltaTableOps {
     val now = System.currentTimeMillis()
     val meta = snap.metadata.copy(
       configuration = snap.metadata.configuration + (key -> exprSql))
-    // Legacy protocols: writer ≥ 3 implies constraints. Table-features
-    // protocols (writer 7) imply NOTHING by version — the feature must be
-    // listed, or a feature-aware foreign writer that supports writer 7
-    // but not checkConstraints would legally write unvalidated rows.
-    val proto =
-      if (snap.protocol.minWriterVersion >= 7) {
-        val feats = snap.protocol.writerFeatures.getOrElse(Nil)
-        if (feats.contains("checkConstraints")) Nil
-        else Seq(snap.protocol.copy(writerFeatures = Some(feats :+ "checkConstraints")))
-      } else if (snap.protocol.minWriterVersion >= 3) Nil
-      else Seq(snap.protocol.copy(minWriterVersion = 3))
+    // legacy protocols: writer ≥ 3 implies constraints; a writer-7
+    // protocol must list the feature, or a feature-aware foreign writer
+    // that lacks checkConstraints would legally write unvalidated rows
+    val proto = DeltaLog.withFeatures(snap.protocol, Seq("checkConstraints"))
     val ci = CommitInfo(now, "ADD CONSTRAINT",
       operationParameters = Map("name" -> name, "expr" -> exprSql),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ proto ++ Seq(meta))
-    ConstraintResult(snap.version + 1, name)
+    ConstraintResult(
+      log.optimisticCommit(Some(snap), _ => Seq(ci) ++ proto ++ Seq(meta), retriable = false),
+      name)
   }
 
   /** ALTER TABLE … DROP CONSTRAINT. Protocol is never downgraded (the
@@ -1045,8 +1003,8 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "DROP CONSTRAINT",
       operationParameters = Map("name" -> name),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    ConstraintResult(snap.version + 1, name)
+    ConstraintResult(
+      log.optimisticCommit(Some(snap), _ => Seq(ci, meta), retriable = false), name)
   }
 
   final case class MappingResult(tableVersion: Long, maxColumnId: Long)
@@ -1096,25 +1054,13 @@ object DeltaTableOps {
       configuration = snap.metadata.configuration ++ Map(
         "delta.columnMapping.mode" -> "name",
         "delta.columnMapping.maxColumnId" -> nextId.toString))
-    val proto: Seq[Action] = {
-      val p = snap.protocol
-      if (p.minReaderVersion >= 3 || p.minWriterVersion >= 7) {
-        val rf = p.readerFeatures.getOrElse(Nil)
-        val wf = p.writerFeatures.getOrElse(Nil)
-        if (rf.contains("columnMapping") && wf.contains("columnMapping")) Nil
-        else Seq(Protocol(3, 7,
-          readerFeatures = Some((rf :+ "columnMapping").distinct),
-          writerFeatures = Some((wf :+ "columnMapping").distinct)))
-      } else if (p.minReaderVersion >= 2 && p.minWriterVersion >= 5) Nil
-      else Seq(p.copy(
-        minReaderVersion = math.max(2, p.minReaderVersion),
-        minWriterVersion = math.max(5, p.minWriterVersion)))
-    }
+    val proto = DeltaLog.withFeatures(snap.protocol, Seq("columnMapping"))
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters = Map("delta.columnMapping.mode" -> "name"),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci) ++ proto ++ Seq(meta))
-    MappingResult(snap.version + 1, nextId)
+    MappingResult(
+      log.optimisticCommit(Some(snap), _ => Seq(ci) ++ proto ++ Seq(meta), retriable = false),
+      nextId)
   }
 
   /** ALTER TABLE … RENAME COLUMN — metadata-only under column mapping:
@@ -1141,8 +1087,7 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "RENAME COLUMN",
       operationParameters = Map("from" -> oldName, "to" -> newName),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    MappingResult(snap.version + 1,
+    MappingResult(log.optimisticCommit(Some(snap), _ => Seq(ci, meta), retriable = false),
       snap.metadata.configuration.get("delta.columnMapping.maxColumnId")
         .map(_.toLong).getOrElse(0L))
   }
@@ -1167,8 +1112,7 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "DROP COLUMN",
       operationParameters = Map("column" -> name),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    MappingResult(snap.version + 1,
+    MappingResult(log.optimisticCommit(Some(snap), _ => Seq(ci, meta), retriable = false),
       snap.metadata.configuration.get("delta.columnMapping.maxColumnId")
         .map(_.toLong).getOrElse(0L))
   }
@@ -1210,7 +1154,6 @@ object DeltaTableOps {
     val removedRows: Long =
       if (statRows.forall(_.isDefined)) statRows.flatten.sum
       else DeltaRead.load(spark, path).count()
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val cdcActions =
       if (!DeltaWrite.cdfEnabled(snap)) Nil
       else DeltaWrite.stageFiles(
@@ -1222,13 +1165,10 @@ object DeltaTableOps {
         "numRemovedFiles" -> removes.size.toString,
         "numDeletedRows" -> removedRows.toString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    try log.writeCommit(snap.version + 1, Seq(ci) ++ cdcActions ++ removes)
-    catch {
-      case e: Throwable =>
-        DeltaWrite.deleteStaged(fs, path, cdcActions.map(_.path))
-        throw e
-    }
-    TruncateResult(snap.version + 1, removes.size.toLong, removedRows)
+    TruncateResult(
+      log.optimisticCommit(Some(snap), _ => Seq(ci) ++ cdcActions ++ removes,
+        staged = cdcActions.map(_.path), retriable = false),
+      removes.size.toLong, removedRows)
   }
 
   /** ALTER TABLE … ALTER COLUMN c SET DEFAULT expr — column defaults
@@ -1284,23 +1224,13 @@ object DeltaTableOps {
             .putString("CURRENT_DEFAULT", exprSql).build())
       else f
     })
-    // allowColumnDefaults is features-only (no legacy writer version
-    // implies it): list it, or jump to writer 7 enumerating the implied set
-    val proto =
-      if (snap.protocol.writerFeatures.exists(_.contains("allowColumnDefaults"))) Nil
-      else if (snap.protocol.minWriterVersion >= 7)
-        Seq(snap.protocol.copy(writerFeatures = Some(
-          (snap.protocol.writerFeatures.getOrElse(Nil) :+ "allowColumnDefaults").distinct)))
-      else Seq(Protocol(snap.protocol.minReaderVersion, 7,
-        readerFeatures = snap.protocol.readerFeatures,
-        writerFeatures = Some(
-          (DeltaLog.legacyWriterFeatures(snap.protocol) :+ "allowColumnDefaults").distinct)))
+    val proto = DeltaLog.withFeatures(snap.protocol, Seq("allowColumnDefaults"))
     val ci = CommitInfo(System.currentTimeMillis(), "SET DEFAULT",
       operationParameters = Map("column" -> field.name, "expr" -> exprSql),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1,
-      Seq(ci) ++ proto ++ Seq(snap.metadata.copy(schemaString = updated.json)))
-    snap.version + 1
+    log.optimisticCommit(Some(snap),
+      _ => Seq(ci) ++ proto ++ Seq(snap.metadata.copy(schemaString = updated.json)),
+      retriable = false)
   }
 
   /** ALTER TABLE … ALTER COLUMN c DROP DEFAULT — removes the
@@ -1323,9 +1253,8 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "DROP DEFAULT",
       operationParameters = Map("column" -> column),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1,
-      Seq(ci, snap.metadata.copy(schemaString = updated.json)))
-    snap.version + 1
+    log.optimisticCommit(Some(snap),
+      _ => Seq(ci, snap.metadata.copy(schemaString = updated.json)), retriable = false)
   }
 
   /** The per-column default expressions a snapshot declares
@@ -1601,13 +1530,14 @@ object DeltaTableOps {
         // remaining implied features stay enumerated as obligations)
         if (newReader.isEmpty) 1 else 3,
         7, newReader, newWriter)
-    val version = snap.version + 1
     val ci = CommitInfo(System.currentTimeMillis(), "DROP FEATURE",
       operationParameters = Map("feature" -> feature,
         "truncateHistory" -> truncateHistory.toString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(version,
-      Seq(ci, newProtocol) ++ metaAction.toSeq ++ domainAction.toSeq)
+    // no cadence checkpoint: the explicit one below must fail the drop
+    val version = log.optimisticCommit(Some(snap),
+      _ => Seq(ci, newProtocol) ++ metaAction ++ domainAction,
+      checkpointInterval = 0, retriable = false)
     // checkpoint the downgraded state so replay never crosses a DV action
     log.writeCheckpoint(version)
     val removed =
@@ -1824,8 +1754,7 @@ object DeltaTableOps {
     val ci = CommitInfo(System.currentTimeMillis(), "ADD COLUMN",
       operationParameters = Map("column" -> name, "type" -> dataType.simpleString),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(snap.version + 1, Seq(ci, meta))
-    MappingResult(snap.version + 1, nextId)
+    MappingResult(log.optimisticCommit(Some(snap), _ => Seq(ci, meta), retriable = false), nextId)
   }
 
   /** RESTORE TABLE … TO VERSION: one new commit that returns the table's
@@ -1845,11 +1774,10 @@ object DeltaTableOps {
       spark: SparkSession, path: String, toVersion: Long,
       existsCheckThreshold: Int = 1000): RestoreResult = {
     val log = DeltaLog.forTable(spark, path)
-    val latest = log.latestVersion
-    require(toVersion >= 0 && toVersion <= latest,
-      s"Cannot restore $path to version $toVersion: log has versions 0..$latest")
-    val target = log.snapshot(Some(toVersion))
     val current = log.snapshot(None)
+    require(toVersion >= 0 && toVersion <= current.version,
+      s"Cannot restore $path to version $toVersion: log has versions 0..${current.version}")
+    val target = log.snapshot(Some(toVersion))
     val now = System.currentTimeMillis()
 
     // Diff by INCARNATION — (path, DV uniqueId) — not by path: after a
@@ -1921,17 +1849,19 @@ object DeltaTableOps {
           frames += DeltaDml.readFiles(spark, path, target, adds)
             .withColumn(ct, lit("insert"))
         DeltaWrite.stageFiles(frames.result().reduce(_ unionByName _),
-          path, latest + 1, current.metadata, DeltaWrite.CdcFiles)
+          path, current.version + 1, current.metadata, DeltaWrite.CdcFiles)
       }
     val ci = CommitInfo(now, "RESTORE",
       operationParameters = Map("version" -> toVersion.toString),
       operationMetrics = Map(
         "numRestoredFiles" -> adds.size.toString,
         "numRemovedFiles" -> removes.size.toString),
-      readVersion = Some(latest), isBlindAppend = Some(false))
+      readVersion = Some(current.version), isBlindAppend = Some(false))
     val meta = if (metaChanged) Seq(target.metadata) else Nil
-    log.writeCommit(latest + 1, Seq(ci) ++ meta ++ cdcActions ++ adds ++ removes)
-    RestoreResult(latest + 1, adds.size, removes.size)
+    RestoreResult(
+      log.optimisticCommit(Some(current), _ => Seq(ci) ++ meta ++ cdcActions ++ adds ++ removes,
+        staged = cdcActions.map(_.path), retriable = false),
+      adds.size, removes.size)
   }
 
   /** Batch change feed over a commit range: per version in

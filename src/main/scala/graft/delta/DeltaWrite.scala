@@ -603,47 +603,27 @@ object DeltaWrite {
       isBlindAppend = Some(mode == "append" || isNew)
     )
 
-    // a new table's protocol reflects what its metadata demands: writer 6
-    // covers identity columns, 4 covers generated columns and the change
-    // data feed; plain tables stay at the reference-compatible (1, 2).
-    // Row tracking has NO legacy version — a create that asks for it
-    // jumps straight to writer-7 features, enumerating the implied set.
-    val legacyCreateProtocol =
-      if (identityColumnsOf(df.schema).nonEmpty) Protocol(1, 6)
-      else if (generatedColumnsOf(df.schema).nonEmpty ||
-        configuration.get("delta.enableChangeDataFeed")
-          .exists(_.trim.equalsIgnoreCase("true"))) Protocol(1, 4)
-      else Protocol(1, 2)
+    // a new table's protocol carries what its metadata demands
+    // (DeltaLog.withFeatures): identity columns imply writer 6, generated
+    // columns and the change data feed writer 4; row tracking and
+    // TIMESTAMP_NTZ / VARIANT columns have no legacy version and convert
+    // to table features. Plain tables stay at the reference-compatible
+    // (1, 2). An existing table gaining its first NTZ/VARIANT column
+    // (mergeSchema / overwriteSchema) upgrades in the SAME commit as the
+    // new schema.
     val rtEnabled = existing.map(RowTracking.enabled)
       .getOrElse(RowTracking.enabledIn(configuration))
-    val createProtocol0 =
-      if (!rtEnabled || existing.isDefined) legacyCreateProtocol
-      else Protocol(1, 7, writerFeatures = Some(
-        (DeltaLog.legacyWriterFeatures(legacyCreateProtocol) ++
-          Seq("rowTracking", "domainMetadata")).distinct))
-    // TIMESTAMP_NTZ or VARIANT anywhere in the schema requires the
-    // matching reader+writer feature (timestampNtz / variantType —
-    // Delta protocol): legacy versions cannot express them, so the
-    // protocol jumps to (3, 7) enumerating every feature the legacy
-    // form implied
     val typeFeatures = typeFeaturesOf(commitSchema)
-    def withTypeFeatures(p: Protocol): Protocol = Protocol(3, 7,
-      readerFeatures = Some(
-        (DeltaLog.legacyReaderFeatures(p) ++ typeFeatures).distinct),
-      writerFeatures = Some(
-        (DeltaLog.legacyWriterFeatures(p) ++ typeFeatures).distinct))
-    val createProtocol =
-      if (typeFeatures.nonEmpty && isNew) withTypeFeatures(createProtocol0)
-      else createProtocol0
-    // an existing table gaining its first NTZ/VARIANT column
-    // (mergeSchema / overwriteSchema) upgrades in the SAME commit as the
-    // new schema
-    val protocolUpgrade: Option[Protocol] =
-      if (isNew || typeFeatures.isEmpty || metadata.isEmpty) None
-      else existing.map(_.protocol)
-        .filterNot(p => typeFeatures.forall(f =>
-          p.readerFeatures.exists(_.contains(f))))
-        .map(withTypeFeatures)
+    val protocol: Option[Protocol] =
+      if (isNew) Some(DeltaLog.withFeatures(Protocol(1, 2),
+        (if (identityColumnsOf(df.schema).nonEmpty) Seq("identityColumns") else Nil) ++
+          (if (generatedColumnsOf(df.schema).nonEmpty) Seq("generatedColumns") else Nil) ++
+          (if (configuration.get("delta.enableChangeDataFeed")
+            .exists(_.trim.equalsIgnoreCase("true"))) Seq("changeDataFeed") else Nil) ++
+          (if (rtEnabled) Seq("rowTracking", "domainMetadata") else Nil) ++
+          typeFeatures).getOrElse(Protocol(1, 2)))
+      else if (metadata.isEmpty) None
+      else existing.flatMap(e => DeltaLog.withFeatures(e.protocol, typeFeatures))
     def actionsAt(v: Long): Seq[Action] = {
       // row-id allocation is version-dependent (defaultRowCommitVersion)
       // — computed per attempt; the watermark base is stable because
@@ -651,8 +631,7 @@ object DeltaWrite {
       val (rtAdds, rtDomain) =
         RowTracking.assignForCommit(existing, configuration, adds.toSeq, v)
       Seq(commitInfo.copy(readVersion = if (isNew) None else Some(v - 1))) ++
-        (if (isNew) Seq(createProtocol) else Nil) ++ protocolUpgrade.toSeq ++
-        metadata.toSeq ++ txn.toSeq ++ rtDomain ++ cdcActions ++ rtAdds ++ removes
+        protocol.toSeq ++ metadata.toSeq ++ txn.toSeq ++ rtDomain ++ cdcActions ++ rtAdds ++ removes
     }
 
     // Blind appends retry past concurrent winners (optimistic concurrency:
@@ -662,8 +641,9 @@ object DeltaWrite {
     // would invalidate) — loses the race outright. Either way a lost
     // commit deletes the staged data and cdc files.
     val retriable = mode == "append" && !isNew && metadata.isEmpty && !rtEnabled
-    log.optimisticCommit(existing, actionsAt, _ => false,
-      staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval, retriable)
+    log.optimisticCommit(existing, actionsAt,
+      staged = adds.map(_.path) ++ cdcActions.map(_.path),
+      checkpointInterval = checkpointInterval, retriable = retriable)
   }
 
   /** `delta.appendOnly=true` forbids removing committed rows — DML

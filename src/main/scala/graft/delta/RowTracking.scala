@@ -117,20 +117,13 @@ object RowTracking {
         snap.activeFiles.map(_.copy(dataChange = false)), version)
     val meta = snap.metadata.copy(configuration =
       snap.metadata.configuration + (Prop -> "true"))
-    val proto = {
-      val feats = DeltaLog.legacyWriterFeatures(snap.protocol)
-      val want = Seq("rowTracking", "domainMetadata").filterNot(feats.contains)
-      if (want.isEmpty) Nil
-      else Seq(snap.protocol.copy(minWriterVersion = 7,
-        writerFeatures = Some((feats ++ want).distinct)))
-    }
+    val proto = DeltaLog.withFeatures(snap.protocol, Seq("rowTracking", "domainMetadata"))
     val ci = CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES",
       operationParameters =
         Map("properties" -> s"""{"$Prop":"true"}"""),
       readVersion = Some(snap.version), isBlindAppend = Some(false))
-    log.writeCommit(version,
-      Seq(ci) ++ proto ++ Seq(meta) ++ domainActs ++ backfilled)
-    version
+    log.optimisticCommit(Some(snap),
+      _ => Seq(ci) ++ proto ++ Seq(meta) ++ domainActs ++ backfilled, retriable = false)
   }
 
   /** Snapshot scan with `_row_id` and `_row_commit_version` columns.

@@ -218,6 +218,20 @@ class CheckpointIOSpec extends GraftSuite {
     assert(temps(path).isEmpty, temps(path))
   }
 
+  test("a directory named like a checkpoint is no checkpoint and no head") {
+    val path = tmp()
+    (0L to 3L).foreach(v => GraftDelta.toDelta(Seq(v).toDF("k"), path,
+      mode = if (v == 0) "error" else "append"))                          // v0..v3
+    assert(new File(s"$path/_delta_log/" + f"${4L}%020d.checkpoint.parquet", "x").mkdirs())
+    val log = new DeltaLog(spark, path)
+    assert(log.latestVersion == 3L && log.listCheckpointVersions.isEmpty)
+    assert(log.snapshot(None).version == 3L)
+    assert(GraftDelta.readDelta(spark, path).as[Long].collect().sorted.toSeq == (0L to 3L))
+    GraftDelta.toDelta(Seq(4L).toDF("k"), path, mode = "append")          // v4
+    assert(new DeltaLog(spark, path).snapshot(None).version == 4L)
+    assert(GraftDelta.readDelta(spark, path).as[Long].collect().sorted.toSeq == (0L to 4L))
+  }
+
   test("an explicit checkpoint failure still fails DROP FEATURE") {
     val path = tmp()
     GraftDelta.toDelta((1L to 5L).toDF("k"), path)                        // v0

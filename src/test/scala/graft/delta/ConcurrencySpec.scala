@@ -309,6 +309,28 @@ class ConcurrencySpec extends GraftSuite {
       s"the lost UPDATE must delete its DV, staged parquet and _change_data files: $debris")
   }
 
+  test("a RESTORE on a CDF table that loses the race leaves no change-data files") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta((1L to 4L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1), path,
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))                 // v0
+    GraftDelta.toDelta(Seq((5L, "r5")).toDF("id", "v"), path, mode = "append")     // v1
+    val log = DeltaLog.forTable(spark, path)
+    // the winner takes v2 once the RESTORE stages its change-data rows
+    val watcher = raceIntoStagingWindow(path, ".graft_cdc_")(plainCommit(log, 2L))
+    intercept[java.util.ConcurrentModificationException](
+      DeltaTableOps.restore(spark, path, 0L))
+    watcher.join()
+    assert(log.latestVersion == 2L, "the head is the winner's version")
+    val logged = log.listCommitVersions.flatMap(log.readCommitActions)
+      .collect { case c: AddCDCFile => c.path }.toSet
+    val onDisk = TestBase.tableTree(path).filter(f =>
+      f.startsWith("_change_data/") && f.endsWith(".parquet"))
+    assert(onDisk.subsetOf(logged),
+      s"the lost RESTORE must delete its staged change-data files: ${onDisk -- logged}")
+    assert(GraftDelta.readDelta(spark, path).count() == 5L)
+  }
+
   /** Identity allocation and row-id allocation are version-dependent and
     * watermark-based, so their appends are NON-retriable by design: a
     * racing allocator either wins its version or aborts loudly — it can

@@ -734,6 +734,28 @@ class MaintenanceSpec extends GraftSuite {
       s"OPTIMIZE at v2 must checkpoint under interval 2: ${log.listCheckpointVersions}")
   }
 
+  test("metadata, TRUNCATE and RESTORE commits honor the checkpoint cadence") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta(Seq((1L, "a")).toDF("id", "v"), path,
+      configuration = Map("delta.checkpointInterval" -> "2"))               // v0
+    GraftDelta.toDelta(Seq((2L, "b")).toDF("id", "v"), path, mode = "append") // v1
+    DeltaTableOps.setTableProperties(spark, path, Map("owner" -> "ops"))   // v2
+    GraftDelta.toDelta(Seq((3L, "c")).toDF("id", "v"), path, mode = "append") // v3
+    DeltaTableOps.truncateTable(spark, path)                                // v4
+    GraftDelta.toDelta(Seq((4L, "d")).toDF("id", "v"), path, mode = "append") // v5
+    DeltaTableOps.restore(spark, path, 3L)                                  // v6
+    val log = DeltaLog.forTable(spark, path)
+    assert(log.listCheckpointVersions == Seq(2L, 4L, 6L),
+      s"each even-version commit must checkpoint under interval 2: ${log.listCheckpointVersions}")
+    def rows(v: Long): Seq[Long] = GraftDelta.readDelta(spark, path, version = Some(v))
+      .select($"id").as[Long].collect().sorted.toSeq
+    val warm = Seq(2L, 4L, 6L).map(rows)
+    assert(warm == Seq(Seq(1L, 2L), Nil, Seq(1L, 2L, 3L)), warm.toString)
+    DeltaLog.clearCache()
+    assert(Seq(2L, 4L, 6L).map(rows) == warm, "a cold replay from the checkpoints")
+  }
+
   test("multi-part checkpoints replay like single-file ones (foreign writers)") {
     import spark.implicits._
     val path = tmp()

@@ -942,4 +942,107 @@ class ProtocolFeatureSpec extends GraftSuite {
       GraftDelta.deleteWhere(spark, path, Seq(Seq(Predicate("k", "<", 5L)))))
     assert(e2.getMessage.contains("redirectWriterOnly-preview"), e2.getMessage)
   }
+
+  // ---- the feature-upgrade rule, op by op --------------------------------
+
+  /** Every feature-enabling operation from three starting protocols, and
+    * the three create paths that carry features: each commit's `protocol`
+    * action (None: the commit carries none) is pinned to the literal the
+    * per-operation upgrade code wrote before the rule was shared. */
+  test("every feature-enabling op commits the pinned protocol from (1,2), (2,5) and (3,7)") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, MetadataBuilder}
+    val ao = Seq("appendOnly", "invariants")
+    val v5 = ao ++ Seq("checkConstraints", "changeDataFeed", "generatedColumns", "columnMapping")
+    val dv = Seq("deletionVectors")
+    def p(r: Int, w: Int, rf: Seq[String] = null, wf: Seq[String] = null) =
+      Some(Protocol(r, w, Option(rf), Option(wf)))
+    val starts: Seq[(String, Option[Protocol])] = Seq(
+      "(1,2)" -> None,
+      "(2,5)" -> Some(Protocol(2, 5)),
+      "(3,7)+DV" -> Some(Protocol(3, 7, Some(dv), Some(ao ++ dv))))
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "CDF" -> (t => DeltaTableOps.enableChangeDataFeed(spark, t)),
+      "CHECK" -> (t => DeltaTableOps.addCheckConstraint(spark, t, "pos", "id > 0")),
+      "columnMapping" -> (t => DeltaTableOps.enableColumnMapping(spark, t)),
+      "CLUSTER BY" -> (t => DeltaTableOps.clusterBy(spark, t, Seq("id"))),
+      "typeWidening" -> (t => DeltaTableOps.widenColumnType(spark, t, "n", LongType)),
+      "ICT" -> (t => DeltaTableOps.enableInCommitTimestamps(spark, t)),
+      "rowTracking" -> (t => RowTracking.enable(spark, t)),
+      "SET DEFAULT" -> (t => DeltaTableOps.setColumnDefault(spark, t, "v", "'x'")),
+      "DV DELETE" -> (t => GraftDelta.deleteWhereWithDv(spark, t,
+        Seq(Seq(Predicate("id", "==", 1L))))))
+    val expected: Map[(String, String), Option[Protocol]] = Map(
+      ("(1,2)", "CDF") -> p(1, 4),
+      ("(1,2)", "CHECK") -> p(1, 3),
+      ("(1,2)", "columnMapping") -> p(2, 5),
+      ("(1,2)", "CLUSTER BY") -> p(1, 7, wf = ao ++ Seq("clustering", "domainMetadata")),
+      ("(1,2)", "typeWidening") -> p(3, 7, Seq("typeWidening"), ao :+ "typeWidening"),
+      ("(1,2)", "ICT") -> p(1, 7, wf = ao :+ "inCommitTimestamp"),
+      ("(1,2)", "rowTracking") -> p(1, 7, wf = ao ++ Seq("rowTracking", "domainMetadata")),
+      ("(1,2)", "SET DEFAULT") -> p(1, 7, wf = ao :+ "allowColumnDefaults"),
+      ("(1,2)", "DV DELETE") -> p(3, 7, dv, ao ++ dv),
+      ("(2,5)", "CDF") -> None,
+      ("(2,5)", "CHECK") -> None,
+      ("(2,5)", "columnMapping") -> None,
+      ("(2,5)", "CLUSTER BY") -> p(2, 7, wf = v5 ++ Seq("clustering", "domainMetadata")),
+      ("(2,5)", "typeWidening") ->
+        p(3, 7, Seq("columnMapping", "typeWidening"), v5 :+ "typeWidening"),
+      ("(2,5)", "ICT") -> p(2, 7, wf = v5 :+ "inCommitTimestamp"),
+      ("(2,5)", "rowTracking") -> p(2, 7, wf = v5 ++ Seq("rowTracking", "domainMetadata")),
+      ("(2,5)", "SET DEFAULT") -> p(2, 7, wf = v5 :+ "allowColumnDefaults"),
+      ("(2,5)", "DV DELETE") -> p(3, 7, Seq("columnMapping") ++ dv, v5 ++ dv),
+      ("(3,7)+DV", "CDF") -> p(3, 7, dv, ao ++ dv :+ "changeDataFeed"),
+      ("(3,7)+DV", "CHECK") -> p(3, 7, dv, ao ++ dv :+ "checkConstraints"),
+      ("(3,7)+DV", "columnMapping") -> p(3, 7, dv :+ "columnMapping", ao ++ dv :+ "columnMapping"),
+      ("(3,7)+DV", "CLUSTER BY") ->
+        p(3, 7, dv, ao ++ dv ++ Seq("clustering", "domainMetadata")),
+      ("(3,7)+DV", "typeWidening") -> p(3, 7, dv :+ "typeWidening", ao ++ dv :+ "typeWidening"),
+      ("(3,7)+DV", "ICT") -> p(3, 7, dv, ao ++ dv :+ "inCommitTimestamp"),
+      ("(3,7)+DV", "rowTracking") -> p(3, 7, dv, ao ++ dv ++ Seq("rowTracking", "domainMetadata")),
+      ("(3,7)+DV", "SET DEFAULT") -> p(3, 7, dv, ao ++ dv :+ "allowColumnDefaults"),
+      ("(3,7)+DV", "DV DELETE") -> None)
+    def committed(t: String): Option[Protocol] = {
+      val log = DeltaLog.forTable(spark, t)
+      log.readCommitActions(log.latestVersion).collectFirst { case q: Protocol => q }
+    }
+    val got = for ((start, proto) <- starts; (op, run) <- ops) yield {
+      val t = tmp()
+      GraftDelta.toDelta(Seq((1L, 1, "a"), (2L, 2, "b")).toDF("id", "n", "v"), t)
+      proto.foreach(q => DeltaLog.forTable(spark, t).writeCommit(1L,
+        Seq(CommitInfo(System.currentTimeMillis(), "UPGRADE PROTOCOL"), q)))
+      run(t)
+      (start, op) -> committed(t)
+    }
+
+    // the create paths: identity + row tracking, a TIMESTAMP_NTZ column,
+    // and CONVERT of a lake with one
+    val ntz = Seq((1L, java.time.LocalDateTime.parse("2021-03-01T10:30:00"))).toDF("k", "ts")
+    val identity = new MetadataBuilder().putLong("delta.identity.start", 1L)
+      .putLong("delta.identity.step", 1L)
+      .putBoolean("delta.identity.allowExplicitInsert", true).build()
+    val idRt = tmp()
+    GraftDelta.toDelta(Seq((1L, "a")).toDF("id", "v")
+      .withColumn("id", col("id").as("id", identity)), idRt,
+      configuration = Map(RowTracking.Prop -> "true"))
+    val ntzT = tmp()
+    GraftDelta.toDelta(ntz, ntzT)
+    val lake = tmp()
+    ntz.write.parquet(lake)
+    GraftDelta.convertToDelta(spark, lake)
+    val creates = Seq(
+      ("create", "identity + rowTracking") -> committed(idRt),
+      ("create", "TIMESTAMP_NTZ") -> committed(ntzT),
+      ("create", "CONVERT TIMESTAMP_NTZ") -> committed(lake))
+    val ntzProto = p(3, 7, Seq("timestampNtz"), ao :+ "timestampNtz")
+    val expectedCreates = Map(
+      ("create", "identity + rowTracking") -> p(1, 7, wf = v5 ++
+        Seq("identityColumns", "rowTracking", "domainMetadata")),
+      ("create", "TIMESTAMP_NTZ") -> ntzProto,
+      ("create", "CONVERT TIMESTAMP_NTZ") -> ntzProto)
+
+    val wrong = (got ++ creates).filter { case (k, v) => (expected ++ expectedCreates)(k) != v }
+    assert(wrong.isEmpty, wrong.map { case (k, v) =>
+      s"$k: committed $v, pinned ${(expected ++ expectedCreates)(k)}" }.mkString("\n", "\n", ""))
+  }
 }
