@@ -29,7 +29,7 @@ object CcProfile {
     })
     val chain = spark.range(1L, n + 1).select(col("id").as("doc_a"), (col("id") + 1L).as("doc_b"))
     val t0 = System.nanoTime()
-    val (labels, rounds) = operators.Dedup.nearDupClustersWithRounds(chain)
+    val (labels, rounds) = operators.Dedup.nearDupClustersWithRounds(chain, localPairs = 0)
     val cnt = labels.count()
     val total = (System.nanoTime() - t0) / 1e9
     Thread.sleep(300)

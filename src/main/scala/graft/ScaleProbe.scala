@@ -215,7 +215,7 @@ object ScaleProbe {
         import org.apache.spark.sql.functions.col
         val chain = spark.range(1L, 10000001L)
           .select(col("id").as("doc_a"), (col("id") + 1L).as("doc_b"))
-        val (labels, rounds) = operators.Dedup.nearDupClustersWithRounds(chain)
+        val (labels, rounds) = operators.Dedup.nearDupClustersWithRounds(chain, localPairs = 0)
         val n = labels.count()
         println(s"[scale-probe] cc_chain_10m rounds=$rounds")
         require(rounds <= 52, s"CC rounds $rounds > logarithmic bound 52")

@@ -47,7 +47,7 @@ object Stress {
     val chain = spark.range(1L, chainN)
       .select($"id".as("doc_a"), ($"id" + 1L).as("doc_b"))
     val (chainLabels, ccRounds) =
-      graft.operators.Dedup.nearDupClustersWithRounds(chain)
+      graft.operators.Dedup.nearDupClustersWithRounds(chain, localPairs = 0)
     val chainBound = 2 * (math.log(chainN.toDouble) / math.log(2)).ceil.toInt + 4
     val chainOk = chainLabels.agg(
       count(lit(1)), sum(when($"cluster_id" === 1L, 1L).otherwise(0L))).head()

@@ -111,21 +111,7 @@ object Similarity {
       .withColumn("cos", cosinePre(dotQ(col("va"), col("vb")), col("na"), col("nb")))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b")
-    materialized(result, Seq(banded) ++ overCache: _*)
-  }
-
-  /** Persist + materialize a (small) result, then free the (large)
-    * upstream cached frames. OWNERSHIP CONTRACT: the returned frame is
-    * persisted (it must be — the upstream it derives from is unpersisted
-    * here, so re-evaluation would recompute the full pipeline); the
-    * CALLER owns that cache entry and releases it via `unpersist()` or
-    * `spark.catalog.clearCache()` once consumed. Bench/Verify clear the
-    * cache between queries for exactly this reason. */
-  private def materialized(result: DataFrame, upstream: DataFrame*): DataFrame = {
-    val out = result.persist()
-    out.count()
-    upstream.foreach(_.unpersist(blocking = false))
-    out
+    Dedup.materialized(result, Seq(banded) ++ overCache: _*)
   }
 
   // ---- Group centroids ---------------------------------------------------
@@ -314,7 +300,7 @@ object Similarity {
       .select(col("query_id"), col("id").as("vec_id"), col("v").as("cv"),
         col("n").as("cn"), col("qv"), col("qn"))
       .distinct()
-    materialized(topKByCosine(cands, k), assigned)
+    Dedup.materialized(topKByCosine(cands, k), assigned)
   }
 
   // ---- IVF-PQ (product quantization) ------------------------------------
@@ -342,7 +328,7 @@ object Similarity {
     val encoded = encodeWithModel(df, idCol, vecCol, model).persist()
     val queries = collectQueries(encoded.filter(col("id").isin(queryIds.map(Long.box): _*)))
     val result = rankProbed(model, _ => encoded, queries, k, nprobe, refine, excludeSelf = true)
-    materialized(result, encoded)
+    Dedup.materialized(result, encoded)
   }
 
   /** The one IVF-PQ rank: each query probes its `nprobe` nearest cells of
@@ -647,7 +633,7 @@ object Similarity {
       .withColumn("cos", cosinePre(dotQ(col("va"), col("vb")), col("na"), col("nb")))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
-    materialized(result, Seq(assigned) ++ overCache: _*)
+    Dedup.materialized(result, Seq(assigned) ++ overCache: _*)
   }
 
   /** Semantic dedup end to end: within-cell near-dup pairs → keep only

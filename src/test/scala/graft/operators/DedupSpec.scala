@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.delta.TestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -222,10 +223,11 @@ class DedupSpec extends AnyFunSuite {
     val n = 10000L
     val pairs = spark.range(1L, n).select($"id".as("doc_a"), ($"id" + 1L).as("doc_b"))
     intercept[IllegalStateException](
-      Dedup.nearDupClustersPropagation(pairs, maxIters = 20).collect())
-    val (labels, rounds) = Dedup.nearDupClustersWithRounds(pairs)
+      DedupSpec.propagationClusters(pairs, maxIters = 20).collect())
+    // forced onto the distributed rounds: a driver-path 0 measures nothing
+    val (labels, rounds) = Dedup.nearDupClustersWithRounds(pairs, localPairs = 0)
     val bound = 2 * (math.log(n.toDouble) / math.log(2)).ceil.toInt + 4
-    assert(rounds <= bound, s"chain must converge in O(log n): $rounds > $bound")
+    assert(rounds > 0 && rounds <= bound, s"chain must converge in O(log n): $rounds > $bound")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == n)
     assert(got.forall(_._2 == 1L), "every chain node labels to the min (1)")
@@ -241,11 +243,65 @@ class DedupSpec extends AnyFunSuite {
       val es = (1 to 400).map(_ =>
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)) :+ (9999L, 9999L)
       val pairs = es.toDF("doc_a", "doc_b")
-      val fast = Dedup.nearDupClusters(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val oracle = Dedup.nearDupClustersPropagation(pairs, maxIters = 200).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(fast == oracle, s"seed $seed: ${fast.toSeq.diff(oracle.toSeq).take(5)}")
+      def labels(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (driver, dist) = DedupSpec.bothPaths(pairs)
+      val oracle = labels(DedupSpec.propagationClusters(pairs, maxIters = 200))
+      assert(labels(dist) == oracle,
+        s"seed $seed distributed: ${labels(dist).toSeq.diff(oracle.toSeq).take(5)}")
+      assert(labels(driver) == oracle,
+        s"seed $seed driver: ${labels(driver).toSeq.diff(oracle.toSeq).take(5)}")
+    }
+    spark.catalog.clearCache()
+  }
+
+  /** The driver path and the distributed rounds give the same labels
+    * and the same schema on the clique/chain/pair graph, for Long and
+    * Int ids, with a self-pair-only node and null endpoints. */
+  test("nearDupClusters driver path equals the distributed rounds: Long/Int ids, self-pairs, nulls") {
+    import spark.implicits._
+    val es = Seq((1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (12, 13), (20, 21), (30, 30))
+    val want = Map(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10, 12 -> 10, 13 -> 10,
+      20 -> 20, 21 -> 20, 30 -> 30)
+    def labels(df: DataFrame) = df.collect().map(r => Option(r.get(0)) -> Option(r.get(1))).toSet
+    val longs = es.map { case (a, b) => (a.toLong, b.toLong) }.toDF("doc_a", "doc_b")
+    val ints = es.toDF("doc_a", "doc_b")
+    val nullable = (es.map { case (a, b) => (Option(a.toLong), Option(b.toLong)) } ++
+      Seq((Some(2L), None), (None, None), (Some(40L), None))).toDF("doc_a", "doc_b")
+    val cases: Seq[(DataFrame, Set[_])] = Seq(
+      longs -> want.map { case (d, c) => Option(d.toLong) -> Option(c.toLong) }.toSet,
+      ints -> want.map { case (d, c) => Option(d) -> Option(c) }.toSet,
+      // a null endpoint joins no edge (2 keeps its cluster, 40 is its
+      // own), and the null node labels null
+      nullable -> (want.map { case (d, c) => Option(d.toLong) -> Option(c.toLong) }.toSet +
+        (Some(40L) -> Some(40L)) + (None -> None)))
+    for ((pairs, expected) <- cases) {
+      val (driver, dist) = DedupSpec.bothPaths(pairs)
+      assert(driver.schema == dist.schema, s"${driver.schema} vs ${dist.schema}")
+      assert(driver.schema.map(_.dataType) == Seq.fill(2)(pairs.schema.head.dataType))
+      assert(labels(driver) == expected)
+      assert(labels(dist) == expected)
+    }
+    spark.catalog.clearCache()
+  }
+
+  /** At `LocalPairs` pairs the driver labels the graph in one collect
+    * job and no round; one pair more takes the distributed rounds. */
+  test("nearDupClusters labels on the driver up to LocalPairs pairs, in at most one job") {
+    import spark.implicits._
+    // disjoint pairs (2i, 2i+1), four partitions
+    def matching(n: Int) = spark.range(0L, n.toLong, 1L, 4)
+      .select(($"id" * 2).as("doc_a"), ($"id" * 2 + 1).as("doc_b"))
+    val ((small, r0), jobs) = TestBase.jobsDuring(Dedup.nearDupClustersWithRounds(matching(Dedup.LocalPairs)))
+    // one task reads the partitions in turn, so no more than
+    // LocalPairs + 1 pairs are read whatever the partitioning
+    val tasks = jobs.flatMap(_.stageInfos).map(_.numTasks).sum
+    assert(r0 == 0 && jobs.size <= 1 && tasks <= 1,
+      s"driver path: $r0 rounds, ${jobs.size} jobs, $tasks tasks")
+    val (large, r1) = Dedup.nearDupClustersWithRounds(matching(Dedup.LocalPairs + 1))
+    assert(r1 > 0, "one pair above LocalPairs must take the distributed rounds")
+    for ((labels, n) <- Seq(small -> Dedup.LocalPairs, large -> (Dedup.LocalPairs + 1))) {
+      val r = labels.agg(count(lit(1)), sum(when($"cluster_id" === $"doc_id" - ($"doc_id" % 2), 1L))).head()
+      assert(r.getLong(0) == 2L * n && r.getLong(1) == 2L * n, s"$n pairs: $r")
     }
     spark.catalog.clearCache()
   }
@@ -869,5 +925,58 @@ class DedupSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 2L, 3L -> 2L, 5L -> 1L, 6L -> 1L, 7L -> 1L),
       s"ASCII-only normalization would collapse non-Latin/symbol docs: $got")
+  }
+}
+
+object DedupSpec {
+  /** `Dedup.nearDupClusters` on the driver path and forced onto the
+    * distributed rounds; asserts which path each took. */
+  def bothPaths(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val (driver, r0) = Dedup.nearDupClustersWithRounds(pairs)
+    val (dist, r1) = Dedup.nearDupClustersWithRounds(pairs, localPairs = 0)
+    assert(r0 == 0 && r1 > 0, s"driver path $r0 rounds, distributed $r1")
+    (driver, dist)
+  }
+
+  /** Min-label propagation — O(graph diameter) rounds; the semantics
+    * ORACLE for both paths of `Dedup.nearDupClusters` (clusters must
+    * agree on any graph both converge on). */
+  def propagationClusters(
+      pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+    // undirected edges, both directions; labels start as each node's id
+    val fwd = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))).persist()
+    // localCheckpoint (eager) after every round TRUNCATES LINEAGE — the
+    // iterative-join pattern otherwise grows the logical plan by one full
+    // round per iteration and Catalyst analysis time explodes
+    // combinatorially (measured: 10× slowdown by round ~10). Truncation
+    // keeps every round's plan constant-size; the checkpointed labels
+    // frame is one row per doc that appears in a pair.
+    var labels = edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("cluster_id", col("doc_id")).localCheckpoint(true)
+    var converged = false
+    var i = 0
+    while (i < maxIters && !converged) {
+      // each node adopts min(own label, neighbors' labels); the old label
+      // rides along so convergence is read off the checkpointed result
+      val neighborMin = edges
+        .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
+        .groupBy(col("src").as("doc_id"))
+        .agg(min(col("cluster_id")).as("nmin"))
+      val next = labels.join(neighborMin, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("cluster_id").as("__old"),
+          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
+        .localCheckpoint(true)
+      val changed = next
+        .agg(coalesce(sum(when(col("cluster_id") =!= col("__old"), 1L).otherwise(0L)), lit(0L)))
+        .head().getLong(0)
+      labels = next.select("doc_id", "cluster_id")
+      converged = changed == 0
+      i += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"nearDupClusters did not converge in $maxIters iterations — raise maxIters")
+    Dedup.materialized(labels, edges)
   }
 }
