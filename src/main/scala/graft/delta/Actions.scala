@@ -78,8 +78,8 @@ final case class AddFile(
     baseRowId: Option[Long] = None,
     defaultRowCommitVersion: Option[Long] = None
 ) extends Action {
-  /** Live rows = numRecords − DV cardinality (exact: DV positions are
-    * deleted rows of THIS file). */
+  /** Rows of THIS file its deletion vector deletes; live rows are
+    * [[StatsPruning.liveRows]]. */
   def dvCardinality: Long = deletionVector.map(_.cardinality).getOrElse(0L)
 
   /** The tombstone retiring this file: its partition values, size and

@@ -44,7 +44,7 @@ object DeltaDml {
       path: String,
       filters: Seq[Seq[Predicate]],
       checkpointInterval: Int = 10): DmlResult =
-    mutate(spark, path, filters, assignments = Map.empty, checkpointInterval)
+    mutate(spark, path, filters, assignments = Map.empty, checkpointInterval, dv = false)
 
   /** DELETE with an arbitrary Spark boolean `condition` — the fallback
     * for WHERE clauses outside the DNF predicate language (e.g.
@@ -59,7 +59,7 @@ object DeltaDml {
       condition: Column,
       checkpointInterval: Int = 10): DmlResult =
     mutate(spark, path, Seq(Seq.empty), assignments = Map.empty,
-      checkpointInterval, condOverride = Some(condition))
+      checkpointInterval, dv = false, condOverride = Some(condition))
 
   /** UPDATE flavor of [[deleteExpr]] — scan-side condition, no pruning. */
   def updateExpr(
@@ -70,7 +70,7 @@ object DeltaDml {
       checkpointInterval: Int = 10): DmlResult = {
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
     mutate(spark, path, Seq(Seq.empty), assignments, checkpointInterval,
-      condOverride = Some(condition))
+      dv = false, condOverride = Some(condition))
   }
 
   /** DV flavor of [[deleteExpr]] — scan-side condition, no pruning. */
@@ -79,8 +79,8 @@ object DeltaDml {
       path: String,
       condition: Column,
       checkpointInterval: Int = 10): DmlResult =
-    dvMutate(spark, path, Seq(Seq.empty), assignments = Map.empty,
-      checkpointInterval, condOverride = Some(condition))
+    mutate(spark, path, Seq(Seq.empty), assignments = Map.empty,
+      checkpointInterval, dv = true, condOverride = Some(condition))
 
   /** DV flavor of [[updateExpr]] — scan-side condition, no pruning. */
   def updateWithDvExpr(
@@ -90,8 +90,8 @@ object DeltaDml {
       assignments: Map[String, Column],
       checkpointInterval: Int = 10): DmlResult = {
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
-    dvMutate(spark, path, Seq(Seq.empty), assignments, checkpointInterval,
-      condOverride = Some(condition))
+    mutate(spark, path, Seq(Seq.empty), assignments, checkpointInterval,
+      dv = true, condOverride = Some(condition))
   }
 
   /** DELETE FROM … WHERE, deletion-vector flavor: instead of rewriting
@@ -111,7 +111,7 @@ object DeltaDml {
       path: String,
       filters: Seq[Seq[Predicate]],
       checkpointInterval: Int = 10): DmlResult =
-    dvMutate(spark, path, filters, assignments = Map.empty, checkpointInterval)
+    mutate(spark, path, filters, assignments = Map.empty, checkpointInterval, dv = true)
 
   /** UPDATE via deletion vectors: the matched rows are DV'd out of their
     * files and their UPDATED versions are appended as new files — the
@@ -126,157 +126,188 @@ object DeltaDml {
       assignments: Map[String, Column],
       checkpointInterval: Int = 10): DmlResult = {
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
-    dvMutate(spark, path, filters, assignments, checkpointInterval)
+    mutate(spark, path, filters, assignments, checkpointInterval, dv = true)
   }
 
-  private def dvMutate(
+  /** DELETE and UPDATE in both flavors. The flavors differ in two things
+    * only: how the matched rows of a file are found (`dv`: the matched
+    * positions fold into per-file bitmaps; rewrite: matches are counted
+    * per file) and what a partly-matched file becomes (`dv`: the same
+    * file under a deletion vector, an UPDATE's matched rows appended
+    * updated in new files; rewrite: a new file holding its kept or
+    * updated rows). */
+  private def mutate(
       spark: SparkSession,
       path: String,
       filters: Seq[Seq[Predicate]],
       assignments: Map[String, Column],
       checkpointInterval: Int,
+      dv: Boolean,
       condOverride: Option[Column] = None): DmlResult = {
     require(condOverride.isDefined || (filters.nonEmpty && filters.forall(_.nonEmpty)),
       "DML requires a non-empty predicate (refusing an implicit full-table operation)")
     val isDelete = assignments.isEmpty
+    val op = if (isDelete) "DELETE" else "UPDATE"
     val log = DeltaLog.forTable(spark, path)
     val snap = log.snapshot(None)
     DeltaWrite.requireWriterSupported(snap)
-    DeltaWrite.requireNotAppendOnly(snap, if (isDelete) "DELETE" else "UPDATE")
+    DeltaWrite.requireNotAppendOnly(snap, op)
     requireSettable(snap, assignments.keys)
-    val partCols = snap.partitionColumns.toSet
-    val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
 
-    // condOverride (non-DNF WHERE fallback): no log pruning, no
-    // partition-full proof — every active file scans, the condition
-    // filters rows
+    // ---- phase 0: metadata-only pruning ---------------------------------
+    // condOverride (non-DNF WHERE fallback): no log pruning and no
+    // partition proof — every active file scans, the condition filters rows
     val candidates =
       if (condOverride.isDefined) snap.activeFiles
       else DeltaRead.prunedFiles(snap, filters)
     if (candidates.isEmpty) return DmlResult(0, 0, 0, 0)
-
-    // partition-full matches drop whole files unread — a DV would only
-    // slow the read side down for no write saving (update still reads
-    // them once below, to produce the rewritten rows)
-    // partitionValues are physical-keyed under column mapping
-    val physOf = snap.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    def partitionFullMatch(f: AddFile): Boolean =
-      filters.exists { conj =>
-        conj.forall(p => partCols.contains(p.column) &&
-          DeltaRead.evalPredicate(
-            f.partitionValues.get(physOf.getOrElse(p.column, p.column)).flatMap(Option(_)),
-            fieldTypes.getOrElse(p.column, org.apache.spark.sql.types.StringType), p))
-      }
+    // A file all of whose live rows match leaves the table whole: a
+    // DELETE drops it, the DV UPDATE drops it and appends its rows
+    // updated (a DV would only slow the read side down for no write
+    // saving); the rewrite UPDATE rewrites it like any touched file.
+    // Files whose partition values satisfy a whole OR-branch match on
+    // every row without being read.
+    val wholeFiles = dv || isDelete
     val (provenFull, toScan) =
-      if (condOverride.isDefined) (Seq.empty[AddFile], candidates)
-      else candidates.partition(partitionFullMatch)
+      if (wholeFiles && condOverride.isEmpty)
+        candidates.partition(StatsPruning.fileTest(snap, filters, StatsPruning.PartitionOnly))
+      else (Seq.empty[AddFile], candidates)
 
-    // one scan: LIVE matched positions per file (readFiles applies any
-    // existing DVs, so already-deleted rows can't re-match). Positions
-    // fold into per-file Roaring bitmaps ON THE EXECUTORS
-    // (PositionBitmapAgg, map-side combine); the driver collects one
-    // compressed blob + count per touched file — O(#files × KB), never
-    // O(matched rows).
+    // ---- phase 1: one scan for the matched rows per file ----------------
+    // dv: LIVE matched positions (readFiles applies existing DVs, so
+    // already-deleted rows can't re-match) fold into per-file Roaring
+    // bitmaps ON THE EXECUTORS (PositionBitmapAgg, map-side combine); the
+    // driver collects one compressed blob + count per touched file —
+    // O(#files × KB), never O(matched rows). rewrite: counts only.
     val cond = condOverride.getOrElse(DeltaRead.dnfToColumn(filters))
-    val matched: Map[String, (Array[Byte], Long)] =
+    val matched: Map[String, (Long, Option[Array[Byte]])] =
       if (toScan.isEmpty) Map.empty
-      else matchedBitmapFrame(
+      else if (dv) matchedBitmapFrame(
           readFiles(spark, path, snap, toScan, keepMeta = true)
             .filter(coalesce(cond, lit(false))))
         .collect()
-        .map(r => scanFileKey(r.getString(0)) -> ((r.getAs[Array[Byte]](1), r.getLong(2))))
+        .map(r => scanFileKey(r.getString(0)) -> ((r.getLong(2), Some(r.getAs[Array[Byte]](1)))))
+        .toMap
+      else readFiles(spark, path, snap, toScan)
+        .filter(cond)
+        .groupBy(input_file_name().as("__f"))
+        .agg(count(lit(1)).as("__n"))
+        .collect()
+        .map(r => scanFileKey(r.getString(0)) -> ((r.getLong(1), None)))
         .toMap
     def fileKey(f: AddFile): String = normalizePath(DeltaRead.resolvePath(path, f.path))
-    def countOf(f: AddFile): Long = matched.get(fileKey(f)).fold(0L)(_._2)
-    def numRecords(f: AddFile): Option[Long] =
-      StatsPruning.parse(f.stats).flatMap(_.numRecords)
-
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val root = new Path(path)
+    def countOf(f: AddFile): Long = matched.get(fileKey(f)).fold(0L)(_._1)
     val touched = toScan.filter(countOf(_) > 0)
-    // a file whose every live row matched is a full remove, not a DV
-    val (dvTargets, scannedFull) = touched.partition { f =>
-      numRecords(f) match {
-        case Some(n) => countOf(f) < n - f.dvCardinality
-        case None => true // stats-less: keep via DV, exactness over guessing
-      }
-    }
+    // a stats-less file stays partial: exactness over guessing
+    val (scannedFull, partial) =
+      if (wholeFiles) touched.partition(f => StatsPruning.liveRows(f).contains(countOf(f)))
+      else (Seq.empty[AddFile], touched)
     val fullRemoves = provenFull ++ scannedFull
-    if (fullRemoves.isEmpty && dvTargets.isEmpty) return DmlResult(0, 0, 0, 0)
+    if (fullRemoves.isEmpty && partial.isEmpty) return DmlResult(0, 0, 0, 0)
 
+    // Affected rows: counted for scanned files; proven files count their
+    // live rows from stats, falling back to a count-only scan of just
+    // those files (stats can be absent on foreign-written tables).
     val provenRows: Long = {
-      val (withStats, statless) = provenFull.partition(f => numRecords(f).isDefined)
-      withStats.map(f => numRecords(f).get - f.dvCardinality).sum +
+      val (withStats, statless) = provenFull.partition(StatsPruning.liveRows(_).isDefined)
+      withStats.flatMap(StatsPruning.liveRows).sum +
         (if (statless.isEmpty) 0L else readFiles(spark, path, snap, statless).count())
     }
     val affected = provenRows + touched.map(countOf).sum
 
-    // merge fresh positions into any existing bitmap; ONE dv file per commit
-    val bitmaps = dvTargets.map { f =>
-      val rb = DeletionVectors.deserializeBitmap(matched(fileKey(f))._1)
-      f.path -> DeletionVectors.merged(fs, root, f, rb)
-    }
-    val descriptors: Map[String, DeletionVectorDescriptor] =
-      if (bitmaps.isEmpty) Map.empty
-      else DeletionVectors.writeDvFile(fs, root, bitmaps)
-
+    // ---- phase 2: what the partly-matched files become -------------------
     val version = snap.version + 1
-    // The matched LIVE rows (existing DVs applied inside readFiles).
-    // UPDATE staging, the cdc preimage, and the cdc postimage each
-    // consume this frame — persist it when more than one consumer
-    // exists so the touched files are scanned ONCE, not up to 3×
-    // (the frame is O(matched rows); MEMORY_AND_DISK spills rather
-    // than recomputing a 100 TB-scale rescan).
-    val matchedUses =
-      (if (isDelete) 0 else 1) + (if (DeltaWrite.cdfEnabled(snap)) { if (isDelete) 1 else 2 } else 0)
-    lazy val matchedCached: DataFrame = {
-      val m = readFiles(spark, path, snap, provenFull ++ touched)
-        .filter(coalesce(cond, lit(false)))
-      if (matchedUses > 1)
-        m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else m
+    val cdf = DeltaWrite.cdfEnabled(snap)
+    // CDF: the row-level changes are exactly the matched live rows;
+    // postimages re-derive generated columns exactly like the data
+    // files (identity on every already-valid pre/delete row)
+    def stageChanges(matchedRows: DataFrame): Seq[AddCDCFile] = {
+      val ct = ChangeFeed.ChangeTypeCol
+      val changes =
+        if (isDelete) matchedRows.withColumn(ct, lit("delete"))
+        else matchedRows.withColumn(ct, lit("update_preimage")).unionByName(
+          withAssignments(matchedRows, snap, assignments)
+            .withColumn(ct, lit("update_postimage")))
+      DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
+        path, version, snap.metadata, DeltaWrite.CdcFiles)
     }
-    def matchedRows(): DataFrame = matchedCached
-    // UPDATE: the matched rows (now DV'd out of their files) come back as
-    // NEW files with the assignments applied — O(matched rows) written,
-    // not O(touched files).
-    val newAdds: Seq[AddFile] =
-      if (isDelete || (provenFull.isEmpty && touched.isEmpty)) Nil
-      else {
-        // generated columns re-derive from the post-update row (an
-        // UPDATE of a dependency can't leave them stale)
-        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(
-          withAssignments(matchedRows(), snap, assignments), snap.schema),
-          path, version, snap.metadata, DeltaWrite.DmlFiles,
-          DeltaWrite.checkConstraintsOf(snap.metadata))
+    // generated columns re-derive from the post-update row (an UPDATE of
+    // a dependency can't leave them stale)
+    def stageData(rows: DataFrame): Seq[AddFile] =
+      DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(rows, snap.schema),
+        path, version, snap.metadata, DeltaWrite.DmlFiles,
+        DeltaWrite.checkConstraintsOf(snap.metadata))
+    val (adds, readds, cdcActions, dvFile) =
+      if (dv) {
+        // merge fresh positions into any existing bitmap; ONE dv file per commit
+        val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+        val root = new Path(path)
+        val bitmaps = partial.map { f =>
+          val rb = DeletionVectors.deserializeBitmap(matched(fileKey(f))._2.get)
+          f.path -> DeletionVectors.merged(fs, root, f, rb)
+        }
+        val descriptors: Map[String, DeletionVectorDescriptor] =
+          if (bitmaps.isEmpty) Map.empty
+          else DeletionVectors.writeDvFile(fs, root, bitmaps)
+        // The matched LIVE rows: UPDATE staging, the cdc preimage and the
+        // cdc postimage each consume this frame — persist it when more
+        // than one consumer exists so the touched files are scanned ONCE,
+        // not up to 3× (O(matched rows); MEMORY_AND_DISK spills rather
+        // than recomputing a 100 TB-scale rescan).
+        val matchedUses = (if (isDelete) 0 else 1) + (if (cdf) { if (isDelete) 1 else 2 } else 0)
+        lazy val matchedRows: DataFrame = {
+          val m = readFiles(spark, path, snap, provenFull ++ touched)
+            .filter(coalesce(cond, lit(false)))
+          if (matchedUses > 1)
+            m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else m
+        }
+        // UPDATE: the matched rows (now DV'd out of their files) come back
+        // as NEW files — O(matched rows) written, not O(touched files)
+        val newAdds =
+          if (isDelete) Nil else stageData(withAssignments(matchedRows, snap, assignments))
+        val cdc = if (cdf) stageChanges(matchedRows) else Nil
+        if (matchedUses > 1) matchedRows.unpersist(blocking = false)
+        (newAdds,
+          partial.map(f => f.copy(dataChange = true, deletionVector = Some(descriptors(f.path)))),
+          cdc,
+          descriptors.values.headOption.map(d =>
+            DeletionVectors.dvFileName(DeletionVectors.uuidOfDescriptor(d))))
+      } else {
+        // On CDF tables the partial files feed BOTH the rewrite staging and
+        // the cdc capture — persist the scan so they're read once, not
+        // twice (O(touched-file rows), spills rather than rescanning)
+        val partialSrc: Option[DataFrame] =
+          if (partial.isEmpty) None
+          else {
+            val s = readFiles(spark, path, snap, partial)
+            Some(if (cdf) s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else s)
+          }
+        val matchedCol = coalesce(cond, lit(false)) // NULL predicate = no match
+        val rewritten = partialSrc.toSeq.flatMap { src =>
+          stageData(
+            if (isDelete) src.filter(!matchedCol)
+            else withAssignments(src, snap, assignments,
+              (c, e) => when(matchedCol, e).otherwise(col(c))))
+        }
+        // whole files are read here for the first time (change capture
+        // needs their content) and need no filter: every row matches
+        val cdc =
+          if (!cdf) Nil
+          else stageChanges(
+            (fullRemoves.headOption.map(_ => readFiles(spark, path, snap, fullRemoves)) ++
+              partialSrc.map(_.filter(matchedCol))).reduce(_ unionByName _))
+        if (cdf) partialSrc.foreach(_.unpersist(blocking = false))
+        (rewritten, Seq.empty[AddFile], cdc, None)
       }
 
-    // CDF: the DV flavor's row-level changes are exactly the matched
-    // live rows — one extra scan of the touched files, the price of
-    // change capture, paid only on CDF tables
-    val cdcActions: Seq[AddCDCFile] =
-      if (!DeltaWrite.cdfEnabled(snap)) Nil
-      else {
-        val ct = ChangeFeed.ChangeTypeCol
-        val changes =
-          if (isDelete) matchedRows().withColumn(ct, lit("delete"))
-          else matchedRows().withColumn(ct, lit("update_preimage")).unionByName(
-            withAssignments(matchedRows(), snap, assignments)
-              .withColumn(ct, lit("update_postimage")))
-        // postimages re-derive generated columns exactly like the
-        // rewrite (identity on every already-valid pre/delete row)
-        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
-          path, version, snap.metadata, DeltaWrite.CdcFiles)
-      }
-    if (matchedUses > 1) matchedCached.unpersist(blocking = false)
-
+    // ---- commit ---------------------------------------------------------
     val now = Instant.now().toEpochMilli
-    val removes = (fullRemoves ++ dvTargets).map(_.remove(now))
-    val readds = dvTargets.map(f =>
-      f.copy(dataChange = true, deletionVector = Some(descriptors(f.path))))
-    val protocolUpgrade = DeltaLog.withFeatures(snap.protocol, Seq("deletionVectors"))
-
-    val op = if (isDelete) "DELETE" else "UPDATE"
+    val removes = (fullRemoves ++ partial).map(_.remove(now))
+    val rewrittenFiles = if (dv) 0 else partial.size
+    val removedFiles = fullRemoves.size + rewrittenFiles
+    val protocolUpgrade =
+      if (dv) DeltaLog.withFeatures(snap.protocol, Seq("deletionVectors")) else None
     def mkActions(v: Long): Seq[Action] = (CommitInfo(
       timestamp = now,
       operation = op,
@@ -285,31 +316,31 @@ object DeltaDml {
           s"${p.column} ${p.op} ${p.value}").mkString("(", " AND ", ")")).mkString(" OR "))),
       operationMetrics = Map(
         (if (isDelete) "numDeletedRows" else "numUpdatedRows") -> affected.toString,
-        "numRemovedFiles" -> fullRemoves.size.toString,
-        "numDeletionVectorsAdded" -> readds.size.toString,
-        "numAddedFiles" -> newAdds.size.toString),
+        "numRemovedFiles" -> removedFiles.toString) ++
+        (if (dv) Map("numDeletionVectorsAdded" -> readds.size.toString) else Map.empty) +
+        ("numAddedFiles" -> adds.size.toString),
       readVersion = Some(v - 1),
       isBlindAppend = Some(false)): Action) +: {
-      // row tracking: UPDATE's appended rows get fresh ids; the DV
-      // re-adds keep theirs (same file, same rows — the DV flavor is
-      // exactly the DML shape under which row ids are stable)
+      // row tracking: new files get fresh ids; the DV re-adds keep theirs
+      // (same file, same rows — the DV flavor is the stable-id path)
       val (rtAdds, rtDomain) = RowTracking.assign(RowTracking.enabled(snap),
-        RowTracking.highWaterMark(snap), newAdds, v)
-      // removes BEFORE the re-adds: replay is sequential, and the re-add
+        RowTracking.highWaterMark(snap), adds, v)
+      // removes BEFORE the DV re-adds: replay is sequential, and a re-add
       // must end the commit active (it also clears the tombstone)
-      protocolUpgrade.toSeq ++ rtDomain ++ cdcActions ++ removes ++ readds ++ rtAdds
+      protocolUpgrade.toSeq ++ rtDomain ++ cdcActions ++
+        (if (dv) removes ++ readds ++ rtAdds else rtAdds ++ removes)
     }
 
-    val dvFile = descriptors.values.headOption.map(d =>
-      DeletionVectors.dvFileName(DeletionVectors.uuidOfDescriptor(d)))
-    log.optimisticCommit(Some(snap), mkActions, addMatcher(snap, filters),
-      staged = newAdds.map(_.path) ++ cdcActions.map(_.path) ++ dvFile, checkpointInterval)
+    // a concurrent add conflicts iff this operation would have read it
+    log.optimisticCommit(Some(snap), mkActions,
+      StatsPruning.fileTest(snap, filters, StatsPruning.May),
+      staged = adds.map(_.path) ++ cdcActions.map(_.path) ++ dvFile, checkpointInterval)
     // DML rewrites produce files too — a delta.autoOptimize.autoCompact
     // table compacts after DML exactly like after appends (delta-spark
     // behavior); a separate dataChange=false commit, inert without the
     // property
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
-    DmlResult(affected, fullRemoves.size, 0, readds.size + newAdds.size)
+    DmlResult(affected, removedFiles, rewrittenFiles, readds.size + adds.size)
   }
 
   /** UPDATE table SET <assignments> WHERE <filters>. Each assignment's
@@ -322,176 +353,7 @@ object DeltaDml {
       assignments: Map[String, Column],
       checkpointInterval: Int = 10): DmlResult = {
     require(assignments.nonEmpty, "UPDATE requires at least one assignment")
-    mutate(spark, path, filters, assignments, checkpointInterval)
-  }
-
-  private def mutate(
-      spark: SparkSession,
-      path: String,
-      filters: Seq[Seq[Predicate]],
-      assignments: Map[String, Column],
-      checkpointInterval: Int,
-      condOverride: Option[Column] = None): DmlResult = {
-    require(condOverride.isDefined || (filters.nonEmpty && filters.forall(_.nonEmpty)),
-      "DML requires a non-empty predicate (refusing an implicit full-table operation)")
-    val isDelete = assignments.isEmpty
-    val log = DeltaLog.forTable(spark, path)
-    val snap = log.snapshot(None)
-    DeltaWrite.requireWriterSupported(snap)
-    DeltaWrite.requireNotAppendOnly(snap, if (isDelete) "DELETE" else "UPDATE")
-    requireSettable(snap, assignments.keys)
-
-    val partCols = snap.partitionColumns.toSet
-    val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
-
-    // ---- phase 0: metadata-only pruning ---------------------------------
-    // condOverride (non-DNF WHERE fallback): no log pruning — every
-    // active file is a candidate and the condition filters scan-side
-    val candidates =
-      if (condOverride.isDefined) snap.activeFiles
-      else DeltaRead.prunedFiles(snap, filters)
-    if (candidates.isEmpty) return DmlResult(0, 0, 0, 0)
-
-    // Files whose partition values satisfy a whole OR-branch of
-    // partition-only conjuncts match on EVERY row — a delete removes them
-    // without ever reading them (the partition-drop fast path).
-    // partitionValues are physical-keyed under column mapping
-    val physOf = snap.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    def partitionFullMatch(f: AddFile): Boolean =
-      filters.exists { conj =>
-        conj.forall(p => partCols.contains(p.column) &&
-          DeltaRead.evalPredicate(
-            f.partitionValues.get(physOf.getOrElse(p.column, p.column)).flatMap(Option(_)),
-            fieldTypes.getOrElse(p.column, org.apache.spark.sql.types.StringType), p))
-      }
-    val (provenFull, toScan) =
-      if (isDelete && condOverride.isEmpty) candidates.partition(partitionFullMatch)
-      else (Seq.empty[AddFile], candidates)
-
-    // ---- phase 1: one scan for per-file matched-row counts --------------
-    val cond = condOverride.getOrElse(DeltaRead.dnfToColumn(filters))
-    val matchedByFile: Map[String, Long] =
-      if (toScan.isEmpty) Map.empty
-      else readFiles(spark, path, snap, toScan)
-        .filter(cond)
-        .groupBy(input_file_name().as("__f"))
-        .agg(count(lit(1)).as("__n"))
-        .collect()
-        .map(r => scanFileKey(r.getString(0)) -> r.getLong(1))
-        .toMap
-    def matchedOf(f: AddFile): Long =
-      matchedByFile.getOrElse(normalizePath(DeltaRead.resolvePath(path, f.path)), 0L)
-
-    def numRecords(f: AddFile): Option[Long] =
-      StatsPruning.parse(f.stats).flatMap(_.numRecords)
-
-    val touchedScanned = toScan.filter(matchedOf(_) > 0L)
-    // delete: fully-matched files (every row matches) need no rewrite
-    val (scannedFull, partial) =
-      if (isDelete) touchedScanned.partition(f => numRecords(f).contains(matchedOf(f)))
-      else (Seq.empty[AddFile], touchedScanned)
-    val fullRemoves = provenFull ++ scannedFull
-
-    if (fullRemoves.isEmpty && partial.isEmpty) return DmlResult(0, 0, 0, 0)
-
-    // Affected rows: counted for scanned files; proven-full files use
-    // stats.numRecords, falling back to a count-only scan of just those
-    // files (stats can be absent on foreign-written tables).
-    val provenRows: Long = {
-      val (withStats, statless) = provenFull.partition(f => numRecords(f).isDefined)
-      withStats.map(f => numRecords(f).get).sum +
-        (if (statless.isEmpty) 0L else readFiles(spark, path, snap, statless).count())
-    }
-    val affected = provenRows + touchedScanned.map(matchedOf).sum
-
-    // ---- phase 2: rewrite partially-matched files -----------------------
-    val version = snap.version + 1
-    // On CDF tables the partial files feed BOTH the rewrite staging and
-    // the cdc capture — persist the scan so they're read once, not twice
-    // (O(touched-file rows), spills rather than rescanning at scale).
-    val partialSrc: Option[DataFrame] =
-      if (partial.isEmpty) None
-      else {
-        val s = readFiles(spark, path, snap, partial)
-        Some(if (DeltaWrite.cdfEnabled(snap))
-          s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else s)
-      }
-    val adds: Seq[AddFile] =
-      if (partial.isEmpty) Nil
-      else {
-        val src = partialSrc.get
-        val matched = coalesce(cond, lit(false)) // NULL predicate = no match
-        val rewritten =
-          if (isDelete) src.filter(!matched)
-          else withAssignments(src, snap, assignments,
-            (c, e) => when(matched, e).otherwise(col(c)))
-        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(rewritten, snap.schema),
-          path, version, snap.metadata, DeltaWrite.DmlFiles,
-          DeltaWrite.checkConstraintsOf(snap.metadata))
-      }
-
-    // CDF: record exactly the matched rows (proven-full files are read
-    // HERE for the first time — change capture needs their content, the
-    // one case where a CDF delete costs more than a plain one)
-    val cdcActions: Seq[AddCDCFile] =
-      if (!DeltaWrite.cdfEnabled(snap)) Nil
-      else {
-        val ct = ChangeFeed.ChangeTypeCol
-        // partial files come from the persisted scan (filtered to the
-        // matched rows); fully-matched files are read here for the first
-        // time and need no filter — stats/counts proved every row matches
-        val fullRows =
-          if (fullRemoves.isEmpty) None
-          else Some(readFiles(spark, path, snap, fullRemoves))
-        val partRows = partialSrc.map(_.filter(coalesce(cond, lit(false))))
-        val matchedRows = (fullRows, partRows) match {
-          case (Some(a), Some(b)) => a.unionByName(b)
-          case (Some(a), None) => a
-          case (None, Some(b)) => b
-          case (None, None) =>
-            readFiles(spark, path, snap, Nil).filter(lit(false))
-        }
-        val changes =
-          if (isDelete) matchedRows.withColumn(ct, lit("delete"))
-          else matchedRows.withColumn(ct, lit("update_preimage")).unionByName(
-            withAssignments(matchedRows, snap, assignments)
-              .withColumn(ct, lit("update_postimage")))
-        // postimages re-derive generated columns exactly like the rewrite
-        DeltaWrite.stageFiles(DeltaWrite.withGeneratedRecomputed(changes, snap.schema),
-          path, version, snap.metadata, DeltaWrite.CdcFiles)
-      }
-    if (DeltaWrite.cdfEnabled(snap))
-      partialSrc.foreach(_.unpersist(blocking = false))
-
-    // ---- commit ---------------------------------------------------------
-    val now = Instant.now().toEpochMilli
-    val removes = (fullRemoves ++ partial).map(_.remove(now))
-    val op = if (isDelete) "DELETE" else "UPDATE"
-    def mkActions(v: Long): Seq[Action] = CommitInfo(
-      timestamp = now,
-      operation = op,
-      operationParameters = Map("predicate" -> condOverride.map(_.toString)
-        .getOrElse(filters.map(_.map(p =>
-          s"${p.column} ${p.op} ${p.value}").mkString("(", " AND ", ")")).mkString(" OR "))),
-      operationMetrics = Map(
-        (if (isDelete) "numDeletedRows" else "numUpdatedRows") -> affected.toString,
-        "numRemovedFiles" -> removes.size.toString,
-        "numAddedFiles" -> adds.size.toString),
-      readVersion = Some(v - 1),
-      isBlindAppend = Some(false)) +: {
-      // rewrite-flavor DML re-homes surviving rows into new files — they
-      // get FRESH row ids (no materialized-column preservation; the DV
-      // flavor is the stable-id path)
-      val (rtAdds, rtDomain) = RowTracking.assign(RowTracking.enabled(snap),
-        RowTracking.highWaterMark(snap), adds, v)
-      rtDomain ++ cdcActions ++ rtAdds ++ removes
-    }
-
-    log.optimisticCommit(Some(snap), mkActions, addMatcher(snap, filters),
-      staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval)
-    DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
-    DmlResult(affected, removes.size, partial.size, adds.size)
+    mutate(spark, path, filters, assignments, checkpointInterval, dv = false)
   }
 
   // ---- MERGE ------------------------------------------------------------
@@ -1036,9 +898,8 @@ object DeltaDml {
     // absent on foreign-written files). Live rows only: a rewritten file's
     // DV-deleted rows are in its numRecords but were never carried over.
     def rowsOf(fl: Seq[AddFile]): Option[Long] = {
-      val counts = fl.map(f => StatsPruning.parse(f.stats).flatMap(_.numRecords))
-      if (counts.forall(_.isDefined)) Some(counts.flatten.sum - fl.map(_.dvCardinality).sum)
-      else None
+      val counts = fl.map(StatsPruning.liveRows)
+      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
     }
     // stats arithmetic needs the exact deleted-row count; it is knowable
     // without a job only when deletion is all-or-nothing of the matched
@@ -1116,17 +977,15 @@ object DeltaDml {
         rtDomain ++ cdcActions ++ rtAdds ++ removes
     }
 
-    // phantom check for merge: a concurrent add conflicts iff it may
-    // hold keys inside the source's key span (keyRanges) — the same
-    // range the target pruning used. An all-null-key source (empty
-    // keyRanges) equality-matches nothing, so no add conflicts.
-    // by-source clauses read EVERY unmatched target row, so any
-    // concurrently added file is a phantom; otherwise only adds that may
-    // hold keys inside the source's span conflict
+    // phantom check for merge: by-source clauses read EVERY unmatched
+    // target row, so any concurrently added file is a phantom; otherwise
+    // a concurrent add conflicts iff the target pruning would have read
+    // it for the source's key span (keyRanges). An all-null-key source
+    // (empty keyRanges) equality-matches nothing, so no add conflicts.
     val mergeAddMatcher: AddFile => Boolean =
       if (bySource.nonEmpty) _ => true
       else if (keyRanges.isEmpty) _ => false
-      else addMatcher(snap, keyRanges)
+      else StatsPruning.fileTest(snap, keyRanges, StatsPruning.May)
     log.optimisticCommit(Some(snap), mkActions, mergeAddMatcher,
       staged = adds.map(_.path) ++ cdcActions.map(_.path), checkpointInterval)
     DeltaWrite.autoCompactIfNeeded(spark, path, snap.metadata.configuration)
@@ -1166,31 +1025,9 @@ object DeltaDml {
     }.select(snap.schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** File-level "may this add contain predicate-matching rows?" check —
-    * the same partition-exact + stats-range test prunedFiles applies,
-    * evaluated on a single foreign add. Conservative: missing stats or
-    * untranslatable predicates conflict. */
-  private[delta] def addMatcher(snap: Snapshot, filters: Seq[Seq[Predicate]]): AddFile => Boolean = {
-    if (filters.isEmpty) return _ => true
-    val partCols = snap.partitionColumns.toSet
-    val fieldTypes: Map[String, org.apache.spark.sql.types.DataType] =
-      snap.schema.fields.map(f => f.name -> f.dataType).toMap
-    f => {
-      lazy val stats = StatsPruning.parse(f.stats)
-      filters.exists { conj =>
-        conj.forall { p =>
-          if (partCols.contains(p.column))
-            DeltaRead.evalPredicate(f.partitionValues.get(p.column).flatMap(Option(_)),
-              fieldTypes.getOrElse(p.column, org.apache.spark.sql.types.StringType), p)
-          else StatsPruning.mayMatch(stats, p)
-        }
-      }
-    }
-  }
-
   /** Per-file matched positions aggregated executor-side into serialized
     * Roaring bitmaps plus counts: (file_path, dv_blob, n). Exposed as a
-    * FRAME (collected by dvMutate) so specs can pin the plan shape — the
+    * FRAME (collected by the DV flavor of mutate) so specs can pin the plan shape — the
     * aggregate is a partial ObjectHashAggregate over
     * [[DeletionVectors.PositionBitmapAgg]]; no collect_list of positions
     * appears anywhere in the plan. Input must carry `_metadata`

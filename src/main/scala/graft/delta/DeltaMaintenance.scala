@@ -90,15 +90,12 @@ object DeltaMaintenance {
       require(bad.isEmpty,
         s"OPTIMIZE WHERE supports partition columns only; non-partition: ${bad.mkString(", ")}")
     }
-    val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
     val byPartition = snap.activeFiles.groupBy(_.partitionValues)
-    val inScope =
-      if (where.isEmpty) byPartition
-      else byPartition.filter { case (pv, _) =>
-        where.exists(_.forall(p => DeltaRead.evalPredicate(
-          pv.get(p.column).flatMap(Option(_)),
-          fieldTypes.getOrElse(p.column, org.apache.spark.sql.types.StringType), p)))
-      }
+    // a group's files share their partition values: one file answers
+    val inScope = {
+      val scoped = StatsPruning.fileTest(snap, where, StatsPruning.PartitionOnly)
+      byPartition.filter { case (_, fs) => scoped(fs.head) }
+    }
     // purge mode scopes the rewrite to DV-carrying files ONLY and drops
     // compact's small-file heuristics: a lone 1 GB file with a DV still
     // rewrites (that is the point), a DV-less partition never does.

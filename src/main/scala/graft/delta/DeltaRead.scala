@@ -419,34 +419,11 @@ object DeltaRead {
     }
   }
 
-  private[graft] def prunedFiles(snap: Snapshot, filters0: Seq[Seq[Predicate]]): Seq[AddFile] = {
-    if (filters0.isEmpty) return snap.activeFiles
-    // data-column predicates imply partition bounds through monotone
-    // generation expressions — augment each conjunction before pruning
-    val filters = filters0.map(c => c ++ derivedPartitionConjuncts(snap, c))
-    val partCols = snap.partitionColumns.toSet
-    val fieldTypes: Map[String, DataType] =
-      snap.schema.fields.map(f => f.name -> f.dataType).toMap
-    // under column mapping the log (partitionValues, stats JSON) is keyed
-    // by PHYSICAL names while predicates arrive logical — translate
-    val physOf: Map[String, String] =
-      if (mappingModeOf(snap) != "none")
-        snap.schema.fields.map(f => f.name -> physicalNameOf(f)).toMap
-      else Map.empty
-    def physName(c: String): String = physOf.getOrElse(c, c)
-    snap.activeFiles.filter { f =>
-      lazy val stats = StatsPruning.parse(f.stats)
-      filters.exists { conj =>
-        conj.forall { p =>
-          if (partCols.contains(p.column))
-            evalPredicate(f.partitionValues.get(physName(p.column)).flatMap(Option(_)),
-              fieldTypes.getOrElse(p.column, StringType), p)
-          else
-            StatsPruning.mayMatch(stats, p.copy(column = physName(p.column)))
-        }
-      }
-    }
-  }
+  /** The active files some row of which may satisfy `filters`, judged
+    * from the log alone ([[StatsPruning.fileTest]] at `May`). */
+  private[graft] def prunedFiles(snap: Snapshot, filters: Seq[Seq[Predicate]]): Seq[AddFile] =
+    if (filters.isEmpty) snap.activeFiles
+    else snap.activeFiles.filter(StatsPruning.fileTest(snap, filters, StatsPruning.May))
 
   private[delta] def evalPredicate(raw: Option[String], dt: DataType, p: Predicate): Boolean = {
     def castRaw(s: String): Any = dt match {

@@ -46,9 +46,7 @@ object DeltaTableOps {
 
     // stats are PHYSICAL-keyed under column mapping; the requested
     // columns arrive logical — translate for every stats lookup
-    val physOf = schema.fields
-      .map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    def physName(c: String): String = physOf.getOrElse(c, c)
+    def physName(c: String): String = DeltaRead.physicalNameOf(fieldOf(c))
     val parsed = snap.activeFiles.map(f => StatsPruning.parse(f.stats))
     // a deletion vector invalidates per-file min/max/null-counts for the
     // LIVE rows (the deleted row may have been the extreme) → scan
@@ -158,15 +156,8 @@ object DeltaTableOps {
     val pcols = snap.partitionColumns
     require(pcols.nonEmpty, s"table at $path is not partitioned")
     val typeOf = snap.schema.fields.map(f => f.name -> f.dataType).toMap
-    // partitionValues are PHYSICAL-keyed under column mapping — look up
-    // by physical name or a mapped table's partitions would all read null
-    val physOf = snap.schema.fields
-      .map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    // DV cardinality is exactly the file's deleted-row count, so live
-    // rows = numRecords − cardinality stays metadata-exact
-    val counts = snap.activeFiles.map(f =>
-      f.partitionValues ->
-        StatsPruning.parse(f.stats).flatMap(_.numRecords).map(_ - f.dvCardinality))
+    // live rows stay metadata-exact under deletion vectors
+    val counts = snap.activeFiles.map(f => f.partitionValues -> StatsPruning.liveRows(f))
     if (counts.forall(_._2.isDefined)) {
       val grouped = counts
         .groupBy(_._1)
@@ -175,9 +166,11 @@ object DeltaTableOps {
       val raw = StructType(
         pcols.map(c => StructField(c, StringType)) :+
           StructField("n_rows", LongType, nullable = false))
+      // partitionValues are PHYSICAL-keyed under column mapping — look up
+      // by physical name or a mapped table's partitions would all read null
       val rows = grouped.map { case (pv, n) =>
         Row.fromSeq(pcols.map(c =>
-          pv.get(physOf.getOrElse(c, c)).flatMap(Option(_)).orNull) :+ n)
+          pv.get(DeltaRead.physicalNameOf(snap.schema(c))).flatMap(Option(_)).orNull) :+ n)
       }
       import scala.jdk.CollectionConverters._
       val df = spark.createDataFrame(rows.asJava, raw)
@@ -208,38 +201,22 @@ object DeltaTableOps {
     * instead of O(matching) — the count is exact either way, the proof
     * obligations (no nulls, stats present, sound under foreign writers'
     * outward-truncated string stats) live in StatsPruning.mustMatch.
-    * Column-mapped tables take the scan path wholesale (their stats are
-    * keyed physically; correctness first). */
+    * Pruning and the proof are [[StatsPruning.fileTest]] at `May` and
+    * `Must`, which translate column-mapped names like every reader of
+    * the log. */
   def countWhere(
       spark: SparkSession, path: String, filters: Seq[Seq[Predicate]],
       version: Option[Long] = None): CountWhereResult = {
     require(filters.nonEmpty, "countWhere needs a predicate; use statsAggregate for totals")
     val log = DeltaLog.forTable(spark, path)
     val snap = log.snapshot(version)
-    val partCols = snap.partitionColumns.toSet
-    val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
-
     val may = DeltaRead.prunedFiles(snap, filters)
-    // partitionValues and stats are PHYSICAL-keyed under column mapping;
-    // predicates arrive logical — translate (the prunedFiles contract)
-    val physOf = snap.schema.fields
-      .map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    def physName(c: String): String = physOf.getOrElse(c, c)
+    val must = StatsPruning.fileTest(snap, filters, StatsPruning.Must)
     val (proven, boundary) =
-      may.partition { f =>
-        lazy val stats = StatsPruning.parse(f.stats)
-        stats.exists(_.numRecords.isDefined) && filters.exists(_.forall { p =>
-          if (partCols.contains(p.column))
-            DeltaRead.evalPredicate(
-              f.partitionValues.get(physName(p.column)).flatMap(Option(_)),
-              fieldTypes.getOrElse(p.column, StringType), p)
-          else StatsPruning.mustMatch(stats, p.copy(column = physName(p.column)))
-        })
-      }
+      may.partition(f => StatsPruning.liveRows(f).isDefined && must(f))
     // proven files with a DV: every LIVE row still matches (live ⊆ all,
-    // and stats proved all) — contribute numRecords − cardinality
-    val statsCount = proven
-      .map(f => StatsPruning.parse(f.stats).flatMap(_.numRecords).get - f.dvCardinality).sum
+    // and stats proved all) — contribute their live rows
+    val statsCount = proven.flatMap(StatsPruning.liveRows).sum
     val scanCount =
       if (boundary.isEmpty) 0L
       else DeltaRead.fromSnapshot(
@@ -1149,8 +1126,7 @@ object DeltaTableOps {
     if (snap.activeFiles.isEmpty) return TruncateResult(snap.version, 0L, 0L)
     val now = System.currentTimeMillis()
     val removes = snap.activeFiles.map(_.remove(now))
-    val statRows = snap.activeFiles.map(f =>
-      StatsPruning.parse(f.stats).flatMap(_.numRecords).map(_ - f.dvCardinality))
+    val statRows = snap.activeFiles.map(StatsPruning.liveRows)
     val removedRows: Long =
       if (statRows.forall(_.isDefined)) statRows.flatten.sum
       else DeltaRead.load(spark, path).count()

@@ -549,16 +549,8 @@ object DeltaWrite {
         // values fully satisfy some OR-branch (exact evaluation —
         // the predicate columns are all partition columns by the
         // guard in write())
-        val fieldTypes = existing.get.schema.fields
-          .map(f => f.name -> f.dataType).toMap
-        // partitionValues are physical-keyed under column mapping
-        val physOf = mapped
-          .map(_.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap)
-          .getOrElse(Map.empty[String, String])
-        existing.get.activeFiles.filter(f => replaceWhere.exists(_.forall(p =>
-          DeltaRead.evalPredicate(
-            f.partitionValues.get(physOf.getOrElse(p.column, p.column)).flatMap(Option(_)),
-            fieldTypes.getOrElse(p.column, org.apache.spark.sql.types.StringType), p))))
+        existing.get.activeFiles.filter(
+          StatsPruning.fileTest(existing.get, replaceWhere, StatsPruning.PartitionOnly))
       }
     val removes = replaced.map(_.remove(now))
 
@@ -584,7 +576,7 @@ object DeltaWrite {
       case _ => Nil
     }
 
-    val numRows = adds.flatMap(a => a.stats.flatMap(numRecordsOf)).sum
+    val numRows = adds.flatMap(StatsPruning.liveRows).sum
     val commitInfo = CommitInfo(
       timestamp = now,
       operation = if (isNew) "CREATE TABLE AS SELECT" else "WRITE",
@@ -1015,9 +1007,7 @@ object DeltaWrite {
     if (ics.isEmpty || adds.isEmpty) return None
     // stats (and on-disk column names) are PHYSICAL-keyed under column
     // mapping; the schema's field metadata carries the translation
-    val physOfIc: Map[String, String] =
-      schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
-    def pk(n: String): String = physOfIc.getOrElse(n, n)
+    def pk(n: String): String = DeltaRead.physicalNameOf(schema(n))
     val parsed = adds.map(a => StatsPruning.parse(a.stats))
     def observed(ic: IdentityCol): Option[Long] = {
       val nonEmpty = adds.zip(parsed)
@@ -1077,11 +1067,6 @@ object DeltaWrite {
     case "append" => "Append"
     case "overwrite" => "Overwrite"
     case other => other.capitalize
-  }
-
-  private def numRecordsOf(statsJson: String): Option[Long] = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(statsJson)
-    if (node.has("numRecords")) Some(node.get("numRecords").asLong()) else None
   }
 
   /** Append-side schema evolution: table schema ∪ incoming's new columns

@@ -1,6 +1,7 @@
 package graft.delta
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.types.StringType
 
 /** Data skipping from per-file column statistics: the read-side consumer
   * of the min/max/nullCount stats the writer harvests from parquet
@@ -133,6 +134,64 @@ object StatsPruning {
     else if (n.isTextual) Some(n.asText())
     else if (n.isBoolean) Some(n.asBoolean())
     else None
+
+  /** How much a file's log entry must prove about a DNF ([[fileTest]]). */
+  sealed trait Strength
+  /** Some row may match: scan pruning and the commit conflict check. */
+  case object May extends Strength
+  /** Every row matches, data conjuncts proven from stats: countWhere. */
+  case object Must extends Strength
+  /** Every row matches by partition values alone: the DML full-file
+    * proof, replaceWhere and OPTIMIZE WHERE. */
+  case object PartitionOnly extends Strength
+
+  /** What a file's log entry says about a DNF: true when some
+    * conjunction holds for the file at `strength`. Partition conjuncts
+    * evaluate exactly on the logged partition values (a null value
+    * satisfies nothing); data conjuncts go to [[mayMatch]] / [[mustMatch]]
+    * on the stats, and never hold under `PartitionOnly`. Under column
+    * mapping the log is keyed by physical names while predicates arrive
+    * logical, so names are translated here. `May` also applies the
+    * partition bounds that generated partition columns derive from data
+    * conjuncts. An empty DNF is no predicate: every file holds. */
+  private[delta] def fileTest(
+      snap: Snapshot, dnf: Seq[Seq[Predicate]], strength: Strength): AddFile => Boolean = {
+    if (dnf.isEmpty) return _ => true
+    val partCols = snap.partitionColumns.toSet
+    val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
+    val physOf: Map[String, String] =
+      if (DeltaRead.mappingModeOf(snap) == "none") Map.empty
+      else snap.schema.fields.map(f => f.name -> DeltaRead.physicalNameOf(f)).toMap
+    val conjs =
+      if (strength == May) dnf.map(c => c ++ DeltaRead.derivedPartitionConjuncts(snap, c))
+      else dnf
+    // each conjunct resolved once per call: on its physical name, with
+    // its column type when it is a partition column
+    val resolved = conjs.map(_.map { p =>
+      val partType =
+        if (partCols.contains(p.column)) Some(fieldTypes.getOrElse(p.column, StringType))
+        else None
+      (p.copy(column = physOf.getOrElse(p.column, p.column)), partType)
+    })
+    f => {
+      lazy val stats = parse(f.stats)
+      resolved.exists(_.forall {
+        case (p, Some(dt)) =>
+          DeltaRead.evalPredicate(f.partitionValues.get(p.column).flatMap(Option(_)), dt, p)
+        case (p, None) => strength match {
+          case May => mayMatch(stats, p)
+          case Must => mustMatch(stats, p)
+          case PartitionOnly => false
+        }
+      })
+    }
+  }
+
+  /** A file's live rows: its stats' numRecords minus its deletion
+    * vector's cardinality (DV positions are deleted rows of this file).
+    * None when the stats carry no numRecords. */
+  private[delta] def liveRows(f: AddFile): Option[Long] =
+    parse(f.stats).flatMap(_.numRecords).map(_ - f.dvCardinality)
 
   /** Could any row of a file with these stats satisfy the predicate?
     * `None` stats → always true (no pruning evidence). */

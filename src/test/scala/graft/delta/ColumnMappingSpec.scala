@@ -1,5 +1,6 @@
 package graft.delta
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,13 +22,7 @@ class ColumnMappingSpec extends GraftSuite {
     s"$d/tbl"
   }
 
-  private def mappedField(logical: String, physical: String, dt: DataType,
-      id: Long): StructField =
-    StructField(logical, dt, nullable = true,
-      new MetadataBuilder()
-        .putLong("delta.columnMapping.id", id)
-        .putString("delta.columnMapping.physicalName", physical)
-        .build())
+  import ColumnMappingSpec.mappedField
 
   /** Hand-craft an UNPARTITIONED mapped table: 2 data files with
     * physical names, one nested struct whose inner field is mapped too. */
@@ -66,35 +61,7 @@ class ColumnMappingSpec extends GraftSuite {
 
   /** Hand-craft a PARTITIONED mapped table: hive dirs + partitionValues
     * keyed by the PHYSICAL partition name, partitionColumns logical. */
-  private def stagePartitioned(): String = {
-    import spark.implicits._
-    val path = tmp()
-    def stagePart(lang: String, rows: Seq[(Long, String)]): AddFile = {
-      val dir = s"$path/col-p9=$lang"
-      rows.toDF("col-k1", "col-v2").coalesce(1).write
-        .mode("append").parquet(dir)
-      val f = new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      AddFile(path = s"col-p9=$lang/${f.getName}",
-        partitionValues = Map("col-p9" -> lang),
-        size = f.length(), modificationTime = f.lastModified(), dataChange = true)
-    }
-    val a1 = stagePart("en", Seq((1L, "x"), (2L, "y")))
-    val a2 = stagePart("de", Seq((3L, "z")))
-    val logical = StructType(Seq(
-      mappedField("key", "col-k1", LongType, 1),
-      mappedField("value", "col-v2", StringType, 2),
-      mappedField("lang", "col-p9", StringType, 3)))
-    DeltaLog.forTable(spark, path).writeCommit(0L, Seq(
-      CommitInfo(System.currentTimeMillis(), "CREATE"),
-      Protocol(2, 5),
-      MetadataAction(id = "cm-test-2", schemaString = logical.json,
-        partitionColumns = Seq("lang"),
-        configuration = Map("delta.columnMapping.mode" -> "name",
-          "delta.columnMapping.maxColumnId" -> "3")),
-      a1, a2))
-    path
-  }
+  private def stagePartitioned(): String = ColumnMappingSpec.stagePartitioned(spark, tmp())
 
   test("mapped read surfaces logical names and values, nested included") {
     val path = stageUnpartitioned()
@@ -264,6 +231,25 @@ class ColumnMappingSpec extends GraftSuite {
     val df = GraftDelta.readDelta(spark, path)
     assert(df.orderBy("key").select($"key", $"value", $"lang").as[(Long, String, String)]
       .collect().toSeq == Seq((1L, "x", "en"), (2L, "y", "en"), (3L, "z", "de"), (4L, "w", "en")))
+  }
+
+  test("OPTIMIZE WHERE on a mapped partition column compacts that partition only") {
+    import spark.implicits._
+    val path = stagePartitioned()
+    GraftDelta.toDelta(Seq((4L, "w", "en")).toDF("key", "value", "lang"), path,
+      mode = "append")
+    val log = DeltaLog.forTable(spark, path)
+    def files(lang: String): Seq[AddFile] =
+      log.snapshot(None).activeFiles.filter(_.partitionValues.get("col-p9").contains(lang))
+    val de = files("de")
+    assert(files("en").size == 2)
+    // partition values are logged under the physical name col-p9
+    assert(DeltaMaintenance.compact(spark, path,
+      where = Seq(Seq(Predicate("lang", "==", "en")))) == ((3, 2)))
+    assert(files("en").size == 1, files("en").map(_.path))
+    assert(files("de") == de, "the out-of-scope partition keeps its exact file")
+    assert(GraftDelta.readDelta(spark, path).orderBy("key").select($"key").as[Long]
+      .collect().toSeq == Seq(1L, 2L, 3L, 4L))
   }
 
   test("OPTIMIZE compacts id-mode tables; output readable by field id alone") {
@@ -557,5 +543,55 @@ class ColumnMappingSpec extends GraftSuite {
     GraftDelta.toDelta(Seq("x").toDF("v"), path, mode = "append")         // v4
     val ids2 = GraftDelta.readDelta(spark, path).select($"row_no").as[Long].collect()
     assert(ids2.length == 9 && ids2.distinct.length == 9, ids2.sorted.toSeq.toString)
+  }
+}
+
+object ColumnMappingSpec {
+
+  def mappedField(logical: String, physical: String, dt: DataType,
+      id: Long): StructField =
+    StructField(logical, dt, nullable = true,
+      new MetadataBuilder()
+        .putLong("delta.columnMapping.id", id)
+        .putString("delta.columnMapping.physicalName", physical)
+        .build())
+
+  /** Writes `rows` as one stats-less parquet file with physical column
+    * names into `lang`'s physical hive dir (which may already hold
+    * files) and returns its add, uncommitted. */
+  def stagePart(spark: SparkSession, path: String, lang: String,
+      rows: Seq[(Long, String)]): AddFile = {
+    import spark.implicits._
+    val tmpDir = Files.createTempDirectory("graft_cm_part")
+    rows.toDF("col-k1", "col-v2").coalesce(1).write.mode("overwrite").parquet(s"$tmpDir/p")
+    val written = new java.io.File(s"$tmpDir/p").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val dir = new java.io.File(s"$path/col-p9=$lang")
+    dir.mkdirs()
+    val f = new java.io.File(dir, written.getName)
+    Files.move(written.toPath, f.toPath)
+    AddFile(path = s"col-p9=$lang/${f.getName}",
+      partitionValues = Map("col-p9" -> lang),
+      size = f.length(), modificationTime = f.lastModified(), dataChange = true)
+  }
+
+  /** Hand-craft a name-mapped table partitioned by `lang` (physical
+    * `col-p9`) at `path`: en holds keys 1 and 2, de holds key 3. */
+  def stagePartitioned(spark: SparkSession, path: String): String = {
+    val a1 = stagePart(spark, path, "en", Seq((1L, "x"), (2L, "y")))
+    val a2 = stagePart(spark, path, "de", Seq((3L, "z")))
+    val logical = StructType(Seq(
+      mappedField("key", "col-k1", LongType, 1),
+      mappedField("value", "col-v2", StringType, 2),
+      mappedField("lang", "col-p9", StringType, 3)))
+    DeltaLog.forTable(spark, path).writeCommit(0L, Seq(
+      CommitInfo(System.currentTimeMillis(), "CREATE"),
+      Protocol(2, 5),
+      MetadataAction(id = "cm-test-2", schemaString = logical.json,
+        partitionColumns = Seq("lang"),
+        configuration = Map("delta.columnMapping.mode" -> "name",
+          "delta.columnMapping.maxColumnId" -> "3")),
+      a1, a2))
+    path
   }
 }

@@ -176,4 +176,33 @@ class DmlSpec extends GraftSuite {
     GraftDelta.vacuum(spark, path, retentionHours = -0.01, dryRun = false)
     assert(GraftDelta.readDelta(spark, path).count() == 150, "vacuum must not break the snapshot")
   }
+
+  /** The numDeletedRows the DELETE commit at `version` logged. */
+  private def loggedDeletedRows(path: String, version: Long): String =
+    DeltaLog.forTable(spark, path).readCommitActions(version).collectFirst {
+      case ci: CommitInfo => ci.operationMetrics("numDeletedRows")
+    }.get
+
+  test("rewrite DELETE of a whole partition counts its live rows, not its DV'd ones") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta((0 until 10).map(i => (i.toLong, 1)).toDF("id", "p").repartition(1),
+      path, partitionBy = Seq("p"))
+    GraftDelta.deleteWhereWithDv(spark, path, Seq(Seq(Predicate("id", "==", 3L))))
+    val res = GraftDelta.deleteWhere(spark, path, Seq(Seq(Predicate("p", "==", 1))))
+    assert(res == DeltaDml.DmlResult(9, 1, 0, 0))
+    assert(loggedDeletedRows(path, 2L) == "9")
+    assert(GraftDelta.readDelta(spark, path).count() == 0L)
+  }
+
+  test("rewrite DELETE matching every live row of a DV file removes it and adds none") {
+    import spark.implicits._
+    val path = tmp()
+    GraftDelta.toDelta((0 until 10).map(_.toLong).toDF("id").repartition(1), path)
+    GraftDelta.deleteWhereWithDv(spark, path, Seq(Seq(Predicate("id", "==", 3L))))
+    val res = GraftDelta.deleteWhere(spark, path, Seq(Seq(Predicate("id", "<=", 100L))))
+    assert(res == DeltaDml.DmlResult(9, 1, 0, 0))
+    assert(loggedDeletedRows(path, 2L) == "9")
+    assert(activePaths(path).isEmpty, "no 0-row file may stay active")
+  }
 }
